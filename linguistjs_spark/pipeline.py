@@ -29,9 +29,17 @@ Scale design notes (the judge-graded part):
     the UDF stage (north-rule requirement: crawl-order skew balancing).
   - No collect(), no driver-side loops; the only Python is the classify
     kernel's slow paths on shebang/modeline/heuristic-ext row subsets.
+  - The output ends in one observe() node, a pushdown fence: a downstream
+    filter("keep") reads the computed column instead of having every label
+    expression inlined into it, which also planned the perplexity/zlib UDF
+    stage twice (asserted in tests/test_plans.py). Column pruning still
+    passes it. Predicates meant for the scan go on `pages` before
+    run_pipeline (tests/test_plans.py::test_url_prefilter_pushdown).
 """
 
 from __future__ import annotations
+
+from uuid import uuid4
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -223,8 +231,11 @@ def run_pipeline(
     if cfg.normalize_unicode:
         from .operators.normalize import unicode_punct_norm_col
 
+        # dead rows keep their raw text: nothing downstream may see a NULL
+        # where the crawler delivered bytes
         df = df.withColumn(
-            "text", F.when(alive, unicode_punct_norm_col(text)))
+            "text",
+            F.when(alive, unicode_punct_norm_col(text)).otherwise(text))
 
     # A2 + graft features, all native, CASE-gated on liveness so dead rows
     # evaluate none of them (codegen branches are lazy per row)
@@ -372,8 +383,9 @@ def run_pipeline(
     if cfg.drop_mojibake:
         from .operators.normalize import bad_unicode_col
 
-        # text is NULL for dead rows, so the gate is inert there (the
-        # coalesce's earlier branches have already fired anyway)
+        # dead rows have already matched an earlier branch of the
+        # keep_reason coalesce, which stops there, so the gate never runs
+        # on them
         mj_reason = F.when(
             bad_unicode_col(text, cfg.max_bad_unicode_bp),
             F.lit("bad-unicode"),
@@ -443,7 +455,7 @@ def run_pipeline(
     # classification columns are NULL for rows that never reached the
     # cascade's output (parity with the previous union's missing-column
     # semantics: dropped rows expose only url/warc_ts/path/keep/keep_reason)
-    return df.select(
+    df = df.select(
         "url", "warc_ts", "path", "keep", "keep_reason",
         F.when(alive, F.col("lang")).alias("lang"),
         F.when(alive, F.col("alternatives")).alias("alternatives"),
@@ -451,3 +463,7 @@ def run_pipeline(
         F.when(alive, F.col("from_shebang")).alias("from_shebang"),
         "bytes", "lines", "quality", "ppl", "nl_lang", "scrubbed_text",
     )
+    # pushdown fence (module docstring); the name is unique per call because
+    # one plan may join two pipeline outputs, and Spark rejects two
+    # different observations under one name
+    return df.observe(f"labels_{uuid4().hex}", F.count(F.lit(1)).alias("rows"))

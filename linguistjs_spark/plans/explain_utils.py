@@ -34,6 +34,15 @@ def pushed_filters(plan: str) -> list[str]:
     ]
 
 
+def filter_conditions(plan: str) -> list[str]:
+    """Condition of every Filter node in a formatted plan."""
+    return [
+        line.split("Condition :", 1)[1].strip()
+        for line in plan.splitlines()
+        if line.startswith("Condition :")
+    ]
+
+
 def count_nodes(plan: str, name: str) -> int:
     """Number of physical operators named `name` in a formatted plan.
 

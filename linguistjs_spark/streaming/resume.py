@@ -24,6 +24,7 @@ from __future__ import annotations
 import hashlib
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,10 +45,19 @@ def input_snapshot_id(df: DataFrame) -> str:
 
 
 def completed_buckets(spark: SparkSession, lineage_dir: str, snapshot: str) -> set[int]:
+    """Buckets the lineage records as done for ``snapshot``.
+
+    A missing ``lineage_dir``, or one holding no committed file yet (a
+    failed first lineage append leaves the bare directory), means nothing
+    is done. Any other read failure (a corrupt file, a drifted schema)
+    raises: answering "nothing done" would silently reprocess the whole
+    input."""
     try:
         lin = spark.read.parquet(lineage_dir)
-    except Exception:
-        return set()
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return set()
+        raise
     rows = (
         lin.filter((F.col("status") == "ok") & (F.col("input_snapshot") == snapshot))
         .select("bucket")

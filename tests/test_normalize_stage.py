@@ -3,6 +3,9 @@
 attribution, scrubbed-text canonicalization, and default invisibility."""
 
 import datetime as dt
+from dataclasses import replace
+
+from pyspark.sql import functions as F
 
 from linguistjs_spark.config import QualityFilterConfig
 from linguistjs_spark.pipeline import run_pipeline
@@ -74,3 +77,26 @@ def test_compression_gate_drops_repetitive(spark):
     rep = out["https://a.example/d1.txt"]
     assert rep.keep is False
     assert rep.keep_reason == "compression-repetitive"
+
+
+def test_normalize_unicode_leaves_dead_row_labels_alone(spark):
+    """Rows dropped before the quality stages (path filters, binary sniff,
+    category) get the same labels with normalization on and off."""
+    from linguistjs_spark.sources.pages import pages_df
+
+    pages = pages_df(spark, n_bulk=40)
+    base = QualityFilterConfig(categories=("programming",), drop_mojibake=True)
+    path_reasons = {"ignored", "vendored", "documentation", "generated",
+                    "binary-ext"}
+    dead = path_reasons | {"binary-content", "category"}
+
+    def dead_rows(cfg):
+        return sorted(tuple(r) for r in run_pipeline(spark, pages, cfg)
+                      .filter(F.col("keep_reason").isin(*dead)).collect())
+
+    off = dead_rows(base)
+    on = dead_rows(replace(base, normalize_unicode=True))
+    reasons = {r[4] for r in off}
+    assert {"binary-content", "category"} <= reasons, reasons
+    assert reasons & path_reasons, reasons
+    assert on == off

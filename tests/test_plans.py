@@ -1,13 +1,20 @@
 """Physical-plan shape assertions: the scale story must be visible in
 explain() output, not just asserted in prose (SURVEY.md §4)."""
 
+import datetime as dt
+import random
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from linguistjs_spark.config import QualityFilterConfig
+from linguistjs_spark.operators.extract import synth_html
+from linguistjs_spark.operators.rollup import language_rollup
 from linguistjs_spark.pipeline import run_pipeline
 from linguistjs_spark.plans.explain_utils import (
     count_nodes,
+    filter_conditions,
     formatted_plan,
     has_wholestage_codegen,
     pushed_filters,
@@ -81,8 +88,6 @@ def test_classify_udf_sees_only_path_and_text(spark, pages_parquet):
 def test_single_shuffle_for_rollup(spark, pages_parquet):
     """language_rollup over labels adds exactly one exchange beyond the
     pipeline itself (the groupBy) — partial aggregation handles the rest."""
-    from linguistjs_spark.operators.rollup import language_rollup
-
     pages = spark.read.parquet(pages_parquet)
     labels = run_pipeline(spark, pages, QualityFilterConfig())
     base_plan = formatted_plan(labels)
@@ -139,3 +144,93 @@ def test_training_mix_plan_shape(spark):
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan, plan
     assert plan.count("Window") >= 1, plan
+
+
+# The crawl-to-corpus label config: HTML extraction, the unicode/mojibake and
+# compression gates, perplexity and the Gopher rules.
+CORPUS_CFG = QualityFilterConfig(
+    extract_html=True, normalize_unicode=True, drop_mojibake=True,
+    compression_gate=True, compute_perplexity=True,
+    max_top_bigram_ratio=0.18, min_stopword_hits=2)
+
+_SENTENCES = [
+    "the committee published its annual report on the regional water supply",
+    "many of the older residents remember when the river was still clean",
+    "she said that the new bridge would open to traffic in early spring",
+    "engineers found that the northern tunnel needs more work than planned",
+    "a small museum in the old town shows tools from the last century",
+    "the library is open every day except for the national holidays",
+    "local farmers have started to grow beans and barley on the hill",
+    "the school board voted to extend the summer reading program again",
+]
+
+
+@pytest.fixture(scope="module")
+def corpus_pages(spark, pages_parquet):
+    """The fixture pages plus HTML-only prose pages (text NULL), so a
+    corpus-style run both keeps and drops rows."""
+    rng = random.Random(7)
+    ts = dt.datetime(2026, 1, 1)
+    prose = []
+    for i in range(12):
+        body = "\n".join(". ".join(rng.sample(_SENTENCES, 4)) + "."
+                         for _ in range(3))
+        prose.append((f"https://news.example/{i}/story.html", ts,
+                      bytearray(synth_html(i, body).encode()), None, None))
+    extra = spark.createDataFrame(
+        prose, "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+    return spark.read.parquet(pages_parquet).unionByName(extra)
+
+
+def test_keep_filter_reads_computed_labels(spark, corpus_pages):
+    """A `keep` filter on the pipeline output must not be pushed below it:
+    pushdown would inline every label expression into the Filter and plan a
+    second perplexity/zlib ArrowEvalPython stage above it."""
+    labels = run_pipeline(spark, corpus_pages, CORPUS_CFG)
+    n_udf = count_nodes(formatted_plan(labels), "ArrowEvalPython")
+    assert n_udf == 2, formatted_plan(labels)
+
+    kept = labels.filter("keep").select("url", "scrubbed_text")
+    plan = formatted_plan(kept)
+    assert count_nodes(plan, "ArrowEvalPython") == n_udf, plan
+    conds = filter_conditions(plan)
+    assert len(conds) == 1 and re.fullmatch(r"keep#\d+", conds[0]), conds
+
+    roll_plan = formatted_plan(language_rollup(labels))
+    assert count_nodes(roll_plan, "ArrowEvalPython") == n_udf, roll_plan
+    conds = filter_conditions(roll_plan)
+    assert len(conds) == 1, conds
+    assert set(re.findall(r"(\w+)#\d+", conds[0])) == {"keep", "lang"}, conds
+
+
+def test_keep_filter_matches_unfiltered_labels(spark, corpus_pages):
+    labels = run_pipeline(spark, corpus_pages, CORPUS_CFG)
+    all_rows = labels.select("url", "keep", "scrubbed_text").collect()
+    want = sorted((r.url, r.scrubbed_text) for r in all_rows if r.keep)
+    got = sorted(
+        (r.url, r.scrubbed_text)
+        for r in labels.filter("keep").select("url", "scrubbed_text").collect()
+    )
+    assert want and len(want) < len(all_rows)  # the fixture keeps and drops
+    assert got == want
+
+
+def test_pipeline_outputs_compose(spark, pages_parquet):
+    """Self-joins, self-unions and joins of two separate pipeline outputs
+    analyse and run: each run_pipeline call names its observed metrics
+    uniquely, and a repeated reference to one output is the same node."""
+    pages = spark.read.parquet(pages_parquet)
+    labels = run_pipeline(spark, pages, QualityFilterConfig())
+    n = pages.count()
+
+    self_join = labels.alias("a").join(labels.alias("b"), "url")
+    assert self_join.count() == n
+    assert labels.union(labels).count() == 2 * n
+
+    other = run_pipeline(
+        spark, pages, QualityFilterConfig(quality_rules=False)
+    ).select("url", F.col("keep").alias("keep_no_quality"))
+    joined = labels.join(other, "url")
+    assert joined.count() == n
+    assert joined.filter(F.col("keep") & ~F.col("keep_no_quality")).count() == 0

@@ -312,6 +312,34 @@ def test_resumable_run_idempotent(spark, tmp_path):
     assert r3["processed"] == [] and len(r3["skipped"]) == 4
 
 
+def test_resume_fails_loudly_on_unreadable_lineage(spark, tmp_path):
+    """A corrupt _lineage must stop the run, not read as "nothing done"
+    and silently reprocess every bucket; a missing or empty one is a fresh
+    start."""
+    import glob
+    import os
+
+    from linguistjs_spark.streaming.resume import completed_buckets, resumable_run
+    from linguistjs_spark.sources.pages import pages_df
+
+    out = str(tmp_path)
+    assert completed_buckets(spark, out + "/run/_lineage", "any") == set()
+    os.makedirs(out + "/empty/_lineage/_temporary")
+    assert completed_buckets(spark, out + "/empty/_lineage", "any") == set()
+    pages_df(spark, n_bulk=20).write.mode("overwrite").parquet(out + "/pages")
+    pg = spark.read.parquet(out + "/pages")
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        resumable_run(spark, pg, out + "/run", num_buckets=4, fail_after=2)
+    files = glob.glob(out + "/run/_lineage/*.parquet")
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        resumable_run(spark, pg, out + "/run", num_buckets=4)
+
+
 def test_ivf_topk_recall(spark, emb):
     import numpy as np
 
