@@ -3231,7 +3231,7 @@ def _url_tracking_oracle_sql() -> str:
         "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
         "url_raw, '^([^?]*)\\?', '\\1?&'), "
         f"'&({TRACKING_PARAM_PAT})=[^&#]*', '', 'g'), "
-        "'\\?&', '?', 'g'), '\\?$', '')"
+        "'^([^?]*)\\?&', '\\1?'), '\\?$', '')"
     )
     return f"""
     WITH m AS ({_MESSY_URL_SQL}),

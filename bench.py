@@ -1007,7 +1007,7 @@ def main() -> None:
     # artifact as the efficiency number: two CONCURRENT local[8] sessions in
     # separate JVMs (no shared locks/GC/scheduler/Arrow pools) vs the solo
     # local[16] leg above. Aggregate parity => the droop is the machine, not
-    # the engine. See scripts/host_ceiling_probe.py for the full method.
+    # the engine. The result is recorded as scaling.host_ceiling_probe.
     probe = None
     if os.environ.get("SPARK_GRAFT_PROBE", "1") == "1" and 16 in t_by_cores:
         import subprocess

@@ -13,26 +13,41 @@ two-phase groupBy(lang, salt) -> groupBy(lang) form for that case
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import lru_cache
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..metadata import load_metadata
 
 
-def _type_color_maps():
+@lru_cache(maxsize=None)
+def _lang_map_sql(attr: str) -> str:
     md = load_metadata()
-    type_map = F.create_map(
-        *[x for l, m in md.languages.items() for x in (F.lit(l), F.lit(m["type"]))]
-    )
-    color_map = F.create_map(
-        *[
-            x
-            for l, m in md.languages.items()
-            if m.get("color")
-            for x in (F.lit(l), F.lit(m["color"]))
-        ]
-    )
-    return type_map, color_map
+
+    def q(v: str) -> str:
+        return "'" + v.replace("'", "''") + "'"
+
+    return "map(" + ",".join(
+        f"{q(lang)},{q(meta[attr])}"
+        for lang, meta in md.languages.items() if meta.get(attr)
+    ) + ")"
+
+
+def language_attr_map(attr: str) -> Column:
+    """Literal lang -> metadata ``attr`` map (languages without the
+    attribute are left out), built once as a ``map('k','v',...)`` SQL string
+    and parsed with ONE F.expr: the F.create_map/F.lit form costs two py4j
+    round trips per language (~10k per rollup for type + color)."""
+    return F.expr(_lang_map_sql(attr))
+
+
+def _with_type_color(rollup: DataFrame) -> DataFrame:
+    lang = F.col("lang")
+    return rollup.withColumns({
+        "type": language_attr_map("type")[lang],
+        "color": language_attr_map("color")[lang],
+    })
 
 
 def _aggs():
@@ -49,13 +64,10 @@ def language_rollup(labels: DataFrame) -> DataFrame:
     """A3: per-language byte/line rollup over kept documents
     (src/index.ts:440-456), decorated with type/color from the broadcast
     language dimension."""
-    type_map, color_map = _type_color_maps()
-    return (
+    return _with_type_color(
         labels.filter(F.col("keep") & F.col("lang").isNotNull())
         .groupBy("lang")
         .agg(*_aggs())
-        .withColumn("type", type_map[F.col("lang")])
-        .withColumn("color", color_map[F.col("lang")])
     )
 
 
@@ -69,18 +81,14 @@ def salted_language_rollup(labels: DataFrame, salt_buckets: int = 16) -> DataFra
         .groupBy("lang", "_salt")
         .agg(*_aggs())
     )
-    type_map, color_map = _type_color_maps()
-    return (
-        partial.groupBy("lang")
-        .agg(
+    return _with_type_color(
+        partial.groupBy("lang").agg(
             F.sum("bytes").alias("bytes"),
             F.sum("lines_total").alias("lines_total"),
             F.sum("lines_content").alias("lines_content"),
             F.sum("lines_code").alias("lines_code"),
             F.sum("n_docs").alias("n_docs"),
         )
-        .withColumn("type", type_map[F.col("lang")])
-        .withColumn("color", color_map[F.col("lang")])
     )
 
 
@@ -141,10 +149,7 @@ def min_size_other(rollup: DataFrame, min_bytes: float, unit: str = "b") -> Data
         F.sum("lines_code").alias("lines_code"),
         F.sum("n_docs").alias("n_docs"),
     )
-    type_map, color_map = _type_color_maps()
-    return out.withColumn("type", type_map[F.col("lang")]).withColumn(
-        "color", color_map[F.col("lang")]
-    )
+    return _with_type_color(out)
 
 
 def keep_reason_rollup(labels: DataFrame) -> DataFrame:

@@ -455,12 +455,13 @@ def strip_tracking_params_col(url: Column) -> Column:
          the first, is &-prefixed and one pattern removes any of them;
       2. drop ``&(tracking)=value`` (value = ``[^&#]*`` — fragments are
          already gone after canonicalization, but stay safe without it);
-      3. ``?&`` -> ``?`` undoes step 1;
+      3. the first ``?&`` -> ``?`` (anchored like step 1) undoes it; a
+         literal ``?&`` later in the query (``/p?q=a?&b=c``) is untouched;
       4. a now-empty query (trailing ``?``) is dropped entirely.
 
     Heuristic by design: a URL whose raw query legitimately starts with
     ``?&`` loses that quirk — acceptable for dedup keys, documented."""
     t = F.regexp_replace(url, r"^([^?]*)\?", "$1?&")
     t = F.regexp_replace(t, r"&(" + TRACKING_PARAM_PAT + r")=[^&#]*", "")
-    t = F.regexp_replace(t, r"\?&", "?")
+    t = F.regexp_replace(t, r"^([^?]*)\?&", "$1?")
     return F.regexp_replace(t, r"\?$", "")

@@ -2,8 +2,10 @@
 
 One wide DataFrame pipeline over the pages table (SURVEY.md §7 design
 stance): all metadata broadcast/driver-compiled, native Column expressions
-everywhere except the single classify pandas-UDF kernel, one shuffle total
-(the optional explicit repartition + the final rollup).
+everywhere except the pandas-UDF kernels (classify, plus the optional
+perplexity, zlib and model-tier scorers), which all evaluate in ONE Arrow
+node; one shuffle total (the optional explicit repartition + the final
+rollup).
 
 Scale design notes (the judge-graded part):
   - SINGLE-PASS boolean column algebra, no filter+union branching: every
@@ -28,7 +30,17 @@ Scale design notes (the judge-graded part):
   - cfg.repartition_buckets > 0 inserts repartition(xxhash64(url)) before
     the UDF stage (north-rule requirement: crawl-order skew balancing).
   - No collect(), no driver-side loops; the only Python is the classify
-    kernel's slow paths on shebang/modeline/heuristic-ext row subsets.
+    kernel's slow paths on shebang/modeline/heuristic-ext row subsets and
+    the optional text scorers.
+  - Every scalar pandas UDF (classify, perplexity, zlib length, model
+    tier) is added in one projection, so ExtractPythonUDFs plans ONE
+    ArrowEvalPython node and each task runs one Python worker, not one per
+    UDF stage (tests/test_plans.py). The price: the text scorers read the
+    pre-classify liveness `_eligible`, so eligible rows that classify later
+    kills (binary sniff, restricted categories) are scored and then masked
+    to NULL. The optional fastText langid UDF is an iterator pandas UDF, a
+    different eval type that Spark cannot fuse into that node; it runs in
+    its own.
   - The output ends in one observe() node, a pushdown fence: a downstream
     filter("keep") reads the computed column instead of having every label
     expression inlined into it, which also planned the perplexity/zlib UDF
@@ -50,6 +62,7 @@ from .metadata import load_metadata
 from .operators.classify import content_needing_exts, make_classify_udf
 from .operators.path_filters import forced_lang_col, override_attr_col, with_filter_flags
 from .operators.quality import lines_struct, quality_drop_reason_col, quality_struct
+from .operators.rollup import language_attr_map
 from .operators.scrub import nl_lang_col, scrubbed_col, toxicity_hits_col
 from .oracle import OverrideRule, resolve_alias
 
@@ -67,6 +80,61 @@ def _collapse(md, cfg, lang: str | None) -> str | None:
     if not cfg.child_languages and md.languages.get(lang, {}).get("group"):
         return md.languages[lang]["group"]
     return lang
+
+
+def _ppl_udf(cfg):
+    """Perplexity pandas UDF (text -> double); the caller masks dead rows
+    to NULL."""
+    from .perplexity import try_import_kenlm
+
+    # Real-model hook: a KenLM binary (kenlm package) or a text ARPA
+    # file (built-in arpa_lm reader, KenLM-identical scoring). Loaded
+    # ONCE at plan-build time on the driver; the parsed model rides the
+    # UDF closure to executors (small-model stance — multi-GB binaries
+    # belong to the kenlm mmap path, see arpa_lm.ArpaModel docstring).
+    _ppl = try_import_kenlm(cfg.kenlm_model_path)
+
+    if _ppl is None:
+        # built-in char-bigram model: batch-vectorized scoring (one
+        # table gather per Arrow batch; float-exact vs the row twin —
+        # VERDICT r04 item 5 closed the Series.map surface)
+        from .perplexity import _logp, perplexity_batch_with_table
+
+        _table = _logp()
+
+        @F.pandas_udf("double")
+        def ppl_udf(s: pd.Series) -> pd.Series:
+            return perplexity_batch_with_table(_table, s)
+    else:
+        # external model (kenlm binary / ARPA): the scorer is an opaque
+        # callable — per-doc call is the contract; the model itself does
+        # the heavy lifting in C (kenlm) or numpy (arpa_lm)
+        @F.pandas_udf("double")
+        def ppl_udf(s: pd.Series) -> pd.Series:
+            return s.map(_ppl)
+
+    return ppl_udf
+
+
+def _mq_udf(cfg):
+    """Model-scored quality tier (supervised fastText .bin) as a pandas UDF
+    (text -> margin): vectorized batch kernel (split/merge/groupby all
+    pandas C paths), bit-equal to model_filter's broadcast-join formulation
+    — the join shape suits the standalone operator/CLI gate; inside this
+    pipeline a per-row column keeps the label projection shuffle-free."""
+    from .fasttext_bin import load_model as _ft_load
+    from .operators.model_filter import (
+        margin_batch, require_two_labels, word_logit_rows)
+
+    _mq_model = _ft_load(cfg.model_quality_path)
+    require_two_labels(_mq_model)  # fail at plan build, not in tasks
+    _mq_rows = word_logit_rows(_mq_model)
+
+    @F.pandas_udf("double")
+    def mq_udf(s: pd.Series) -> pd.Series:
+        return margin_batch(_mq_rows, s)
+
+    return mq_udf
 
 
 def run_pipeline(
@@ -166,12 +234,33 @@ def run_pipeline(
                 F.lower(F.col("path")), r"(?<=[^/])(\.[^./]+)$", 1
             )
             needs_text = needs_text | ext_col.isin(hexts)
-    df = df.withColumn(
-        "cls",
-        classify_udf(
+    # ONE projection for every scalar pandas UDF (module docstring): the
+    # text scorers cannot read anything classify decides, so they take
+    # `text`, already NULL for ineligible rows, and are masked with `_alive`
+    # below. With normalize_unicode they read the normalized text alive rows
+    # see downstream, and the `text` rewrite below reuses that column.
+    # Classify reads the raw, gated text: language labels come from the
+    # bytes the crawler delivered.
+    udf_text = F.col("text")
+    if cfg.normalize_unicode:
+        from .operators.normalize import unicode_punct_norm_col
+
+        df = df.withColumn("_norm", unicode_punct_norm_col(udf_text))
+        udf_text = F.col("_norm")
+    udfs = {
+        "cls": classify_udf(
             F.when(F.col("_eligible"), p), F.when(needs_text, F.col("text"))
         ),
-    )
+    }
+    if cfg.compute_perplexity:
+        udfs["_ppl"] = _ppl_udf(cfg)(udf_text)
+    if cfg.compression_gate:
+        from .operators.text_stats import zlib_len_col
+
+        udfs["_zlen"] = zlib_len_col(udf_text)
+    if cfg.model_quality_path:
+        udfs["_mq"] = _mq_udf(cfg)(udf_text)
+    df = df.withColumns(udfs)
     df = (
         df.withColumn("lang", F.coalesce(F.col("forced_lang"), F.col("cls.lang")))
         .withColumn(
@@ -191,16 +280,9 @@ def run_pipeline(
     df = df.withColumn("_sniffed", F.col("_is_bin") & ~F.col("definite"))
 
     # F5 category filter (src/index.ts:376-402) — broadcast-free: the lang
-    # -> type map folds into a literal CASE map, staying in codegen
+    # -> type map is one literal map, staying in codegen
     if len(cfg.categories) < 4:
-        type_map = F.create_map(
-            *[
-                x
-                for lang, meta in md.languages.items()
-                for x in (F.lit(lang), F.lit(meta["type"]))
-            ]
-        )
-        ltype = type_map[F.col("lang")]
+        ltype = language_attr_map("type")[F.col("lang")]
         detectable = override_attr_col(p, overrides, "detectable").eqNullSafe(
             F.lit(True)
         ) if cfg.check_detected else F.lit(False)
@@ -224,18 +306,14 @@ def run_pipeline(
     text = F.col("text")
 
     # Optional unicode punctuation canonicalization BEFORE any downstream
-    # read of text (quality/langid/ppl/scrub all see the canonical form;
-    # `bytes` then measures what the corpus would actually store). The
-    # classify UDF above already consumed the raw text — language labels
-    # must come from the bytes the crawler delivered.
+    # read of text (quality/langid/scrub all see the canonical form, as the
+    # UDFs above did; `bytes` then measures what the corpus would actually
+    # store).
     if cfg.normalize_unicode:
-        from .operators.normalize import unicode_punct_norm_col
-
         # dead rows keep their raw text: nothing downstream may see a NULL
         # where the crawler delivered bytes
         df = df.withColumn(
-            "text",
-            F.when(alive, unicode_punct_norm_col(text)).otherwise(text))
+            "text", F.when(alive, F.col("_norm")).otherwise(text))
 
     # A2 + graft features, all native, CASE-gated on liveness so dead rows
     # evaluate none of them (codegen branches are lazy per row)
@@ -284,63 +362,13 @@ def run_pipeline(
         nl = F.lit(None).cast("string")
     df = df.withColumn("nl_lang", F.when(alive, nl))
 
-    # optional KenLM-style perplexity stage (the one extra pandas UDF);
-    # dead rows ship a NULL slot (kernel returns 0.0, masked back to NULL)
+    # the fused UDF node scored every eligible row; dead ones read NULL
     if cfg.compute_perplexity:
-        from .perplexity import try_import_kenlm
-
-        # Real-model hook: a KenLM binary (kenlm package) or a text ARPA
-        # file (built-in arpa_lm reader, KenLM-identical scoring). Loaded
-        # ONCE at plan-build time on the driver; the parsed model rides the
-        # UDF closure to executors (small-model stance — multi-GB binaries
-        # belong to the kenlm mmap path, see arpa_lm.ArpaModel docstring).
-        _ppl = try_import_kenlm(cfg.kenlm_model_path)
-
-        if _ppl is None:
-            # built-in char-bigram model: batch-vectorized scoring (one
-            # table gather per Arrow batch; float-exact vs the row twin —
-            # VERDICT r04 item 5 closed the Series.map surface)
-            from .perplexity import _logp, perplexity_batch_with_table
-
-            _table = _logp()
-
-            @F.pandas_udf("double")
-            def ppl_udf(s: pd.Series) -> pd.Series:
-                return perplexity_batch_with_table(_table, s)
-        else:
-            # external model (kenlm binary / ARPA): the scorer is an opaque
-            # callable — per-doc call is the contract; the model itself does
-            # the heavy lifting in C (kenlm) or numpy (arpa_lm)
-            @F.pandas_udf("double")
-            def ppl_udf(s: pd.Series) -> pd.Series:
-                return s.map(_ppl)
-
-        df = df.withColumn("ppl", F.when(alive, ppl_udf(F.when(alive, text))))
+        df = df.withColumn("ppl", F.when(alive, F.col("_ppl")))
     else:
         df = df.withColumn("ppl", F.lit(None).cast("double"))
-
-    # optional model-scored quality tier (supervised fastText .bin): a
-    # second pandas-UDF slot, vectorized batch kernel (split/merge/groupby
-    # all pandas C paths), bit-equal to model_filter's broadcast-join
-    # formulation — the join shape suits the standalone operator/CLI gate;
-    # inside this pipeline a per-row column keeps the label projection
-    # shuffle-free.
     if cfg.model_quality_path:
-        from .fasttext_bin import load_model as _ft_load
-        from .operators.model_filter import (
-            margin_batch, require_two_labels, word_logit_rows)
-
-        _mq_model = _ft_load(cfg.model_quality_path)
-        require_two_labels(_mq_model)  # fail at plan build, not in tasks
-        _mq_rows = word_logit_rows(_mq_model)
-
-        @F.pandas_udf("double")
-        def mq_udf(s: pd.Series) -> pd.Series:
-            return margin_batch(_mq_rows, s)
-
-        df = df.withColumn(
-            "mq_margin", F.when(alive, mq_udf(F.when(alive, text)))
-        )
+        df = df.withColumn("mq_margin", F.when(alive, F.col("_mq")))
     else:
         df = df.withColumn("mq_margin", F.lit(None).cast("double"))
 
@@ -392,12 +420,8 @@ def run_pipeline(
         )
     comp_reason = F.lit(None).cast("string")
     if cfg.compression_gate:
-        from .operators.text_stats import zlib_len_col
-
         _raw_b = F.octet_length(text)
-        _ratio = (
-            zlib_len_col(F.when(alive, text)).cast("double") / _raw_b
-        )
+        _ratio = F.when(alive, F.col("_zlen")).cast("double") / _raw_b
         comp_reason = F.when(
             _raw_b > 0,
             F.when(_ratio < F.lit(cfg.min_comp_ratio),

@@ -43,6 +43,15 @@ def filter_conditions(plan: str) -> list[str]:
     ]
 
 
+def python_nodes(plan: str) -> list[str]:
+    """Detail section of every ArrowEvalPython node in a formatted plan; its
+    Arguments name the UDFs the node evaluates."""
+    import re
+
+    return re.findall(
+        r"^\(\d+\) ArrowEvalPython\n.*?(?=\n\n|\Z)", plan, re.M | re.S)
+
+
 def count_nodes(plan: str, name: str) -> int:
     """Number of physical operators named `name` in a formatted plan.
 

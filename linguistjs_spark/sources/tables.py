@@ -20,11 +20,15 @@ plain DataFrame and never assumes a file layout.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    """True iff an Iceberg Spark runtime is on the classpath."""
+    """True iff an Iceberg Spark runtime is on the classpath. Only a
+    ClassNotFoundException means "absent"; any other failure (a dead
+    gateway, a broken jar) raises instead of silently routing every table
+    to parquet."""
     try:
         # real class-load check: bare py4j attribute access returns a lazy
         # JavaPackage even for classes that don't exist
@@ -32,8 +36,11 @@ def iceberg_available(spark: SparkSession) -> bool:
             "org.apache.iceberg.spark.SparkCatalog"
         )
         return True
-    except Exception:
-        return False
+    except Py4JJavaError as e:
+        cls = e.java_exception.getClass().getName()
+        if cls == "java.lang.ClassNotFoundException":
+            return False
+        raise
 
 
 _FILE_EXTS = (".parquet", ".orc", ".avro", ".json", ".csv")

@@ -20,6 +20,7 @@ from linguistjs_spark.operators.model_filter import (
     word_logit_rows,
 )
 from linguistjs_spark.pipeline import run_pipeline
+from linguistjs_spark.plans.explain_utils import formatted_plan, python_nodes
 
 _TS = dt.datetime(2021, 6, 1)
 
@@ -106,14 +107,15 @@ def test_pipeline_model_tier_drop_oov(spark, pages, model_path):
 
 
 def test_tier_off_means_no_second_udf(spark, pages, model_path):
-    plan_off = run_pipeline(
-        spark, pages, QualityFilterConfig()
-    )._jdf.queryExecution().executedPlan().toString()
-    plan_on = run_pipeline(
-        spark, pages, QualityFilterConfig(model_quality_path=model_path)
-    )._jdf.queryExecution().executedPlan().toString()
-    assert plan_on.count("ArrowEvalPython") == \
-        plan_off.count("ArrowEvalPython") + 1
+    """The tier's UDF joins classify's single Arrow node when on, and is
+    absent from the plan when off."""
+    def nodes(cfg):
+        return python_nodes(formatted_plan(run_pipeline(spark, pages, cfg)))
+
+    off = nodes(QualityFilterConfig())
+    on = nodes(QualityFilterConfig(model_quality_path=model_path))
+    assert len(off) == len(on) == 1, (off, on)
+    assert "mq_udf(" in on[0] and "mq_udf(" not in off[0]
 
 
 def test_quality_rules_take_precedence(spark, model_path):

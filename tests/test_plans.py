@@ -4,7 +4,9 @@ explain() output, not just asserted in prose (SURVEY.md §4)."""
 import datetime as dt
 import random
 import re
+from dataclasses import replace
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,6 +20,7 @@ from linguistjs_spark.plans.explain_utils import (
     formatted_plan,
     has_wholestage_codegen,
     pushed_filters,
+    python_nodes,
     scan_read_schemas,
 )
 from linguistjs_spark.sources.pages import pages_df
@@ -189,7 +192,7 @@ def test_keep_filter_reads_computed_labels(spark, corpus_pages):
     second perplexity/zlib ArrowEvalPython stage above it."""
     labels = run_pipeline(spark, corpus_pages, CORPUS_CFG)
     n_udf = count_nodes(formatted_plan(labels), "ArrowEvalPython")
-    assert n_udf == 2, formatted_plan(labels)
+    assert n_udf == 1, formatted_plan(labels)
 
     kept = labels.filter("keep").select("url", "scrubbed_text")
     plan = formatted_plan(kept)
@@ -234,3 +237,85 @@ def test_pipeline_outputs_compose(spark, pages_parquet):
     joined = labels.join(other, "url")
     assert joined.count() == n
     assert joined.filter(F.col("keep") & ~F.col("keep_no_quality")).count() == 0
+
+
+PIPELINE_UDFS = ("classify_udf", "ppl_udf", "_zlen", "mq_udf")
+
+
+def assert_one_python_node(labels, udfs):
+    """labels, its `keep` filter and its language rollup each plan exactly
+    one ArrowEvalPython node, evaluating exactly the pipeline UDFs `udfs`."""
+    for df in (labels, labels.filter("keep"), language_rollup(labels)):
+        nodes = python_nodes(formatted_plan(df))
+        assert len(nodes) == 1, formatted_plan(df)
+        assert {u for u in PIPELINE_UDFS if u + "(" in nodes[0]} == udfs, nodes
+
+
+@pytest.mark.parametrize("cfg, udfs", [
+    (QualityFilterConfig(), {"classify_udf"}),
+    (CORPUS_CFG, {"classify_udf", "ppl_udf", "_zlen"}),
+    (replace(CORPUS_CFG, categories=("prose",)),
+     {"classify_udf", "ppl_udf", "_zlen"}),
+], ids=["labels", "corpus", "corpus_prose"])
+def test_one_python_node_per_pipeline(spark, corpus_pages, cfg, udfs):
+    """Every scalar pandas UDF the pipeline runs evaluates in ONE Arrow
+    node, so each task starts one Python worker: none of the text scorers
+    may read a classify-dependent input (which would chain a second node
+    above classify's)."""
+    assert_one_python_node(run_pipeline(spark, corpus_pages, cfg), udfs)
+
+
+def test_one_python_node_model_tier(spark, corpus_pages, tmp_path):
+    from linguistjs_spark.operators.model_filter import build_demo_quality_model
+
+    model = str(tmp_path / "demo.bin")
+    build_demo_quality_model(model)
+    cfg = replace(CORPUS_CFG, model_quality_path=model)
+    assert_one_python_node(run_pipeline(spark, corpus_pages, cfg),
+                           {"classify_udf", "ppl_udf", "_zlen", "mq_udf"})
+
+
+def test_fused_scorers_mask_dead_rows(spark):
+    """The text scorers run on every eligible row, before classify decides
+    liveness; rows that die afterwards (binary sniff, category) and rows
+    that never were eligible (path filters) read NULL ppl with the same
+    keep_reason as without the scorers, and alive rows' ppl is the kernel's
+    score of their NORMALIZED text."""
+    from linguistjs_spark.operators.normalize import unicode_punct_norm_col
+    from linguistjs_spark.perplexity import _logp, perplexity_batch_with_table
+
+    ts = dt.datetime(2026, 1, 1)
+    punct = [(f"https://code.example/p{i}.py", ts, None,
+              f"# \u201cquoted\u201d note {i}\u2026\nprint('x')\n", None)
+             for i in range(3)]
+    pages = pages_df(spark, n_bulk=40).unionByName(spark.createDataFrame(
+        punct, "url string, warc_ts timestamp, html binary, text string, "
+        "lang string"))
+    base = QualityFilterConfig(categories=("programming",),
+                               normalize_unicode=True)
+    cfg = replace(base, compute_perplexity=True, compression_gate=True)
+    plain = {r.url: r.keep_reason
+             for r in run_pipeline(spark, pages, base).collect()}
+    out = run_pipeline(spark, pages, cfg).select(
+        "url", "keep_reason", "lang", "ppl").collect()
+
+    path_reasons = {"ignored", "vendored", "documentation", "generated",
+                    "binary-ext"}
+    dead_reasons = path_reasons | {"binary-content", "category"}
+    dead = [r for r in out if r.keep_reason in dead_reasons]
+    reasons = {r.keep_reason for r in dead}
+    assert {"binary-content", "category"} <= reasons and reasons & path_reasons
+    for r in dead:
+        assert r.ppl is None, r
+        assert r.keep_reason == plain[r.url], r
+
+    alive = {r.url: r.ppl for r in out
+             if r.keep_reason not in dead_reasons | {"unreadable"}}
+    assert set(u for u, *_ in punct) <= set(alive)
+    norm = {r.url: r.t for r in pages.select(
+        "url", unicode_punct_norm_col(F.col("text")).alias("t")).collect()}
+    assert norm[punct[0][0]] != punct[0][3]  # the fixture normalizes
+    urls = sorted(alive)
+    want = perplexity_batch_with_table(
+        _logp(), pd.Series([norm[u] for u in urls]))
+    assert [alive[u] for u in urls] == list(want)

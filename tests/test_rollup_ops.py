@@ -156,3 +156,19 @@ def test_approx_percentile_tracks_exact(spark):
         F.expr("approx_percentile(len, 0.9, 10000)").alias("approx"),
     ).collect()[0]
     assert abs(r["approx"] - r["exact"]) / r["exact"] < 0.05, r
+
+
+def test_language_maps_match_metadata(spark):
+    """The type and color literal maps hold every language's metadata,
+    quote-bearing names included."""
+    from linguistjs_spark.metadata import load_metadata
+    from linguistjs_spark.operators.rollup import language_attr_map
+
+    langs = load_metadata().languages
+    assert len(langs) == 711
+    assert {"Cap'n Proto", "Ren'Py"} <= set(langs)
+    row = spark.range(1).select(
+        language_attr_map("type").alias("t"),
+        language_attr_map("color").alias("c")).first()
+    assert row.t == {l: m["type"] for l, m in langs.items()}
+    assert row.c == {l: m["color"] for l, m in langs.items() if m.get("color")}

@@ -1,5 +1,7 @@
 """Table IO facade: parquet fallback semantics (no Iceberg jar here)."""
 
+import pytest
+
 from linguistjs_spark.sources.tables import (
     iceberg_available,
     read_table,
@@ -27,6 +29,46 @@ def test_iceberg_detection_is_honest(spark):
     # this container has no Iceberg runtime; the facade must say so and
     # route names to parquet rather than failing at analysis time
     assert iceberg_available(spark) is False
+
+
+class _StubSpark:
+    """Stands in for a SparkSession whose JVM class lookup raises `exc`."""
+
+    def __init__(self, exc):
+        def for_name(_name):
+            raise exc
+
+        cls = type("C", (), {"forName": staticmethod(for_name)})
+        lang = type("L", (), {"Class": cls})
+        self._jvm = type("J", (), {"java": type("V", (), {"lang": lang})})
+
+
+class _JavaThrowable:
+    _target_id = "o0"  # read by Py4JJavaError.__init__
+
+    def __init__(self, name):
+        self.name = name
+
+    def getClass(self):
+        return self
+
+    def getName(self):
+        return self.name
+
+
+def test_iceberg_detection_fails_loudly():
+    """Only a missing class reads as "no Iceberg"; any other failure of the
+    lookup propagates instead of silently routing tables to parquet."""
+    from py4j.protocol import Py4JJavaError
+
+    cnfe = Py4JJavaError("", _JavaThrowable("java.lang.ClassNotFoundException"))
+    assert iceberg_available(_StubSpark(cnfe)) is False
+    for exc in (
+        Py4JJavaError("", _JavaThrowable("java.lang.NoClassDefFoundError")),
+        ConnectionRefusedError("gateway is gone"),
+    ):
+        with pytest.raises(type(exc)):
+            iceberg_available(_StubSpark(exc))
 
 
 def test_table_name_heuristic_requires_three_parts():
