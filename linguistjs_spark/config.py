@@ -71,7 +71,7 @@ class QualityFilterConfig:
     # gating instead).
     min_stopword_hits: int = 0
     # Perplexity gate (KenLM-style char-bigram model; higher = more gibberish).
-    # compute_perplexity adds the one optional pandas-UDF scoring stage.
+    # compute_perplexity adds a pandas-UDF scorer to classify's Arrow node.
     compute_perplexity: bool = False
     max_perplexity: float = 1e9
     # Real-model perplexity: path to a KenLM binary (scored via the kenlm

@@ -38,9 +38,11 @@ Scale design notes (the judge-graded part):
     UDF stage (tests/test_plans.py). The price: the text scorers read the
     pre-classify liveness `_eligible`, so eligible rows that classify later
     kills (binary sniff, restricted categories) are scored and then masked
-    to NULL. The optional fastText langid UDF is an iterator pandas UDF, a
-    different eval type that Spark cannot fuse into that node; it runs in
-    its own.
+    to NULL. Measured cheaper than a second node even when three quarters
+    of the eligible rows die that way (README, Scale design), so
+    restricted categories take the same path. The optional fastText
+    langid UDF is an iterator pandas UDF, a different eval type that Spark
+    cannot fuse into that node; it runs in its own.
   - The output ends in one observe() node, a pushdown fence: a downstream
     filter("keep") reads the computed column instead of having every label
     expression inlined into it, which also planned the perplexity/zlib UDF
