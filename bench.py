@@ -139,47 +139,6 @@ def bench_pages(spark, sf_dir: str, replicate: int):
     return pages
 
 
-def skewed_pages(spark, sf_dir: str, replicate: int):
-    """bench_pages with a pathological long-doc tail: ~0.05% of documents get
-    300x the text (~600 KB each) — the crawl-reality case where a handful
-    of giant pages pin whole tasks. Deterministic (url-hash picks the tail).
-
-    Calibration note (measured at sf0.1 x16, 128 partitions, 16 cores):
-    at a mild tail (0.2% x 25x) hash partitioning over 128 partitions
-    already averages the skew out and repartitionByRange LOSES ~10% to its
-    range-boundary sampling pass; at 0.05% x 300x the per-doc work rivals a
-    partition's normal load and range packing wins ~12%. The mitigation is
-    a knob for genuinely heavy tails, not a default."""
-    from pyspark.sql import functions as F
-
-    pages = bench_pages(spark, sf_dir, replicate)
-    long_tail = F.pmod(F.xxhash64("url"), F.lit(2000)) == 0
-    return pages.withColumn(
-        "text",
-        F.when(long_tail, F.repeat(F.col("text"), 300)).otherwise(F.col("text")),
-    )
-
-
-def run_skew_job(spark, sf_dir: str, replicate: int, by_length: bool) -> int:
-    """Skewed-input pipeline run, hash-partitioned vs length-range-partitioned
-    (QualityFilterConfig.repartition_by_length — the straggler-mitigation
-    path; BENCH compares the two so the mitigation is evidenced, not
-    asserted)."""
-    from pyspark.sql import functions as F
-
-    from linguistjs_spark.config import QualityFilterConfig
-    from linguistjs_spark.pipeline import run_pipeline
-
-    cfg = QualityFilterConfig(
-        repartition_buckets=PARTS, repartition_by_length=by_length
-    )
-    labels = run_pipeline(spark, skewed_pages(spark, sf_dir, replicate), cfg)
-    rows = labels.groupBy("lang").agg(
-        F.count("*").alias("n"), F.sum("bytes").alias("b")
-    ).collect()
-    return sum(r["n"] for r in rows)
-
-
 def build_pipeline_job(spark, sf_dir: str, replicate: int):
     """The headline job as a DataFrame: full quality-filter pipeline ->
     per-lang rollup. One pass: a single groupBy forces every column
@@ -382,41 +341,12 @@ def main() -> None:
 
         run_leg("compression_signal", queries, queries_host, comp_job)
 
-        # VERDICT r04 item 5 A/B: the batch-vectorized perplexity kernel
-        # (one table gather + reduceat segment-sum per Arrow batch) vs the
-        # r4-shipped row kernel (Series.map, per-doc gather + np.mean).
-        # Same input (replicated pages text), same table, same answer.
-        from linguistjs_spark.perplexity import (
-            _logp as _ppl_logp,
-            perplexity_batch_with_table as _ppl_batch,
-        )
+        # the batch-vectorized perplexity UDF the pipeline runs, over the
+        # replicated pages text
+        from linguistjs_spark.perplexity import _logp, fitted_perplexity_udf
 
-        _ppl_table = _ppl_logp()
-
-        def _ppl_job(batch_mode: bool):
-            import numpy as _np
-            import pandas as _pd
-
-            tbl = _ppl_table
-
-            if batch_mode:
-                @F.pandas_udf("double")
-                def score(s):
-                    return _ppl_batch(tbl, s)
-            else:
-                def _r4_kernel(t):
-                    if not t:
-                        return 0.0
-                    b = _np.frombuffer(
-                        t.lower().encode("utf-8"), dtype=_np.uint8)
-                    if b.size < 2:
-                        return 0.0
-                    return float(2.0 ** (-tbl[b[:-1], b[1:]].mean()))
-
-                @F.pandas_udf("double")
-                def score(s):
-                    return s.map(_r4_kernel)
-
+        def _ppl_job():
+            score = fitted_perplexity_udf(_logp())
             pages_p = bench_pages(spark, SF_DIR, REPLICATE)
             return (
                 pages_p.select(score(F.col("text")).alias("p"))
@@ -425,55 +355,8 @@ def main() -> None:
 
         run_leg(
             "ppl_batch", queries, queries_host,
-            lambda: lambda: _ppl_job(True),
+            lambda: _ppl_job,
         )
-        run_leg(
-            "ppl_rowwise_r4", queries, queries_host,
-            lambda: lambda: _ppl_job(False),
-        )
-
-        # Kernel-isolated A/B (same record): the Spark legs above are
-        # Arrow-TRANSFER-bound at web-page text sizes (~2 KB/doc), so
-        # their walls converge regardless of kernel; this times the two
-        # kernels alone, single-threaded, on the identical doc sample —
-        # the number the vectorization actually moves.
-        import pandas as _pd2
-
-        _sample = [
-            r[0] for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("text").limit(20000).collect()
-        ]
-        _sser = _pd2.Series(_sample, dtype=object)
-
-        def _kab(fn):
-            walls = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                fn(_sser)
-                walls.append(time.perf_counter() - t0)
-            return min(walls)
-
-        import numpy as _np2
-
-        def _r4_map(s):
-            def k(t):
-                if not t:
-                    return 0.0
-                b = _np2.frombuffer(
-                    t.lower().encode("utf-8"), dtype=_np2.uint8)
-                if b.size < 2:
-                    return 0.0
-                return float(2.0 ** (-_ppl_table[b[:-1], b[1:]].mean()))
-            return s.map(k)
-
-        _t_batch = _kab(lambda s: _ppl_batch(_ppl_table, s))
-        _t_row = _kab(_r4_map)
-        queries_host["ppl_batch"]["kernel_ab"] = {
-            "n_docs": len(_sample),
-            "batch_docs_per_sec": round(len(_sample) / _t_batch, 1),
-            "rowwise_r4_docs_per_sec": round(len(_sample) / _t_row, 1),
-            "kernel_speedup": round(_t_row / _t_batch, 2),
-        }
 
         run_leg(
             "exact_dedup", queries, queries_host,
@@ -890,19 +773,6 @@ def main() -> None:
         run_leg(
             "bpe_learn8", queries, queries_host,
             lambda: lambda: _bpe_job(),
-        )
-
-        # straggler stress: same pipeline over a long-doc-tail input, hash
-        # partitioning vs byte-length range partitioning. The range mode
-        # must not lose (and should win as partitions shrink relative to
-        # the tail) — evidences repartition_by_length actually engaging.
-        run_leg(
-            "pipeline_skew_hash", queries, queries_host,
-            lambda: lambda: run_skew_job(spark, SF_DIR, REPLICATE, False),
-        )
-        run_leg(
-            "pipeline_skew_range", queries, queries_host,
-            lambda: lambda: run_skew_job(spark, SF_DIR, REPLICATE, True),
         )
     finally:
         spark.stop()

@@ -102,9 +102,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="score perplexity with a model file: a KenLM "
                          "binary (kenlm package) or a text ARPA file "
                          "(built-in reader); enables the ppl stage")
-    ap.add_argument("--salt-buckets", type=int, default=0,
-                    help="two-phase salted language rollup (head-language "
-                         "skew at crawl scale); 0 = plain groupBy")
     ap.add_argument("--gopher-funnel", action="store_true",
                     help="print the Gopher quality/repetition/dup funnel "
                          "(first-failing-stage rollup by url) and exit")
@@ -142,7 +139,6 @@ def main(argv: list[str] | None = None) -> int:
         keep_vendored=args.keep_vendored,
         keep_binary=args.keep_binary,
         extract_html=args.extract_html or args.warc,
-        rollup_salt_buckets=args.salt_buckets,
     )
     if args.categories:
         cfg_kwargs["categories"] = tuple(args.categories.split(","))
@@ -344,8 +340,7 @@ def main(argv: list[str] | None = None) -> int:
             labels = run_pipeline(spark, pages, cfg)
             if args.output:
                 write_labels(labels, f"{args.output}/labels")
-                write_rollups(labels, f"{args.output}/rollups",
-                              salt_buckets=cfg.rollup_salt_buckets)
+                write_rollups(labels, f"{args.output}/rollups")
 
         if args.tree is not None or args.json:
             # the nested Results shape is the only consumer of the per-url
@@ -360,14 +355,9 @@ def main(argv: list[str] | None = None) -> int:
             # default table mode: ONE tiny rollup collect, no per-row data
             # reaches the driver; min-size Other-merge runs in the DataFrame
             # (rollup.min_size_other handles b/kb/mb/%/loc uniformly)
-            from .operators.rollup import (
-                language_rollup, min_size_other, salted_language_rollup)
+            from .operators.rollup import language_rollup, min_size_other
 
-            roll = (
-                salted_language_rollup(labels, cfg.rollup_salt_buckets)
-                if cfg.rollup_salt_buckets > 0
-                else language_rollup(labels)
-            )
+            roll = language_rollup(labels)
             if args.min_size:
                 unit, thr = parse_min_size(args.min_size)
                 if unit in ("kb", "mb"):  # already converted to bytes

@@ -39,11 +39,6 @@ class QualityFilterConfig:
     ignored_languages: tuple[str, ...] = ()
     # opts.ignoredFiles globs (src/index.ts:69)
     ignored_globs: tuple[str, ...] = ()
-    # Null out `text` before the classify UDF for rows whose kernel paths
-    # never read it (no shebang/modeline first line, ext not in
-    # content_needing_exts) — cuts the Arrow transfer to the python worker.
-    # Off switch exists for A/B measurement only; semantics are identical.
-    gate_udf_text: bool = True
 
     # ---- graft additions (BASELINE.json north_star) ----
     # Derive `text` from `html` (operators/extract.py native chain) when the
@@ -115,18 +110,10 @@ class QualityFilterConfig:
     toxicity_filter: bool = True
     toxicity_max_ratio: float = 0.1
 
-    # ---- scale knobs ----
+    # ---- scale knob ----
     # Explicit repartition by xxhash64(url) before heavy UDF stages
     # (north-rule requirement; balances crawl-order skew). <=0 disables.
     repartition_buckets: int = 0
-    # Range-partition on text length instead of pure hash (straggler
-    # mitigation when document sizes vary by orders of magnitude: keeps
-    # per-task byte volume and Arrow batch sizes even; SURVEY.md §7 hard
-    # part d). Only used when repartition_buckets > 0.
-    repartition_by_length: bool = False
-    # Salt buckets for the head-language rollup key (0 = rely on Spark's
-    # partial aggregation, which already does map-side combine).
-    rollup_salt_buckets: int = 0
 
     def effective_flags(self) -> "QualityFilterConfig":
         """Apply quick-mode fan-out like src/index.ts:26-35."""

@@ -11,7 +11,7 @@ gate malformed docs):
     engine-portable mapping (one ``translate`` + two ``regexp_replace``),
     never letters, so langid/perplexity stay unaffected.
   * ``mojibake_stats`` / ``bad_unicode_col`` — U+FFFD replacement chars
-    (the scar of a wrong decode upstream) and C0/C1-ish control chars as
+    (the scar of a wrong decode upstream) and C0/C1 control chars as
     fractions; docs over threshold are decode casualties, not language.
 
 All native Column expressions (whole-text ``translate``/``regexp_count``
@@ -52,7 +52,9 @@ ELLIPSIS_PAT = "…"          # … -> ...
 ZERO_WIDTH_PAT = "[​‌‍⁠﻿­]"  # deleted
 
 REPLACEMENT_CHAR_PAT = "�"
-CONTROL_CHAR_PAT = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]"
+# C0 controls except \t \n \r, DEL, and the C1 block U+0080-U+009F (the
+# cp1252-read-as-latin1 scar, e.g. UTF-8 "’" decoded to "â\x80\x99")
+CONTROL_CHAR_PAT = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f-\\x9f]"
 
 
 def unicode_punct_norm_col(text: Column) -> Column:

@@ -4,12 +4,12 @@ minSize/"Other" bucketing, sort.
 Reference analog: the aggregation loop at /root/reference/src/index.ts:417-479
 and the CLI's minSize/Other + sort presentation (src/cli.ts:72-105).
 
-Scale notes: a groupBy on `lang` is the pipeline's only shuffle. Spark's
-hash aggregation already does map-side partial aggregation (the built-in
-equivalent of two-phase salted aggregation), so explicit salting is only
-needed for a pathological head key; `salted_language_rollup` provides the
-two-phase groupBy(lang, salt) -> groupBy(lang) form for that case
-(SURVEY.md §4 item 3)."""
+Scale notes: a groupBy on `lang` is the pipeline's only shuffle. Its
+aggregates are sums and counts, so Spark plans a partial HashAggregate
+below the one Exchange: even a head language holding most documents
+crosses the shuffle as at most one row per map task, which is what
+two-phase salting would buy at the price of a second shuffle
+(tests/test_rollup_ops.py::test_rollup_combines_head_language_map_side)."""
 
 from __future__ import annotations
 
@@ -68,27 +68,6 @@ def language_rollup(labels: DataFrame) -> DataFrame:
         labels.filter(F.col("keep") & F.col("lang").isNotNull())
         .groupBy("lang")
         .agg(*_aggs())
-    )
-
-
-def salted_language_rollup(labels: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """A3 with explicit two-phase salting for head-language skew: partial
-    aggregate on (lang, salt) then final on lang. Semantically identical to
-    language_rollup."""
-    partial = (
-        labels.filter(F.col("keep") & F.col("lang").isNotNull())
-        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
-        .groupBy("lang", "_salt")
-        .agg(*_aggs())
-    )
-    return _with_type_color(
-        partial.groupBy("lang").agg(
-            F.sum("bytes").alias("bytes"),
-            F.sum("lines_total").alias("lines_total"),
-            F.sum("lines_content").alias("lines_content"),
-            F.sum("lines_code").alias("lines_code"),
-            F.sum("n_docs").alias("n_docs"),
-        )
     )
 
 

@@ -75,13 +75,7 @@ _ZERO_IDX = np.array([0], dtype=np.intp)
 
 def perplexity(text: str | None) -> float:
     """Per-character bigram perplexity: 2^(-mean log2 p(c2|c1))."""
-    if not text:
-        return 0.0
-    b = np.frombuffer(text.lower().encode("utf-8"), dtype=np.uint8)
-    if b.size < 2:
-        return 0.0
-    lp = _logp()[b[:-1], b[1:]]
-    return _pow2_neg(_seq_mean(lp))
+    return perplexity_with_table(_logp(), text)
 
 
 def try_import_kenlm(model_path: str | None):
@@ -312,10 +306,10 @@ def fitted_perplexity_udf(table: np.ndarray):
     from pyspark.sql import functions as F
 
     @F.pandas_udf("double")
-    def score(s: pd.Series) -> pd.Series:
+    def ppl_udf(s: pd.Series) -> pd.Series:
         return perplexity_batch_with_table(table, s)
 
-    return score
+    return ppl_udf
 
 
 def ccnet_ppl_buckets(

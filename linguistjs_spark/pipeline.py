@@ -29,6 +29,8 @@ Scale design notes (the judge-graded part):
     `text` for every row whose kernel path provably never reads it.
   - cfg.repartition_buckets > 0 inserts repartition(xxhash64(url)) before
     the UDF stage (north-rule requirement: crawl-order skew balancing).
+    It is the only repartition: a byte-length range variant lost 9 of 12
+    timed reads on a long-tail input (BASELINE.md).
   - No collect(), no driver-side loops; the only Python is the classify
     kernel's slow paths on shebang/modeline/heuristic-ext row subsets and
     the optional text scorers.
@@ -97,23 +99,18 @@ def _ppl_udf(cfg):
     _ppl = try_import_kenlm(cfg.kenlm_model_path)
 
     if _ppl is None:
-        # built-in char-bigram model: batch-vectorized scoring (one
-        # table gather per Arrow batch; float-exact vs the row twin —
-        # VERDICT r04 item 5 closed the Series.map surface)
-        from .perplexity import _logp, perplexity_batch_with_table
+        # built-in char-bigram model: the batch-vectorized scorer shared
+        # with the standalone operator
+        from .perplexity import _logp, fitted_perplexity_udf
 
-        _table = _logp()
+        return fitted_perplexity_udf(_logp())
 
-        @F.pandas_udf("double")
-        def ppl_udf(s: pd.Series) -> pd.Series:
-            return perplexity_batch_with_table(_table, s)
-    else:
-        # external model (kenlm binary / ARPA): the scorer is an opaque
-        # callable — per-doc call is the contract; the model itself does
-        # the heavy lifting in C (kenlm) or numpy (arpa_lm)
-        @F.pandas_udf("double")
-        def ppl_udf(s: pd.Series) -> pd.Series:
-            return s.map(_ppl)
+    # external model (kenlm binary / ARPA): the scorer is an opaque
+    # callable — per-doc call is the contract; the model itself does
+    # the heavy lifting in C (kenlm) or numpy (arpa_lm)
+    @F.pandas_udf("double")
+    def ppl_udf(s: pd.Series) -> pd.Series:
+        return s.map(_ppl)
 
     return ppl_udf
 
@@ -195,16 +192,7 @@ def run_pipeline(
     df = df.withColumn("text", F.when(F.col("_eligible"), F.col("text"))).drop("html")
 
     if cfg.repartition_buckets > 0:
-        if cfg.repartition_by_length:
-            # range on byte-length first, url hash to spread within a bucket:
-            # equal-byte (not equal-row) tasks when doc sizes are skewed
-            df = df.repartitionByRange(
-                cfg.repartition_buckets,
-                F.octet_length("text"),
-                F.xxhash64("url"),
-            )
-        else:
-            df = df.repartition(cfg.repartition_buckets, F.xxhash64("url"))
+        df = df.repartition(cfg.repartition_buckets, F.xxhash64("url"))
 
     # C1 forced-language globs, resolved+collapsed at driver time (native)
     p = F.col("path")
@@ -218,7 +206,7 @@ def run_pipeline(
     # fast-path rows ship ~nothing to the python worker. (text is already
     # NULL for ineligible rows, so the gate composes with row liveness.)
     first = F.substring_index(F.col("text"), "\n", 1)
-    needs_text = F.lit(not cfg.gate_udf_text)
+    needs_text = F.lit(False)
     if not cfg.quick:
         if cfg.check_shebang:
             needs_text = needs_text | first.startswith("#!")

@@ -21,22 +21,8 @@ def write_labels(labels: DataFrame, path: str, mode: str = "overwrite") -> None:
     labels.write.mode(mode).parquet(path)
 
 
-def write_rollups(
-    labels: DataFrame,
-    base_path: str,
-    mode: str = "overwrite",
-    salt_buckets: int = 0,
-) -> None:
-    """salt_buckets > 0 routes the language rollup through the two-phase
-    salted variant (cfg.rollup_salt_buckets — head-language skew at
-    crawl scale); rows are semantically identical either way."""
-    if salt_buckets > 0:
-        from ..operators.rollup import salted_language_rollup
-
-        lang = salted_language_rollup(labels, salt_buckets)
-    else:
-        lang = language_rollup(labels)
-    lang.write.mode(mode).parquet(f"{base_path}/languages")
+def write_rollups(labels: DataFrame, base_path: str, mode: str = "overwrite") -> None:
+    language_rollup(labels).write.mode(mode).parquet(f"{base_path}/languages")
     unknown_rollup(labels).write.mode(mode).parquet(f"{base_path}/unknown")
     totals(labels).write.mode(mode).parquet(f"{base_path}/totals")
 

@@ -59,14 +59,6 @@ def stream_labels(
     Returns the finished ``StreamingQuery`` (already awaited). Re-invoking
     with the same checkpoint processes only files added since the last run.
     """
-    import dataclasses
-
-    cfg = cfg or QualityFilterConfig()
-    if cfg.repartition_buckets > 0 and cfg.repartition_by_length:
-        # repartitionByRange needs a global sample of the batch — not
-        # defined on an unbounded stream; hash repartition still applies.
-        cfg = dataclasses.replace(cfg, repartition_by_length=False)
-
     reader = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("recursiveFileLookup", "true")

@@ -19,6 +19,8 @@ _CURLY = ("the “research” study – and it’s analysis … were published b
 _MOJI = ("the research study " + "�" * 40 +
          " and the analysis were published by the university")
 _REPET = "spam " * 400
+# UTF-8 "’" read as latin1: every apostrophe leaves two C1 controls
+_C1 = "the research study" + " it\u00e2\x80\x99s analysis" * 10
 
 
 def _pages(spark, texts):
@@ -54,12 +56,13 @@ def test_normalize_unicode_canonicalizes_scrubbed_text(spark):
 
 
 def test_mojibake_gate_drops_decode_casualties(spark):
-    pages = _pages(spark, [_CLEAN, _MOJI, None])
+    pages = _pages(spark, [_CLEAN, _MOJI, None, _C1])
     cfg = QualityFilterConfig(drop_mojibake=True)
     out = {r.url: r for r in run_pipeline(spark, pages, cfg).collect()}
     assert out["https://a.example/d0.txt"].keep is True
-    bad = out["https://a.example/d1.txt"]
-    assert bad.keep is False and bad.keep_reason == "bad-unicode"
+    for url in ("https://a.example/d1.txt", "https://a.example/d3.txt"):
+        bad = out[url]
+        assert bad.keep is False and bad.keep_reason == "bad-unicode", url
     # NULL text keeps its existing attribution, never 'bad-unicode'
     assert out["https://a.example/d2.txt"].keep_reason == "unreadable"
 

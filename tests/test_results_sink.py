@@ -132,22 +132,6 @@ def test_cli_gopher_funnel(spark, tmp_path, capsys):
     assert abs(sum(shares) - 100.0) < 0.5
 
 
-def test_cli_salted_rollup_matches_plain(spark, tmp_path, capsys):
-    """--salt-buckets routes the table through the two-phase salted rollup
-    (cfg.rollup_salt_buckets, previously an unconsumed knob); output is
-    byte-identical to the plain groupBy path."""
-    from linguistjs_spark.cli import main
-    from linguistjs_spark.sources.pages import pages_df
-
-    path = str(tmp_path / "pages")
-    pages_df(spark, n_bulk=40).write.mode("overwrite").parquet(path)
-    assert main([path]) == 0
-    plain = capsys.readouterr().out
-    assert main([path, "--salt-buckets", "8"]) == 0
-    salted = capsys.readouterr().out
-    assert salted == plain
-
-
 def test_cli_robots_modes(spark, tmp_path, capsys):
     """--robots applies the Disallow gate before analysis, in both the
     per-domain parquet-table form and the single-file form (file rules

@@ -1,5 +1,5 @@
-"""Rollup operators: salted two-phase equivalence, grouping sets, totals,
-minSize/Other, and the explicit-repartition config path."""
+"""Rollup operators: map-side combining of the head language, grouping
+sets, totals, minSize/Other, and the explicit-repartition config path."""
 
 from pyspark.sql import functions as F
 
@@ -12,15 +12,6 @@ from linguistjs_spark.sources.pages import pages_df
 def _labels(spark, cfg=None, n_bulk=120):
     return run_pipeline(spark, pages_df(spark, n_bulk=n_bulk),
                         cfg or REFERENCE_PARITY_CONFIG)
-
-
-def test_salted_rollup_equivalent(spark):
-    labels = _labels(spark).cache()
-    plain = {r["lang"]: r.asDict() for r in R.language_rollup(labels).collect()}
-    salted = {r["lang"]: r.asDict() for r in
-              R.salted_language_rollup(labels, salt_buckets=7).collect()}
-    assert plain == salted
-    labels.unpersist()
 
 
 def test_grouping_sets_consistency(spark):
@@ -76,20 +67,6 @@ def test_totals_matches_rollup(spark):
     assert t["n_docs"] == (roll["n"] or 0) + (unk["n"] or 0)
     labels.unpersist()
 
-def test_length_bucketed_repartition_parity(spark):
-    """Length-range partitioning (straggler mitigation) must not change any
-    label either."""
-    base = {r["url"]: (r["keep"], r["keep_reason"], r["lang"])
-            for r in _labels(spark, n_bulk=60).collect()}
-    cfg = QualityFilterConfig(
-        child_languages=True, quality_rules=False, langid_fallback=False,
-        scrub_pii=False, toxicity_filter=False,
-        repartition_buckets=8, repartition_by_length=True,
-    )
-    rep = {r["url"]: (r["keep"], r["keep_reason"], r["lang"])
-           for r in _labels(spark, cfg=cfg, n_bulk=60).collect()}
-    assert base == rep
-
 
 def test_dedup_cardinality_approx_within_tolerance(spark):
     from linguistjs_spark.operators.dedup import dedup_cardinality
@@ -101,17 +78,17 @@ def test_dedup_cardinality_approx_within_tolerance(spark):
     assert rel_err < 0.05, (r["n_unique_exact"], r["n_unique_approx"], rel_err)
 
 
-def test_salted_rollup_spreads_head_language(spark):
-    """Skew evidence: on a 95%-one-language corpus the salted partial stage
-    must spread the head key across many (lang, salt) groups — the rows a
-    single reducer would otherwise absorb — while the final rollup stays
-    identical to the unsalted one."""
-    from pyspark.sql import functions as F
+def test_rollup_combines_head_language_map_side(spark):
+    """On a 95%-one-language corpus the head key needs no salting: the
+    rollup's sums and counts are combined by a partial HashAggregate below
+    its one Exchange, so each map task ships at most one row per language,
+    and the per-language totals are exact."""
+    import re
 
-    from linguistjs_spark.operators import rollup as R
+    from linguistjs_spark.plans.explain_utils import count_nodes, formatted_plan
 
     n = 2000
-    labels = spark.range(n).select(
+    labels = spark.range(0, n, 1, 16).select(
         F.concat(F.lit("http://s/d"), F.col("id")).alias("url"),
         F.when(F.col("id") % 20 == 0, F.lit("Python"))
         .otherwise(F.lit("Text"))
@@ -124,22 +101,25 @@ def test_salted_rollup_spreads_head_language(spark):
             F.lit(1).cast("long").alias("code"),
         ).alias("lines"),
     )
-    salt_buckets = 16
-    partial = (
-        labels.filter(F.col("keep") & F.col("lang").isNotNull())
-        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
-        .groupBy("lang", "_salt")
-        .agg(F.count("*").alias("n"))
-    )
-    head = partial.filter(F.col("lang") == "Text").collect()
-    assert len(head) == salt_buckets  # head key split across every bucket
-    counts = sorted(r["n"] for r in head)
-    assert counts[-1] < 0.95 * n * 0.25, counts  # no bucket re-concentrates
+    roll = R.language_rollup(labels)
 
-    plain = {r["lang"]: r.asDict() for r in R.language_rollup(labels).collect()}
-    salted = {r["lang"]: r.asDict() for r in
-              R.salted_language_rollup(labels, salt_buckets=salt_buckets).collect()}
-    assert plain == salted
+    plan = formatted_plan(roll)
+    assert count_nodes(plan, "Exchange") == 1, plan
+    child = re.search(r"\+- Exchange \(\d+\)\n\s*\+- HashAggregate \((\d+)\)", plan)
+    assert child, plan
+    partial = re.search(
+        r"^\(%s\) HashAggregate\n.*?^Functions \[\d+\]: (.*?)$" % child[1],
+        plan, re.M | re.S)
+    assert "partial_sum(bytes" in partial[1], partial[1]
+    assert "partial_count(" in partial[1], partial[1]
+
+    want: dict[str, list[int]] = {}
+    for i in range(n):
+        acc = want.setdefault("Python" if i % 20 == 0 else "Text", [0, 0])
+        acc[0] += i % 100 + 1
+        acc[1] += 1
+    got = {r["lang"]: [r["bytes"], r["n_docs"]] for r in roll.collect()}
+    assert got == want
 
 
 def test_approx_percentile_tracks_exact(spark):
