@@ -1251,7 +1251,8 @@ def q_crawl_delay_schedule(spark, sf_dir):
     """Crawl-delay-aware politeness scheduling: per-host batch capacity
     derived from the robots fixture's Crawl-delay lines (first valid
     positive value in a user-agent-* group; 60 s window → cap =
-    floor(60/d) floored at 1; hosts without a delay get the default 7).
+    floor(60/d), or cap 1 and every ceil(d/60)-th batch when d > 60;
+    hosts without a delay get the default 7).
     The engine extracts the delay with the robots fold and schedules in
     one window; the oracle re-derives the delay with the window-function
     state machine and restates the schedule as ROW_NUMBER + floor
@@ -3327,7 +3328,10 @@ def _crawl_delay_schedule_oracle_sql() -> str:
              coalesce(CASE WHEN d.delay > 0
                            THEN greatest(CAST(floor(60.0 / d.delay)
                                               AS BIGINT), 1) END,
-                      7) AS cap
+                      7) AS cap,
+             CASE WHEN d.delay > 60.0
+                  THEN CAST(ceil(d.delay / 60.0) AS BIGINT) ELSE 1 END
+               AS every
       FROM f LEFT JOIN rdelays d ON d.domain = f.host
     ),
     r AS (
@@ -3336,7 +3340,7 @@ def _crawl_delay_schedule_oracle_sql() -> str:
       FROM c
     )
     SELECT doc_id, host, CAST(cap AS BIGINT) AS cap,
-           CAST(rn // cap AS BIGINT) AS batch,
+           CAST((rn // cap) * every AS BIGINT) AS batch,
            CAST(rn % cap AS BIGINT) AS slot
     FROM r ORDER BY doc_id
     """

@@ -339,7 +339,12 @@ def main(argv: list[str] | None = None) -> int:
         else:
             labels = run_pipeline(spark, pages, cfg)
             if args.output:
+                from .streaming.resume import read_labels
+
+                # the rollups and the table below read the written labels
+                # back: the label pipeline runs once, not once per output
                 write_labels(labels, f"{args.output}/labels")
+                labels = read_labels(spark, args.output)
                 write_rollups(labels, f"{args.output}/rollups")
 
         if args.tree is not None or args.json:

@@ -65,21 +65,20 @@ def forced_lang_col(path: Column, overrides, resolve) -> Column:
     return F.coalesce(*branches)
 
 
-def with_filter_flags(
-    df,
+def path_filter_cols(
     md: Metadata,
     cfg: QualityFilterConfig,
     overrides: list[OverrideRule] | None = None,
     user_ignore_globs: list[str] | None = None,
-):
-    """Adds `path` and `drop_reason_path` (null == survives to classify).
+) -> tuple[Column, Column]:
+    """The `path` column (from `url`) and the `drop_reason_path` column
+    (over `path`; null == survives to classify).
 
     Column algebra mirrors oracle.path_filter exactly:
       stage 1 regex-ignore w/ generated/vendored==false merged-attr escape,
       stage 2 glob-level true-flag drops, binary ext + binary=true globs.
     """
     overrides = overrides or []
-    df = df.withColumn("path", path_col(F.col("url")))
     p = F.col("path")
 
     ignored = F.lit(False)
@@ -118,4 +117,16 @@ def with_filter_flags(
     if not cfg.keep_binary:
         reason = reason.when(binary_ext, F.lit("binary-ext"))
 
-    return df.withColumn("drop_reason_path", reason.otherwise(F.lit(None)))
+    return path_col(F.col("url")), reason.otherwise(F.lit(None))
+
+
+def with_filter_flags(
+    df,
+    md: Metadata,
+    cfg: QualityFilterConfig,
+    overrides: list[OverrideRule] | None = None,
+    user_ignore_globs: list[str] | None = None,
+):
+    """Adds `path` and `drop_reason_path` (path_filter_cols)."""
+    path, reason = path_filter_cols(md, cfg, overrides, user_ignore_globs)
+    return df.withColumn("path", path).withColumn("drop_reason_path", reason)

@@ -395,12 +395,14 @@ def politeness_schedule_with_delays(
 ) -> DataFrame:
     """``politeness_schedule`` with per-host capacities derived from
     robots.txt ``Crawl-delay`` (robots.robots_crawl_delay_col): a host
-    with delay d seconds may be fetched floor(window_sec / d) times per
-    batch window (floored at 1); hosts without a valid delay use
-    ``default_per_batch``. ``delays`` is a (host, crawl_delay) table —
-    at crawl scale it is the per-domain robots table (~10^8 rows against
-    a 10^12-row frontier), so the join stays a keyed equi-join the
-    planner can broadcast when the domain count allows.
+    with delay d <= window_sec seconds may be fetched floor(window_sec / d)
+    times per batch window; a host with d > window_sec is fetched once
+    every ceil(d / window_sec) batches (cap 1, the batches between are
+    skipped); hosts without a valid delay use ``default_per_batch``.
+    ``delays`` is a (host, crawl_delay) table — at crawl scale it is the
+    per-domain robots table (~10^8 rows against a 10^12-row frontier), so
+    the join stays a keyed equi-join the planner can broadcast when the
+    domain count allows.
 
     Same single window shuffle as politeness_schedule; the per-host cap
     arrives BEFORE the window via the join, so batch assignment is one
@@ -419,10 +421,15 @@ def politeness_schedule_with_delays(
                 F.lit(1).cast("long"),
             ),
         ).alias("cap"),
+        F.when(
+            F.col("crawl_delay") > window_sec,
+            F.ceil(F.col("crawl_delay") / F.lit(float(window_sec))).cast("long"),
+        ).alias("_every"),
     )
-    joined = with_host.join(d, "host", "left").withColumn(
-        "cap", F.coalesce(F.col("cap"), F.lit(default_per_batch).cast("long"))
-    )
+    joined = with_host.join(d, "host", "left").withColumns({
+        "cap": F.coalesce(F.col("cap"), F.lit(default_per_batch).cast("long")),
+        "_every": F.coalesce(F.col("_every"), F.lit(1).cast("long")),
+    })
     order = (
         [F.col(priority_col).desc()] if priority_col else []
     ) + [F.col(url_col).asc()]
@@ -430,9 +437,9 @@ def politeness_schedule_with_delays(
     rn = F.row_number().over(w) - 1
     return joined.select(
         "*",
-        (rn / F.col("cap")).cast("long").alias("batch"),
+        ((rn / F.col("cap")).cast("long") * F.col("_every")).alias("batch"),
         (rn % F.col("cap")).cast("long").alias("slot"),
-    )
+    ).drop("_every")
 
 
 # Tracking/click-id query parameters every large crawl dedup strips: the

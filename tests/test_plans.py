@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from linguistjs_spark.config import QualityFilterConfig
 from linguistjs_spark.operators.extract import synth_html
 from linguistjs_spark.operators.rollup import language_rollup
-from linguistjs_spark.pipeline import run_pipeline
+from linguistjs_spark.pipeline import LABEL_COLUMNS, run_pipeline
 from linguistjs_spark.plans.explain_utils import (
     count_nodes,
     filter_conditions,
@@ -237,6 +237,18 @@ def test_pipeline_outputs_compose(spark, pages_parquet):
     joined = labels.join(other, "url")
     assert joined.count() == n
     assert joined.filter(F.col("keep") & ~F.col("keep_no_quality")).count() == 0
+
+    # a second output of the same cfg reuses its cached label steps, so the
+    # two plans share UDF and alias expressions; both compose row for row
+    again = run_pipeline(spark, pages, QualityFilterConfig())
+    hashed = [df.select("url", F.xxhash64(*LABEL_COLUMNS).alias("h"))
+              for df in (labels, again)]
+    pair = hashed[0].alias("a").join(hashed[1].alias("b"), "url")
+    assert pair.count() == n
+    assert pair.filter(F.col("a.h") != F.col("b.h")).count() == 0
+    both = hashed[0].union(hashed[1]).groupBy("url", "h").count()
+    assert both.filter(F.col("count") != 2).count() == 0
+    assert both.count() == n
 
 
 PIPELINE_UDFS = ("classify_udf", "ppl_udf", "_zlen", "mq_udf")

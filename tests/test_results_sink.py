@@ -91,6 +91,39 @@ def test_cli_runs(spark, tmp_path, capsys):
     assert "B" in capsys.readouterr().out
 
 
+def test_cli_output_tables(spark, tmp_path, capsys):
+    """--output without --buckets writes labels and the three rollups, each
+    equal to run_pipeline plus the rollup operators on the same pages."""
+    from pyspark.sql import functions as F
+
+    from linguistjs_spark.cli import main
+    from linguistjs_spark.config import QualityFilterConfig
+    from linguistjs_spark.operators.rollup import (
+        language_rollup, totals, unknown_rollup)
+    from linguistjs_spark.pipeline import LABEL_COLUMNS
+
+    path, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    pages_df(spark, n_bulk=40).write.mode("overwrite").parquet(path)
+    assert main([path, "--output", out]) == 0
+    assert "B" in capsys.readouterr().out
+
+    labels = run_pipeline(spark, spark.read.parquet(path), QualityFilterConfig())
+
+    def rows(df):
+        return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True,
+                                 default=str) for r in df.collect())
+
+    def hashed(df):
+        return df.select("url", F.xxhash64(*LABEL_COLUMNS))
+
+    assert rows(hashed(spark.read.parquet(f"{out}/labels"))) == rows(hashed(labels))
+    for name, rollup in (("languages", language_rollup),
+                         ("unknown", unknown_rollup), ("totals", totals)):
+        got = spark.read.parquet(f"{out}/rollups/{name}")
+        assert rows(got) == rows(rollup(labels)), name
+        assert rows(got)
+
+
 def test_cli_list_files_mode(spark, tmp_path, capsys):
     """--list-files prints the reference's grouped per-language file listing
     (src/cli.ts:113-151) with a bounded driver collect."""

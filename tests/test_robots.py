@@ -487,3 +487,33 @@ def test_politeness_with_delays_caps(spark):
     nod = sorted(v for (h, _), v in rows.items() if h == "nodelay.example")
     assert {c for c, _, _ in nod} == {4}
     assert [b for _, b, _ in nod] == [0, 0, 0, 0, 1, 1]
+
+
+def test_politeness_delay_longer_than_window(spark):
+    """A Crawl-delay above the window is honoured by skipping batches: the
+    120 s host at a 60 s window gets one fetch every second batch, not one
+    per batch."""
+    from linguistjs_spark.operators.url_ops import (
+        politeness_schedule_with_delays)
+
+    frontier = spark.createDataFrame(
+        [(f"https://{h}.example/u{i:02d}",)
+         for h in ("huge", "ninety", "window") for i in range(3)],
+        "url string",
+    )
+    delays = spark.createDataFrame(
+        [("huge.example", 120.0), ("ninety.example", 90.0),
+         ("window.example", 60.0)],
+        "host string, crawl_delay double",
+    )
+    out = politeness_schedule_with_delays(
+        frontier, delays, window_sec=60.0, default_per_batch=4)
+    assert "_every" not in out.columns
+    got = {}
+    for r in out.orderBy("url").collect():
+        got.setdefault(r.host, []).append((r.cap, r.batch, r.slot))
+    assert got == {
+        "huge.example": [(1, 0, 0), (1, 2, 0), (1, 4, 0)],
+        "ninety.example": [(1, 0, 0), (1, 2, 0), (1, 4, 0)],
+        "window.example": [(1, 0, 0), (1, 1, 0), (1, 2, 0)],
+    }
