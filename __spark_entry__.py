@@ -5,8 +5,9 @@
   rolled up per language (the reference's headline output,
   /root/reference/readme.md:69-103).
 - ``queries()``: one entry per implemented operator family (SURVEY.md §2 +
-  graft training-data ops).
-- ``oracle_sql()``: DuckDB-equivalent SQL for every SQL-expressible query.
+  graft training-data ops), least recently CORRECTNESS-recorded first.
+- ``oracle_sql()``: DuckDB-equivalent SQL for every query; ``oracle(name)``
+  builds one entry's. Both read the one ``_REGISTRY`` table at the end.
   Column names/aliases match the Spark side exactly; float-valued outputs are
   avoided or reduced to engine-exact arithmetic (single IEEE ops / integer
   casts) so the order-insensitive value-hash comparison is stable.
@@ -14,6 +15,8 @@
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +40,8 @@ from linguistjs_spark.operators.multimodal import extract_media_features, synthe
 from linguistjs_spark.operators import extract as EX
 from linguistjs_spark.operators import boilerplate as BP
 from linguistjs_spark.operators import decontam as DCN
+from linguistjs_spark.operators.retrieval import (
+    bm25_oracle_sql, keyword_topk_oracle_sql)
 
 # pipeline config used for oracle-checked cascade queries: pure reference
 # semantics, graft stages off (they are oracle-checked separately)
@@ -155,10 +160,11 @@ def q_cascade_extmap(spark, sf_dir):
 
 
 # cascade_wide fixture: 290 extensions spanning the widened metadata
-# snapshot (VERDICT r01 #2), each a single-candidate ext whose classification
-# is text-independent (not shebang/modeline/heuristic-gated), pinned to its
-# expected language. The DuckDB oracle restates this list literally, so a
-# snapshot regression (ext dropped/remapped) breaks the hash match.
+# snapshot (VERDICT r01 #2), each a single-candidate ext whose
+# classification is text-independent (not shebang/modeline/heuristic-gated),
+# pinned to its expected language. The DuckDB oracle restates this list
+# literally, so a snapshot regression (ext dropped/remapped) breaks the hash
+# match. Batch N below is row N of linguistjs_spark/data/PROVENANCE.md.
 _WIDE_EXT_LANGS = [
     (".go", "Go"), (".swift", "Swift"), (".kt", "Kotlin"), (".kts", "Kotlin"),
     (".dart", "Dart"), (".rb", "Ruby"), (".java", "Java"), (".scala", "Scala"),
@@ -201,10 +207,10 @@ _WIDE_EXT_LANGS = [
     (".sj", "Objective-J"), (".twig", "Twig"), (".uc", "UnrealScript"),
     (".ur", "UrWeb"), (".vb", "Visual Basic .NET"), (".vbs", "VBScript"),
     (".vtl", "Velocity Template Language"), (".vtt", "WebVTT"),
-    # batch-2 widening (scripts/widen_snapshot2.py). Batch 14 made .mojo
-    # heuristic-gated (Mojo/XML group), so its wide pin — which requires a
-    # text-INDEPENDENT classification — moved to the single-claimant flame
-    # alias; .mojo itself is pinned per rule branch in _HEUR_CASES.
+    # batch-2 widening. Batch 14 made .mojo heuristic-gated (Mojo/XML
+    # group), so its wide pin — which requires a text-INDEPENDENT
+    # classification — moved to the single-claimant flame alias; .mojo
+    # itself is pinned per rule branch in _HEUR_CASES.
     (".\U0001F525", "Mojo"), (".astro", "Astro"), (".kdl", "KDL"),
     (".rexx", "REXX"), (".x68", "Assembly"),
     (".red", "Red"), (".self", "Self"), (".boo", "Boo"), (".x10", "X10"),
@@ -220,17 +226,17 @@ _WIDE_EXT_LANGS = [
     (".csd", "Csound Document"), (".sco", "Csound Score"),
     (".kicad_pcb", "KiCad Layout"),
     (".lvproj", "LabVIEW"), (".ol", "Jolie"), (".cdf", "Mathematica"),
-    # batch-3 widening (scripts/widen_heuristics3.py): single-candidate
-    # exts of the newly added languages (their contested exts are pinned
-    # with real content in cascade_heuristics instead)
+    # batch-3 widening: single-candidate exts of the newly added languages
+    # (their contested exts are pinned with real content in
+    # cascade_heuristics instead)
     (".reb", "Rebol"), (".xi", "Logos"), (".gbr", "Gerber Image"),
     (".dlm", "IDL"), (".pri", "QMake"),
-    # batch-4 widening (scripts/widen_langs4.py): unique-ext languages of
-    # the 580-language snapshot. Group-bearing children pin their COLLAPSED
-    # parent label (.bib->TeX, .ebuild->Shell, .rbs->Ruby...)
-    # so these rows double as C7 group-collapse pins. Binary-filtered exts
-    # (.snap .rtf .stl .xbm .xpm) are deliberately absent: they classify
-    # keep=false and would vanish from the rollup.
+    # batch-4 widening: unique-ext languages of the 580-language snapshot.
+    # Group-bearing children pin their COLLAPSED parent label (.bib->TeX,
+    # .ebuild->Shell, .rbs->Ruby...) so these rows double as C7
+    # group-collapse pins. Binary-filtered exts (.snap .rtf .stl .xbm
+    # .xpm) are deliberately absent: they classify keep=false and would
+    # vanish from the rollup.
     (".bsl", "1C Enterprise"), (".2da", "2-Dimensional Array"),
     (".asddls", "ABAP CDS"), (".aidl", "AIDL"), (".als", "Alloy"),
     (".apib", "API Blueprint"), (".agc", "Apollo Guidance Computer"),
@@ -271,16 +277,16 @@ _WIDE_EXT_LANGS = [
     (".ws", "Witcher Script"), (".xaml", "XAML"), (".xpl", "XProc"),
     (".xs", "XS"), (".yul", "Yul"), (".zap", "ZAP"), (".zeek", "Zeek"),
     (".ec", "eC"), (".mu", "mupad"), (".ooc", "ooc"),
-    # batch-5 widening (scripts/widen_heuristics5.py)
+    # batch-5 widening
     (".ch", "xBase"), (".rakutest", "Raku"), (".cps", "Component Pascal"),
     # batch-6 backfill: .json/.yaml/.yml/.pod/.asy/.mc/.plist/.ms moved OUT
-    # of this text-independent list when widen_heuristics6 gave them content
+    # of this text-independent list when batch 6 gave them content
     # disambiguation groups (their classification now depends on doc text);
     # replaced with still-single-candidate exts of the 603-language snapshot
     (".abap", "ABAP"), (".abnf", "ABNF"), (".ada", "Ada"), (".apl", "APL"),
     (".au3", "AutoIt"), (".bats", "Shell"), (".bzl", "Starlark"),
     (".cairo", "Cairo"),
-    # batch-11 widening (scripts/widen_langs11.py)
+    # batch-11 widening
     (".f90", "Fortran Free Form"), (".ics", "iCalendar"),
     (".cds", "CAP CDS"), (".ispc", "ISPC"), (".d2", "D2"),
     (".4gl", "Genero 4gl"), (".per", "Genero per"),
@@ -291,7 +297,7 @@ _WIDE_EXT_LANGS = [
     (".ha", "Hare"), (".pickle", "Pickle"), (".slang", "Slang"),
     (".axs.erb", "NetLinx+ERB"), (".mms", "Module Management System"),
     (".cil", "CIL"),
-    # batch-17 widening (scripts/widen_langs17.py): VB6 designer files
+    # batch-17 widening: VB6 designer files
     (".ctl", "Visual Basic 6.0"), (".dsr", "Visual Basic 6.0"),
 ]
 
@@ -344,7 +350,8 @@ def _cascade_wide_oracle_sql() -> str:
 # (ext, content). Expected labels restated literally by the DuckDB oracle
 # and independently cross-checked row-by-row against the python oracle in
 # tests/test_snapshot_batch3.py. Reference semantics: src/index.ts:320-361
-# (first matching rule wins; rules gated to the candidate set).
+# (first matching rule wins; rules gated to the candidate set). Batch N
+# below is row N of linguistjs_spark/data/PROVENANCE.md.
 _HEUR_CASES = [
     (".as", "package com.example\nclass Main {}", "ActionScript"),
     (".as", "shared abstract class Foo {}", "AngelScript"),
@@ -427,8 +434,8 @@ _HEUR_CASES = [
     (".x", "%hook SpringBoard\n%end", "Logos"),
     (".x", "SECTIONS\n{\n . = 0x10000;\n}", "Linker Script"),
     (".yy", '{\n "rules": []\n}', "JSON"),
-    # batch-4 groups (scripts/widen_langs4.py): .al/.dsp/.i/.star arrive
-    # with their upstream disambiguation; .cl exercises the pre-existing
+    # batch-4 groups: .al/.dsp/.i/.star arrive with their upstream
+    # disambiguation; .cl exercises the pre-existing
     # group's Cool rule, dead until Cool joined the snapshot in batch 4.
     (".al", "codeunit 50100 MyHandler\n{\n    trigger OnRun()\n"
             "    begin\n    end;\n}", "AL"),
@@ -447,9 +454,9 @@ _HEUR_CASES = [
     (".cl", "(defun hello (x)\n  (print x))", "Common Lisp"),
     (".cl", "class Main inherits IO {\n  main() : Object { 0 }\n};", "Cool"),
     (".cl", "__kernel void add(__global float* a) {}", "OpenCL"),
-    # batch-5 groups (scripts/widen_heuristics5.py): Raku/Turing rules on
-    # .pl/.pm/.t were dead until their languages claimed the extensions;
-    # .cp/.g/.tst are new; .ts exercises the resurrected XML rule.
+    # batch-5 groups: Raku/Turing rules on .pl/.pm/.t were dead until
+    # their languages claimed the extensions; .cp/.g/.tst are new; .ts
+    # exercises the resurrected XML rule.
     (".pl", "likes(alice, bob).\nhappy(X) :- likes(X, _).", "Prolog"),
     (".pl", "use strict;\nmy @xs = (1, 2);\n", "Perl"),
     (".pl", "use v6;\nsay 'hello';\n", "Raku"),
@@ -466,9 +473,9 @@ _HEUR_CASES = [
     (".tst", "// Scilab test\ndisp(1)\n", "Scilab"),
     (".ts", '<?xml version="1.0"?>\n<TS version="2.1"></TS>\n', "XML"),
     (".ts", "import { x } from './x';\nexport const y = 1;\n", "TypeScript"),
-    # batch-6 groups (scripts/widen_heuristics6.py): OpenAPI/MiniYAML over
-    # .json/.yaml, man-page suffixes, 68k vs gas .s, plus the repaired .pod
-    # (fallback Pod, was dead-Perl) and .inc (SQL claims the ext upstream).
+    # batch-6 groups: OpenAPI/MiniYAML over .json/.yaml, man-page
+    # suffixes, 68k vs gas .s, plus the repaired .pod (fallback Pod, was
+    # dead-Perl) and .inc (SQL claims the ext upstream).
     # Heuristic winners keep their RAW language name (src/index.ts:331-336
     # assigns the rule's language, bypassing group collapse).
     (".bas", '#include "stdio.bi"\nPrint "hi"', "FreeBASIC"),
@@ -533,7 +540,7 @@ _HEUR_CASES = [
     (".pod", "=head1 NAME\ndemo - a thing\n", "Pod"),
     (".inc", "SELECT id FROM users;\n", "SQL"),
     (".inc", "<?php\necho 1;\n", "PHP"),
-    # batch 7 (widen_heuristics7.py)
+    # batch 7
     (".b", "+++>+>+<[-]\n", "Brainfuck"),
     (".b", "implement Hello;\ninclude \"sys.m\";\n", "Limbo"),
     (".j", "@import <Foundation/CPObject.j>\n@implementation App\n@end\n",
@@ -551,14 +558,14 @@ _HEUR_CASES = [
     (".mask", "%YAML 1.1\n%TAG !u! tag:unity3d.com,2011:\n",
      "Unity3D Asset"),
     (".mask", ".page > .content {\n  h4 > 'Title'\n}\n", "Mask"),
-    # batch 8 (widen_langs8.py)
+    # batch 8
     (".mo", "actor Main {\n  public func greet() {};\n}\n", "Motoko"),
     (".mo", "model Pendulum\n  Real x;\nend Pendulum;\n", "Modelica"),
     (".rsc", "/interface bridge\nadd name=br0\n", "RouterOS Script"),
     (".rsc", "module Demo\nimport IO;\n", "Rascal"),
     (".cls", "public with sharing class AccountCtrl {\n}\n", "Apex"),
     (".ncl", "begin\n  f = addfile(\"in.nc\", \"r\")\nend\n", "NCL"),
-    # batch 9 (widen_langs9.py)
+    # batch 9
     (".sch", '<?xml version="1.0"?>\n<eagle version="9.6.2">\n</eagle>\n',
      "Eagle"),
     (".sch", "EESchema Schematic File Version 4\nEELAYER 30 0\n",
@@ -570,13 +577,13 @@ _HEUR_CASES = [
      "    INDEX 01 00:00:00\n", "Cue Sheet"),
     (".cue", 'package example\n\nmsg: "hello"\n', "CUE"),
     (".e", "def greeter := when (x) -> { x }\n", "E"),
-    # batch 10 (widen_heuristics10.py)
+    # batch 10
     (".m", "(* ::Package:: *)\nf[x_] := x^2\n", "Mathematica"),
     (".m", "% plot a sine\nx = 0:0.1:pi;\n", "MATLAB"),
     (".frag", "#version 330 core\nout vec4 color;\nvoid main() {}\n",
      "GLSL"),
     (".frag", "'use strict';\nmodule.exports = 1;\n", "JavaScript"),
-    # batch 11 (widen_langs11.py)
+    # batch 11
     (".mod", "NEURON {\n    SUFFIX pas\n}\n", "NMODL"),
     (".mod", "obj-m += hello.o\n", "Linux Kernel Module"),
     (".r", "#include \"Types.r\"\nresource 'MENU' (128) {\n};\n", "Rez"),
@@ -588,7 +595,7 @@ _HEUR_CASES = [
     (".ncl", "let port = 8080 in\n{ port = port }\n", "Nickel"),
     (".nas", "var pos = geo.aircraft_position();\n", "Nasal"),
     (".nas", "section .text\n    mov eax, 1\n", "Assembly"),
-    # batch 12 (widen_langs12.py): upstream .inc membership
+    # batch 12: upstream .inc membership
     (".inc", "%macro PUSH_ALL 0\nsection .text\n", "Assembly"),
     (".inc", "{$IFDEF FPC}\nprocedure Foo;\n{$ENDIF}\n", "Pascal"),
     (".inc", "#declare Wood = texture { pigment { rgb 1 } }\n",
@@ -597,27 +604,27 @@ _HEUR_CASES = [
     (".inc", "#if defined _mylib_included\n#endinput\n#endif\n",
      "SourcePawn"),
     (".inc", 'script_name("Port scan");\nscript_id(99999);\n', "NASL"),
-    # batch 13 (widen_heuristics13.py): Lean/Lean 4, Roff/Noir, XML/HCL
+    # batch 13: Lean/Lean 4, Roff/Noir, XML/HCL
     (".lean", "import data.nat.basic\nopen nat\n", "Lean"),
     (".lean", "import Mathlib.Tactic\ntheorem t : 1 = 1 := rfl\n", "Lean 4"),
     (".nr", '.\\" man page source\n.TH FOO 1\n', "Roff"),
     (".nr", "fn main() {\n    assert(1 == 1);\n}\n", "Noir"),
     (".workflow", '<?xml version="1.0"?>\n<workflow></workflow>\n', "XML"),
     (".workflow", 'workflow "on-push" {\n  on = "push"\n}\n', "HCL"),
-    # batch 14 (widen_heuristics14.py): Mojo/XML
+    # batch 14: Mojo/XML
     (".mojo", "from python import Python\nfn main():\n    pass\n", "Mojo"),
     (".mojo", '<?xml version="1.0"?>\n<intention/>\n', "XML"),
-    # batch 15 (widen_heuristics15.py): FLUX/HLSL and Mathematica/Text
+    # batch 15: FLUX/HLSL and Mathematica/Text
     (".fx", "func blur(img, radius) (\n    img\n)\n", "FLUX"),
     (".fx", "technique T0 {\n    pass P0 {}\n}\n", "HLSL"),
     (".nb", "(* Content-type: application/vnd.wolfram.mathematica *)\n"
             "Notebook[{Cell[\"hi\"]}]\n", "Mathematica"),
     (".nb", "meeting notes\n- agenda item one\n- agenda item two\n", "Text"),
-    # batch 16 (widen_heuristics16.py): new branches in existing groups
+    # batch 16: new branches in existing groups
     (".pm", "/* XPM */\nstatic char *icon[] = {\n", "X PixMap"),
     (".gs", "#version 330 core\nlayout(points) in;\nvoid main() {}\n",
      "GLSL"),
-    # batch 18 (widen_heuristics18.py): upstream rule-shape parity —
+    # batch 18: upstream rule-shape parity —
     # pattern-less fallbacks (.ls/.pluginspec/.gml no-op vs C9, .yy is a
     # real delta: non-JSON content -> Yacc) and the .i m68k lead rule
     (".ls", "package demo.app {\n    public class App {}\n}\n",
@@ -2785,141 +2792,6 @@ def q_bpe_packing(spark, sf_dir):
     return PK.packing_summary(packed, 256)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry ORDER is load-bearing: the round driver records CORRECTNESS
-    # rows for the FIRST 50 entries only; every entry is equally
-    # pytest-verified against DuckDB (tests/test_entry_queries.py sweeps
-    # all of oracle_sql()).
-    #
-    # ROTATION RULE (VERDICT r04 item 2 — the append-only parking policy
-    # silently left the §2.5 join shapes driver-unrecorded in r4): each
-    # round the registry is reordered as
-    #   (1) ops new this round (never driver-recorded), then
-    #   (2) ops NOT recorded last round (parked, least-recently-recorded),
-    #   then
-    #   (3) ops recorded last round, keeping their prior relative order —
-    #       the tail of this group falls past the cap and rotates to
-    #       group (2) next round.
-    # Consequence: no entry goes driver-unrecorded two rounds running; every
-    # family has a green row in the union of the last two CORRECTNESS files.
-    # Round 5 front-loads group (2) = the 17 entries past r4's cap
-    # (CORRECTNESS_r04 keys are the recorded set) plus group (1); with 29
-    # group-(1) entries the cap lands after scrub_pii, so the r4-recorded
-    # tail (token_count_by_source, exact_dedup, cascade_extmap,
-    # cascade_wide, cascade_heuristics, keep_reason_rollup,
-    # unknown_rollup, minsize_other, top_langs, ccnet_buckets,
-    # cross_corpus_dedup, user_sessions .. duplicated_spans) falls past
-    # the cap this round — all hash-green in CORRECTNESS_r04.
-    return {
-        # -- group (1): new in round 5, never driver-recorded --
-        "snapshot_merge": q_snapshot_merge,
-        "bitext_mining": q_bitext_mining,
-        "compression_signal": q_compression_signal,
-        "corpus_card": q_corpus_card,
-        "crawl_delay_schedule": q_crawl_delay_schedule,
-        "url_tracking_dedup": q_url_tracking_dedup,
-        "crawl_frontier_priority": q_crawl_frontier_priority,
-        "pii_counts": q_pii_counts,
-        "unicode_normalize": q_unicode_normalize,
-        "mojibake_filter": q_mojibake_filter,
-        "domain_cap": q_domain_cap,
-        "model_quality": q_model_quality,
-        "bpe_merges": q_bpe_merges,
-        "bpe_token_counts": q_bpe_token_counts,
-        "bpe_packing": q_bpe_packing,
-        "model_quality_buckets": q_model_quality_buckets,
-        "bm25_topk": q_bm25_topk,
-        "readability_bands": q_readability_bands,
-        "keywords_topk": q_keywords_topk,
-        "crawl_politeness": q_crawl_politeness,
-        "robots_rules": q_robots_rules,
-        "robots_disallow": q_robots_disallow,
-        "robots_allow_precedence": q_robots_allow_precedence,
-        "sitemap_urls": q_sitemap_urls,
-        "dedup_keep_policy": q_dedup_keep_policy,
-        "domain_quality": q_domain_quality,
-        "crawl_delta": q_crawl_delta,
-        "heuristics_delta": q_heuristics_delta,
-        "warc_chunked_roundtrip": q_warc_chunked_roundtrip,
-        # -- group (2): parked in r4 (pytest-only that round) — the six r4
-        #    tail ops, the §2.5 data-join shapes (driver-green in r3), and
-        #    the plain aggregations parked since r3 --
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "winnow_pairs": q_winnow_pairs,
-        "temperature_mix": q_temperature_mix,
-        "image_near_dup": q_image_near_dup,
-        "domain_pagerank": q_domain_pagerank,
-        "anchor_stats": q_anchor_stats,
-        "noindex_filter": q_noindex_filter,
-        "shingle_stats": q_shingle_stats,
-        "jaccard_pairs": q_jaccard_pairs,
-        "shipped_revenue_window": q_shipped_revenue_window,
-        "orders_no_lineitem": q_orders_no_lineitem,
-        "top_docs_per_lang": q_top_docs_per_lang,
-        "revenue_by_nation": q_revenue_by_nation,
-        "domain_rollup": q_domain_rollup,
-        "doc_length_quantiles": q_doc_length_quantiles,
-        "lineitem_summary": q_lineitem_summary,
-        "events_by_type_day": q_events_by_type_day,
-        # -- group (3): recorded green in CORRECTNESS_r04, prior order --
-        "lang_bytes_rollup": q_lang_bytes_rollup,
-        "line_metrics_totals": q_line_metrics_totals,
-        "quality_keep_by_lang": q_quality_keep_by_lang,
-        "scrub_pii": q_scrub_pii,
-        "token_count_by_source": q_token_count_by_source,
-        "exact_dedup": q_exact_dedup,
-        "cascade_extmap": q_cascade_extmap,
-        "cascade_wide": q_cascade_wide,
-        "cascade_heuristics": q_cascade_heuristics,
-        "keep_reason_rollup": q_keep_reason_rollup,
-        "unknown_rollup": q_unknown_rollup,
-        "minsize_other": q_minsize_other,
-        "top_langs": q_top_langs,
-        "ccnet_buckets": q_ccnet_buckets,
-        "cross_corpus_dedup": q_cross_corpus_dedup,
-        # -- the driver's 50-row cap lands here (entries below were all
-        #    hash-green in CORRECTNESS_r04 and rotate back to the front of
-        #    group (2) next round; tests/test_entry_queries.py sweeps them
-        #    against DuckDB every run regardless) --
-        "user_sessions": q_user_sessions,
-        "event_rate_windows": q_event_rate_windows,
-        "sequence_packing": q_sequence_packing,
-        "ann_topk": q_ann_topk,
-        "langid_dist": q_langid_dist,
-        "gopher_quality": q_gopher_quality,
-        "gopher_repetition": q_gopher_repetition,
-        "quality_funnel": q_quality_funnel,
-        "line_dedup": q_line_dedup,
-        "bloom_dedup": q_bloom_dedup,
-        "pipeline_labels": q_pipeline_labels,
-        "ivf_ann_topk": q_ivf_ann_topk,
-        "embedding_near_dup": q_embedding_near_dup,
-        "semantic_dedup": q_semantic_dedup,
-        "dedup_cardinality": q_dedup_cardinality,
-        "minhash_pairs": q_minhash_pairs,
-        "simhash_pairs": q_simhash_pairs,
-        "lsh_ann_topk": q_lsh_ann_topk,
-        "media_features": q_media_features,
-        "html_extract": q_html_extract,
-        "paragraph_dedup": q_paragraph_dedup,
-        "decontaminate": q_decontaminate,
-        "url_canonical": q_url_canonical,
-        "url_dedup": q_url_dedup,
-        "stratified_sample": q_stratified_sample,
-        "dsir_scores": q_dsir_scores,
-        "training_mix": q_training_mix,
-        "warc_roundtrip": q_warc_roundtrip,
-        "repetition_scores": q_repetition_scores,
-        "blocked_domains": q_blocked_domains,
-        "fitted_perplexity": q_fitted_perplexity,
-        "c4_clean": q_c4_clean,
-        "near_dup_clusters": q_near_dup_clusters,
-        "lang_mismatch": q_lang_mismatch,
-        "duplicated_spans": q_duplicated_spans,
-        "boilerplate_stats": q_boilerplate_stats,
-    }
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracles
 # ---------------------------------------------------------------------------
@@ -4842,8 +4714,8 @@ def _bpe_twin(num_merges: int = 12):
     """Shared twin run for the THREE BPE oracles: (id,text) rows, word
     counts, and merges learned locally (independent reimplementation,
     pinned bit-for-bit against the Spark fold in tests/test_bpe.py) over
-    the oracle SF's documents. lru_cached — oracle_sql() is rebuilt per
-    parametrized test and would otherwise re-learn per call."""
+    the oracle SF's documents. lru_cached so the three oracles, and repeat
+    oracle_sql() calls, learn the merges once."""
     import duckdb
 
     from linguistjs_spark.operators.bpe import (
@@ -4921,20 +4793,24 @@ FROM p GROUP BY bucket
 """
 
 
-def oracle_sql() -> dict[str, str]:
-    from linguistjs_spark.operators.retrieval import (
-        bm25_oracle_sql, keyword_topk_oracle_sql)
+# ---------------------------------------------------------------------------
+# registry: one row per query, name -> (query, oracle). The oracle is the
+# DuckDB SQL itself or the zero-argument function that makes it; that function
+# runs only when its own entry's oracle is asked for.
+# ---------------------------------------------------------------------------
 
-    return {
-        "model_quality": _model_quality_oracle_sql(),
-        "bpe_packing": _bpe_packing_oracle_sql(),
-        "bm25_topk": bm25_oracle_sql(_BM25_TERMS, k=25),
-        "readability_bands": _readability_oracle_sql(),
-        "keywords_topk": keyword_topk_oracle_sql(k=3),
-        "model_quality_buckets": _model_quality_buckets_oracle_sql(),
-        "bpe_merges": _bpe_merges_oracle_sql(),
-        "bpe_token_counts": _bpe_token_counts_oracle_sql(),
-        "crawl_politeness": f"""
+_REGISTRY: dict[
+    str, tuple[Callable[[SparkSession, str], DataFrame], str | Callable[[], str]]
+] = {
+    "model_quality": (q_model_quality, _model_quality_oracle_sql),
+    "bpe_packing": (q_bpe_packing, _bpe_packing_oracle_sql),
+    "bm25_topk": (q_bm25_topk, _functools.partial(bm25_oracle_sql, _BM25_TERMS, k=25)),
+    "readability_bands": (q_readability_bands, _readability_oracle_sql),
+    "keywords_topk": (q_keywords_topk, _functools.partial(keyword_topk_oracle_sql, k=3)),
+    "model_quality_buckets": (q_model_quality_buckets, _model_quality_buckets_oracle_sql),
+    "bpe_merges": (q_bpe_merges, _bpe_merges_oracle_sql),
+    "bpe_token_counts": (q_bpe_token_counts, _bpe_token_counts_oracle_sql),
+    "crawl_politeness": (q_crawl_politeness, f"""
 WITH frontier AS ({_MESSY_URL_SQL}),
 ranked AS (
   SELECT doc_id,
@@ -4949,18 +4825,17 @@ SELECT doc_id, host,
        CAST(rn // 7 AS BIGINT) AS batch,
        CAST(rn % 7 AS BIGINT) AS slot
 FROM ranked
-""",
-        "lang_bytes_rollup": (
-            "SELECT lang, CAST(SUM(strlen(text)) AS BIGINT) AS bytes, "
-            "COUNT(*) AS n_docs FROM documents GROUP BY lang"
-        ),
-        "line_metrics_totals": (
-            f"SELECT CAST(SUM(len({_LINES})) AS BIGINT) AS lines_total, "
-            f"CAST(SUM(len({_NONBLANK})) AS BIGINT) AS lines_content, "
-            "COUNT(*) AS n_docs FROM documents"
-        ),
-        "quality_keep_by_lang": _QUALITY_CTE
-        + """
+"""),
+    "lang_bytes_rollup": (q_lang_bytes_rollup, (
+        "SELECT lang, CAST(SUM(strlen(text)) AS BIGINT) AS bytes, "
+        "COUNT(*) AS n_docs FROM documents GROUP BY lang"
+    )),
+    "line_metrics_totals": (q_line_metrics_totals, (
+        f"SELECT CAST(SUM(len({_LINES})) AS BIGINT) AS lines_total, "
+        f"CAST(SUM(len({_NONBLANK})) AS BIGINT) AS lines_content, "
+        "COUNT(*) AS n_docs FROM documents"
+    )),
+    "quality_keep_by_lang": (q_quality_keep_by_lang, _QUALITY_CTE + """
             SELECT lang, COUNT(*) AS n_docs,
                    CAST(SUM(CASE WHEN n_words BETWEEN 5 AND 1000000
                                   AND mean_wl BETWEEN 2.0 AND 12.0
@@ -4969,27 +4844,27 @@ FROM ranked
                    CAST(SUM(CASE WHEN n_words < 5 OR n_words > 1000000
                             THEN 1 ELSE 0 END) AS BIGINT) AS n_drop_words
             FROM q GROUP BY lang
-        """,
-        "scrub_pii": (
-            "SELECT doc_id, " + _SCRUB_SQL_CHAIN + " AS scrubbed "
-            "FROM documents WHERE doc_id % 20 = 0"
-        ),
-        "token_count_by_source": (
-            f"SELECT source, CAST(SUM(len({_WORDS})) AS BIGINT) AS n_tokens, "
-            "CAST(SUM(len(regexp_extract_all(text, "
-            "'[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]'))) AS BIGINT) AS n_bpe_tokens, "
-            "CAST(SUM(strlen(text)) AS BIGINT) AS bytes "
-            "FROM documents GROUP BY source"
-        ),
-        "exact_dedup": (
-            "SELECT COUNT(*) AS n_docs, COUNT(DISTINCT md5(text)) AS n_unique "
-            "FROM documents"
-        ),
-        "cascade_extmap": (
-            "SELECT lang, COUNT(*) AS n_docs, CAST(SUM(strlen(text)) AS BIGINT) AS bytes "
-            f"FROM (SELECT {_CASCADE_CASE} AS lang, text FROM documents) GROUP BY lang"
-        ),
-        "keep_reason_rollup": f"""
+        """),
+    "scrub_pii": (q_scrub_pii, (
+        "SELECT doc_id, " + _SCRUB_SQL_CHAIN + " AS scrubbed "
+        "FROM documents WHERE doc_id % 20 = 0"
+    )),
+    "token_count_by_source": (q_token_count_by_source, (
+        f"SELECT source, CAST(SUM(len({_WORDS})) AS BIGINT) AS n_tokens, "
+        "CAST(SUM(len(regexp_extract_all(text, "
+        "'[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]'))) AS BIGINT) AS n_bpe_tokens, "
+        "CAST(SUM(strlen(text)) AS BIGINT) AS bytes "
+        "FROM documents GROUP BY source"
+    )),
+    "exact_dedup": (q_exact_dedup, (
+        "SELECT COUNT(*) AS n_docs, COUNT(DISTINCT md5(text)) AS n_unique "
+        "FROM documents"
+    )),
+    "cascade_extmap": (q_cascade_extmap, (
+        "SELECT lang, COUNT(*) AS n_docs, CAST(SUM(strlen(text)) AS BIGINT) AS bytes "
+        f"FROM (SELECT {_CASCADE_CASE} AS lang, text FROM documents) GROUP BY lang"
+    )),
+    "keep_reason_rollup": (q_keep_reason_rollup, f"""
             WITH q AS (
               SELECT doc_id, text,
                      len({_WORDS}) AS n_words,
@@ -5023,38 +4898,38 @@ FROM ranked
                    CAST(GROUPING(lang, keep_reason) AS BIGINT) AS grp
             FROM lab
             GROUP BY GROUPING SETS ((lang, keep_reason), (lang), ())
-        """,
-        "unknown_rollup": (
-            # doc_id%10==0 rows lose their .txt ext -> filename 'docN' unknown;
-            # everything else classifies to a language
-            "SELECT 'filenames' AS kind, 'doc' || CAST(doc_id AS VARCHAR) AS name, "
-            "CAST(strlen(text) AS BIGINT) AS bytes, CAST(1 AS BIGINT) AS n_docs "
-            "FROM documents WHERE doc_id % 10 = 0 ORDER BY kind, name"
-        ),
-        "minsize_other": (
-            "WITH r AS (SELECT lang, CAST(SUM(strlen(text)) AS BIGINT) AS bytes, "
-            "COUNT(*) AS n_docs FROM documents GROUP BY lang) "
-            "SELECT CASE WHEN bytes < 40000 THEN 'Other' ELSE lang END AS lang, "
-            "CAST(SUM(bytes) AS BIGINT) AS bytes, CAST(SUM(n_docs) AS BIGINT) AS n_docs "
-            "FROM r GROUP BY 1"
-        ),
-        "top_langs": (
-            "WITH r AS (SELECT lang, CAST(SUM(strlen(text)) AS BIGINT) AS bytes "
-            "FROM documents GROUP BY lang), t AS (SELECT SUM(bytes) AS _t FROM r) "
-            "SELECT lang, bytes, CAST(10000 * bytes // _t AS BIGINT) AS pct_bp "
-            "FROM r, t ORDER BY bytes DESC, lang ASC LIMIT 5"
-        ),
-        "ann_topk": (
-            "SELECT vec_id, ROUND(list_inner_product(embedding::DOUBLE[], q.qv) / "
-            "SQRT(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) * "
-            "list_inner_product(q.qv, q.qv)), 4) AS score_r "
-            "FROM embeddings, (SELECT embedding::DOUBLE[] AS qv FROM embeddings "
-            "WHERE vec_id = 0) q "
-            "ORDER BY list_inner_product(embedding::DOUBLE[], q.qv) / "
-            "SQRT(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) * "
-            "list_inner_product(q.qv, q.qv)) DESC, vec_id ASC LIMIT 10"
-        ),
-        "cross_corpus_dedup": r"""
+        """),
+    "unknown_rollup": (q_unknown_rollup, (
+        # doc_id%10==0 rows lose their .txt ext -> filename 'docN' unknown;
+        # everything else classifies to a language
+        "SELECT 'filenames' AS kind, 'doc' || CAST(doc_id AS VARCHAR) AS name, "
+        "CAST(strlen(text) AS BIGINT) AS bytes, CAST(1 AS BIGINT) AS n_docs "
+        "FROM documents WHERE doc_id % 10 = 0 ORDER BY kind, name"
+    )),
+    "minsize_other": (q_minsize_other, (
+        "WITH r AS (SELECT lang, CAST(SUM(strlen(text)) AS BIGINT) AS bytes, "
+        "COUNT(*) AS n_docs FROM documents GROUP BY lang) "
+        "SELECT CASE WHEN bytes < 40000 THEN 'Other' ELSE lang END AS lang, "
+        "CAST(SUM(bytes) AS BIGINT) AS bytes, CAST(SUM(n_docs) AS BIGINT) AS n_docs "
+        "FROM r GROUP BY 1"
+    )),
+    "top_langs": (q_top_langs, (
+        "WITH r AS (SELECT lang, CAST(SUM(strlen(text)) AS BIGINT) AS bytes "
+        "FROM documents GROUP BY lang), t AS (SELECT SUM(bytes) AS _t FROM r) "
+        "SELECT lang, bytes, CAST(10000 * bytes // _t AS BIGINT) AS pct_bp "
+        "FROM r, t ORDER BY bytes DESC, lang ASC LIMIT 5"
+    )),
+    "ann_topk": (q_ann_topk, (
+        "SELECT vec_id, ROUND(list_inner_product(embedding::DOUBLE[], q.qv) / "
+        "SQRT(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) * "
+        "list_inner_product(q.qv, q.qv)), 4) AS score_r "
+        "FROM embeddings, (SELECT embedding::DOUBLE[] AS qv FROM embeddings "
+        "WHERE vec_id = 0) q "
+        "ORDER BY list_inner_product(embedding::DOUBLE[], q.qv) / "
+        "SQRT(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) * "
+        "list_inner_product(q.qv, q.qv)) DESC, vec_id ASC LIMIT 10"
+    )),
+    "cross_corpus_dedup": (q_cross_corpus_dedup, r"""
             WITH w AS (
               SELECT doc_id,
                      list_filter(string_split(trim(lower(regexp_replace(
@@ -5084,8 +4959,8 @@ FROM ranked
                              ORDER BY jaccard DESC, ref_id ASC) AS rn
                   FROM hits)
             WHERE rn = 1
-        """,
-        "jaccard_pairs": r"""
+        """),
+    "jaccard_pairs": (q_jaccard_pairs, r"""
             WITH w AS (
               SELECT doc_id,
                      list_filter(string_split(trim(lower(regexp_replace(
@@ -5106,11 +4981,10 @@ FROM ranked
                         / len(list_distinct(list_concat(a.sh, b.sh)))) AS BIGINT)
                    AS jac_ppm
             FROM s a, s b WHERE a.doc_id < b.doc_id
-        """,
-        "winnow_fingerprints": _WINNOW_CTE.format(
-            src="SELECT doc_id, text FROM documents"
-        )
-        + """
+        """),
+    "winnow_fingerprints": (q_winnow_fingerprints, _WINNOW_CTE.format(
+        src="SELECT doc_id, text FROM documents"
+    ) + """
             SELECT doc_id, CAST(n_shingles AS BIGINT) AS n_shingles,
                    CAST(len(fps) AS BIGINT) AS n_fp,
                    list_aggregate(fps, 'min') AS fp_min,
@@ -5118,14 +4992,13 @@ FROM ranked
                    CAST(coalesce(list_reduce(fps, (a, b) -> xor(a, b)), 0)
                         AS BIGINT) AS fp_xor
             FROM fp ORDER BY doc_id
-        """,
-        "winnow_pairs": _WINNOW_CTE.format(
-            src="""
+        """),
+    "winnow_pairs": (q_winnow_pairs, _WINNOW_CTE.format(
+        src="""
   SELECT doc_id, text FROM documents
   UNION ALL
   SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 15"""
-        )
-        + """
+    ) + """
             , post AS (SELECT doc_id, unnest(fps) AS f FROM fp),
             ok AS (SELECT f FROM post GROUP BY f HAVING COUNT(*) <= 64),
             kept AS (SELECT doc_id, f FROM post JOIN ok USING (f))
@@ -5133,8 +5006,8 @@ FROM ranked
                    COUNT(*) AS n_shared
             FROM kept a JOIN kept b ON a.f = b.f AND a.doc_id < b.doc_id
             GROUP BY a.doc_id, b.doc_id HAVING COUNT(*) >= 2
-        """,
-        "temperature_mix": """
+        """),
+    "temperature_mix": (q_temperature_mix, """
             WITH c AS (
               SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang
             ), t AS (
@@ -5154,12 +5027,12 @@ FROM ranked
                    CAST(k.n_kept AS BIGINT) AS n_kept
             FROM c CROSS JOIN t JOIN k USING (lang)
             ORDER BY lang
-        """,
-        "image_near_dup": _image_near_dup_oracle_sql(),
-        "domain_pagerank": _domain_pagerank_oracle_sql(),
-        "anchor_stats": _anchor_stats_oracle_sql(),
-        "noindex_filter": _noindex_filter_oracle_sql(),
-        "shingle_stats": r"""
+        """),
+    "image_near_dup": (q_image_near_dup, _image_near_dup_oracle_sql),
+    "domain_pagerank": (q_domain_pagerank, _domain_pagerank_oracle_sql),
+    "anchor_stats": (q_anchor_stats, _anchor_stats_oracle_sql),
+    "noindex_filter": (q_noindex_filter, _noindex_filter_oracle_sql),
+    "shingle_stats": (q_shingle_stats, r"""
             WITH w AS (
               SELECT source,
                      list_filter(string_split(trim(lower(regexp_replace(
@@ -5175,8 +5048,8 @@ FROM ranked
                         ELSE 1 END) AS BIGINT) AS n_shingles,
                    COUNT(*) AS n_docs
             FROM w GROUP BY source
-        """,
-        "user_sessions": """
+        """),
+    "user_sessions": (q_user_sessions, """
             WITH s AS (
               SELECT user_id,
                      CASE WHEN lag(ts) OVER
@@ -5190,30 +5063,30 @@ FROM ranked
             SELECT user_id, CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
                    COUNT(*) AS n_events
             FROM s GROUP BY user_id
-        """,
-        "event_rate_windows": (
-            # tumbling window start = epoch floor-div by 6h; events ts are
-            # timestamps, compare via epoch arithmetic in both engines
-            "SELECT CAST(to_timestamp(CAST(epoch(ts) AS BIGINT) // 21600 * 21600) "
-            "AS TIMESTAMP) AS win_start, event_type, COUNT(*) AS n_events, "
-            "COUNT(DISTINCT user_id) AS n_users "
-            "FROM events GROUP BY 1, 2"
-        ),
-        "doc_length_quantiles": (
-            "SELECT source, "
-            "CAST(ROUND(quantile_cont(strlen(text), 0.5) * 100) AS BIGINT) AS p50_c, "
-            "CAST(ROUND(quantile_cont(strlen(text), 0.9) * 100) AS BIGINT) AS p90_c, "
-            "CAST(ROUND(quantile_cont(strlen(text), 0.99) * 100) AS BIGINT) AS p99_c, "
-            "COUNT(*) AS n_docs "
-            "FROM documents GROUP BY source"
-        ),
-        "events_by_type_day": (
-            "SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, "
-            "COUNT(*) AS n_events, "
-            "CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_cents "
-            "FROM events GROUP BY 1, 2"
-        ),
-        "sequence_packing": """
+        """),
+    "event_rate_windows": (q_event_rate_windows, (
+        # tumbling window start = epoch floor-div by 6h; events ts are
+        # timestamps, compare via epoch arithmetic in both engines
+        "SELECT CAST(to_timestamp(CAST(epoch(ts) AS BIGINT) // 21600 * 21600) "
+        "AS TIMESTAMP) AS win_start, event_type, COUNT(*) AS n_events, "
+        "COUNT(DISTINCT user_id) AS n_users "
+        "FROM events GROUP BY 1, 2"
+    )),
+    "doc_length_quantiles": (q_doc_length_quantiles, (
+        "SELECT source, "
+        "CAST(ROUND(quantile_cont(strlen(text), 0.5) * 100) AS BIGINT) AS p50_c, "
+        "CAST(ROUND(quantile_cont(strlen(text), 0.9) * 100) AS BIGINT) AS p90_c, "
+        "CAST(ROUND(quantile_cont(strlen(text), 0.99) * 100) AS BIGINT) AS p99_c, "
+        "COUNT(*) AS n_docs "
+        "FROM documents GROUP BY source"
+    )),
+    "events_by_type_day": (q_events_by_type_day, (
+        "SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, "
+        "COUNT(*) AS n_events, "
+        "CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_cents "
+        "FROM events GROUP BY 1, 2"
+    )),
+    "sequence_packing": (q_sequence_packing, """
 WITH t AS (
   SELECT doc_id, doc_id % 32 AS bucket,
          COALESCE(len(regexp_extract_all(text,
@@ -5232,40 +5105,40 @@ SELECT bucket, COUNT(*) AS n_docs,
                 THEN 1 ELSE 0 END) AS BIGINT) AS n_straddling,
        CAST(SUM(FLOOR(o / 512) * doc_id) AS BIGINT) AS assign_checksum
 FROM p GROUP BY bucket
-""",
-        "lineitem_summary": (
-            "SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items, "
-            "CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty, "
-            "CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) "
-            "AS sum_price_cents "
-            "FROM lineitem GROUP BY l_returnflag, l_linestatus"
-        ),
-        "langid_dist": _langid_oracle_sql(),
-        "lang_mismatch": _lang_mismatch_oracle_sql(),
-        "cascade_wide": _cascade_wide_oracle_sql(),
-        "cascade_heuristics": _cascade_heuristics_oracle_sql(),
-        "pipeline_labels": _pipeline_labels_oracle_sql(),
-        "minhash_pairs": _MINHASH_PAIRS_SQL,
-        "simhash_pairs": _simhash_pairs_oracle_sql(),
-        "lsh_ann_topk": _lsh_ann_oracle_sql(),
-        "bitext_mining": _bitext_mining_oracle_sql(),
-        "compression_signal": _compression_signal_oracle_sql(),
-        "corpus_card": _corpus_card_oracle_sql(),
-        "crawl_delay_schedule": _crawl_delay_schedule_oracle_sql(),
-        "url_tracking_dedup": _url_tracking_oracle_sql(),
-        "crawl_frontier_priority": _crawl_frontier_priority_oracle_sql(),
-        "pii_counts": _pii_counts_oracle_sql(),
-        "unicode_normalize": _unicode_norm_oracle_sql(),
-        "mojibake_filter": _mojibake_oracle_sql(),
-        "domain_cap": _DOMAIN_CAP_SQL,
-        "ivf_ann_topk": _ivf_ann_oracle_sql(),
-        "html_extract": _html_extract_oracle_sql(),
-        "boilerplate_stats": _boilerplate_oracle_sql(),
-        "stratified_sample": _stratified_sample_oracle_sql(),
-        "training_mix": _training_mix_oracle_sql(),
-        "ccnet_buckets": _ccnet_buckets_oracle_sql(),
-        "gopher_quality": _GOPHER_QUALITY_SQL,
-        "line_dedup": r"""
+"""),
+    "lineitem_summary": (q_lineitem_summary, (
+        "SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items, "
+        "CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty, "
+        "CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) "
+        "AS sum_price_cents "
+        "FROM lineitem GROUP BY l_returnflag, l_linestatus"
+    )),
+    "langid_dist": (q_langid_dist, _langid_oracle_sql),
+    "lang_mismatch": (q_lang_mismatch, _lang_mismatch_oracle_sql),
+    "cascade_wide": (q_cascade_wide, _cascade_wide_oracle_sql),
+    "cascade_heuristics": (q_cascade_heuristics, _cascade_heuristics_oracle_sql),
+    "pipeline_labels": (q_pipeline_labels, _pipeline_labels_oracle_sql),
+    "minhash_pairs": (q_minhash_pairs, _MINHASH_PAIRS_SQL),
+    "simhash_pairs": (q_simhash_pairs, _simhash_pairs_oracle_sql),
+    "lsh_ann_topk": (q_lsh_ann_topk, _lsh_ann_oracle_sql),
+    "bitext_mining": (q_bitext_mining, _bitext_mining_oracle_sql),
+    "compression_signal": (q_compression_signal, _compression_signal_oracle_sql),
+    "corpus_card": (q_corpus_card, _corpus_card_oracle_sql),
+    "crawl_delay_schedule": (q_crawl_delay_schedule, _crawl_delay_schedule_oracle_sql),
+    "url_tracking_dedup": (q_url_tracking_dedup, _url_tracking_oracle_sql),
+    "crawl_frontier_priority": (q_crawl_frontier_priority, _crawl_frontier_priority_oracle_sql),
+    "pii_counts": (q_pii_counts, _pii_counts_oracle_sql),
+    "unicode_normalize": (q_unicode_normalize, _unicode_norm_oracle_sql),
+    "mojibake_filter": (q_mojibake_filter, _mojibake_oracle_sql),
+    "domain_cap": (q_domain_cap, _DOMAIN_CAP_SQL),
+    "ivf_ann_topk": (q_ivf_ann_topk, _ivf_ann_oracle_sql),
+    "html_extract": (q_html_extract, _html_extract_oracle_sql),
+    "boilerplate_stats": (q_boilerplate_stats, _boilerplate_oracle_sql),
+    "stratified_sample": (q_stratified_sample, _stratified_sample_oracle_sql),
+    "training_mix": (q_training_mix, _training_mix_oracle_sql),
+    "ccnet_buckets": (q_ccnet_buckets, _ccnet_buckets_oracle_sql),
+    "gopher_quality": (q_gopher_quality, _GOPHER_QUALITY_SQL),
+    "line_dedup": (q_line_dedup, r"""
 WITH s AS (SELECT doc_id, string_split_regex(text, '\r?\n') AS lines
            FROM documents),
 l AS (SELECT doc_id, t.i AS idx, lines[t.i] AS line
@@ -5280,80 +5153,124 @@ SELECT doc_id,
        CAST(length(string_agg(line, chr(10) ORDER BY idx)) AS BIGINT)
          AS clean_chars
 FROM k WHERE rn = 1 OR blank GROUP BY doc_id
-""",
-        "gopher_repetition": _gopher_repetition_oracle_sql(),
-        "quality_funnel": _quality_funnel_oracle_sql(),
-        "bloom_dedup": _bloom_dedup_oracle_sql(),
-        "warc_roundtrip": """
+"""),
+    "gopher_repetition": (q_gopher_repetition, _gopher_repetition_oracle_sql),
+    "quality_funnel": (q_quality_funnel, _quality_funnel_oracle_sql),
+    "bloom_dedup": (q_bloom_dedup, _bloom_dedup_oracle_sql),
+    "warc_roundtrip": (q_warc_roundtrip, """
 SELECT 'https://' || source || '.example/doc/' || CAST(doc_id AS VARCHAR)
          AS url,
        CAST(coalesce(strlen(text), 0) AS BIGINT) AS n_bytes
 FROM documents
-""",
-        "warc_chunked_roundtrip": """
+"""),
+    "warc_chunked_roundtrip": (q_warc_chunked_roundtrip, """
 SELECT 'https://' || source || '.example/chunked/' || CAST(doc_id AS VARCHAR)
          AS url,
        CAST(coalesce(strlen(text), 0) AS BIGINT) AS n_bytes
 FROM documents WHERE doc_id % 20 = 0
-""",
-        "heuristics_delta": _heuristics_delta_oracle_sql(),
-        "robots_rules": _robots_rules_oracle_sql(),
-        "robots_disallow": _robots_disallow_oracle_sql(),
-        "robots_allow_precedence": _robots_allow_precedence_oracle_sql(),
-        "sitemap_urls": _SITEMAP_URLS_SQL,
-        "dedup_keep_policy": _dedup_keep_policy_sql(),
-        "domain_quality": _domain_quality_oracle_sql(),
-        "crawl_delta": _CRAWL_DELTA_SQL,
-        "snapshot_merge": _SNAPSHOT_MERGE_SQL,
-        "fitted_perplexity": _fitted_perplexity_oracle_sql(),
-        "paragraph_dedup": _PARAGRAPH_DEDUP_SQL,
-        "repetition_scores": _REPETITION_SQL,
-        "c4_clean": _C4_CLEAN_SQL,
-        "near_dup_clusters": _near_dup_clusters_sql(),
-        "duplicated_spans": _DUPLICATED_SPANS_SQL,
-        "dsir_scores": _dsir_oracle_sql(),
-        "semantic_dedup": _semantic_dedup_oracle_sql(),
-        "blocked_domains": (
-            "SELECT doc_id, lower(source) || '.example' AS domain "
-            "FROM documents "
-            "WHERE lower(source) || '.example' "
-            "NOT IN ('src1.example', 'src13.example')"
-        ),
-        "decontaminate": _DECONTAMINATE_SQL,
-        "url_canonical": _URL_CANONICAL_SQL,
-        "url_dedup": _URL_DEDUP_SQL,
-        "domain_rollup": _DOMAIN_ROLLUP_SQL,
-        "embedding_near_dup": _EMB_NEAR_DUP_SQL,
-        "dedup_cardinality": _DEDUP_CARDINALITY_SQL,
-        "media_features": _MEDIA_FEATURES_SQL,
-        "shipped_revenue_window": (
-            "SELECT l_returnflag, COUNT(*) AS n_items, "
-            "CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) "
-            "AS price_cents FROM lineitem "
-            "WHERE l_shipdate >= TIMESTAMP '1995-01-01' "
-            "AND l_shipdate < TIMESTAMP '1996-01-01' "
-            "GROUP BY l_returnflag"
-        ),
-        "revenue_by_nation": (
-            "SELECT n_name AS nation, COUNT(*) AS n_items, "
-            "CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) "
-            "AS BIGINT)) AS BIGINT) AS revenue_cents "
-            "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "JOIN nation ON c_nationkey = n_nationkey "
-            "GROUP BY n_name"
-        ),
-        "orders_no_lineitem": (
-            "SELECT o_orderpriority AS priority, COUNT(*) AS n_orders "
-            "FROM orders o WHERE NOT EXISTS "
-            "(SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey) "
-            "GROUP BY o_orderpriority"
-        ),
-        "top_docs_per_lang": (
-            "SELECT lang, doc_id, bytes, rk FROM ("
-            "SELECT lang, doc_id, CAST(strlen(text) AS BIGINT) AS bytes, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY lang "
-            "ORDER BY strlen(text) DESC, doc_id ASC) AS BIGINT) AS rk "
-            "FROM documents) WHERE rk <= 3"
-        ),
-    }
+"""),
+    "heuristics_delta": (q_heuristics_delta, _heuristics_delta_oracle_sql),
+    "robots_rules": (q_robots_rules, _robots_rules_oracle_sql),
+    "robots_disallow": (q_robots_disallow, _robots_disallow_oracle_sql),
+    "robots_allow_precedence": (q_robots_allow_precedence, _robots_allow_precedence_oracle_sql),
+    "sitemap_urls": (q_sitemap_urls, _SITEMAP_URLS_SQL),
+    "dedup_keep_policy": (q_dedup_keep_policy, _dedup_keep_policy_sql),
+    "domain_quality": (q_domain_quality, _domain_quality_oracle_sql),
+    "crawl_delta": (q_crawl_delta, _CRAWL_DELTA_SQL),
+    "snapshot_merge": (q_snapshot_merge, _SNAPSHOT_MERGE_SQL),
+    "fitted_perplexity": (q_fitted_perplexity, _fitted_perplexity_oracle_sql),
+    "paragraph_dedup": (q_paragraph_dedup, _PARAGRAPH_DEDUP_SQL),
+    "repetition_scores": (q_repetition_scores, _REPETITION_SQL),
+    "c4_clean": (q_c4_clean, _C4_CLEAN_SQL),
+    "near_dup_clusters": (q_near_dup_clusters, _near_dup_clusters_sql),
+    "duplicated_spans": (q_duplicated_spans, _DUPLICATED_SPANS_SQL),
+    "dsir_scores": (q_dsir_scores, _dsir_oracle_sql),
+    "semantic_dedup": (q_semantic_dedup, _semantic_dedup_oracle_sql),
+    "blocked_domains": (q_blocked_domains, (
+        "SELECT doc_id, lower(source) || '.example' AS domain "
+        "FROM documents "
+        "WHERE lower(source) || '.example' "
+        "NOT IN ('src1.example', 'src13.example')"
+    )),
+    "decontaminate": (q_decontaminate, _DECONTAMINATE_SQL),
+    "url_canonical": (q_url_canonical, _URL_CANONICAL_SQL),
+    "url_dedup": (q_url_dedup, _URL_DEDUP_SQL),
+    "domain_rollup": (q_domain_rollup, _DOMAIN_ROLLUP_SQL),
+    "embedding_near_dup": (q_embedding_near_dup, _EMB_NEAR_DUP_SQL),
+    "dedup_cardinality": (q_dedup_cardinality, _DEDUP_CARDINALITY_SQL),
+    "media_features": (q_media_features, _MEDIA_FEATURES_SQL),
+    "shipped_revenue_window": (q_shipped_revenue_window, (
+        "SELECT l_returnflag, COUNT(*) AS n_items, "
+        "CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) "
+        "AS price_cents FROM lineitem "
+        "WHERE l_shipdate >= TIMESTAMP '1995-01-01' "
+        "AND l_shipdate < TIMESTAMP '1996-01-01' "
+        "GROUP BY l_returnflag"
+    )),
+    "revenue_by_nation": (q_revenue_by_nation, (
+        "SELECT n_name AS nation, COUNT(*) AS n_items, "
+        "CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) "
+        "AS BIGINT)) AS BIGINT) AS revenue_cents "
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
+        "JOIN customer ON o_custkey = c_custkey "
+        "JOIN nation ON c_nationkey = n_nationkey "
+        "GROUP BY n_name"
+    )),
+    "orders_no_lineitem": (q_orders_no_lineitem, (
+        "SELECT o_orderpriority AS priority, COUNT(*) AS n_orders "
+        "FROM orders o WHERE NOT EXISTS "
+        "(SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey) "
+        "GROUP BY o_orderpriority"
+    )),
+    "top_docs_per_lang": (q_top_docs_per_lang, (
+        "SELECT lang, doc_id, bytes, rk FROM ("
+        "SELECT lang, doc_id, CAST(strlen(text) AS BIGINT) AS bytes, "
+        "CAST(ROW_NUMBER() OVER (PARTITION BY lang "
+        "ORDER BY strlen(text) DESC, doc_id ASC) AS BIGINT) AS rk "
+        "FROM documents) WHERE rk <= 3"
+    )),
+}
+
+
+def _last_recorded_round() -> dict[str, int]:
+    """name -> the last round N whose CORRECTNESS_rN.json, next to this
+    file, holds a green row for it (rows, schema and hash match, no err)."""
+    here = _os.path.dirname(_os.path.abspath(__file__))
+    last: dict[str, int] = {}
+    for fname in _os.listdir(here):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if not m:
+            continue
+        with open(_os.path.join(here, fname)) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            green = all(row.get(k) is True
+                        for k in ("rows_match", "schema_match", "hash_match"))
+            if green and row.get("err") is None:
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registry query, least recently CORRECTNESS-recorded first.
+
+    Entries sort by the last round whose CORRECTNESS_rN.json (next to this
+    file) has a green row for them: rows, schema and hash match and no err.
+    Never-recorded entries count as round 0; ties, and the whole order when
+    no file is present, keep table order. A round records the first 50,
+    so each round records the entries that waited longest, and with 97
+    entries none goes two rounds unrecorded. tests/test_entry_queries.py
+    checks every entry against DuckDB regardless of order."""
+    last = _last_recorded_round()
+    order = sorted(_REGISTRY, key=lambda name: last.get(name, 0))
+    return {name: _REGISTRY[name][0] for name in order}
+
+
+def oracle(name: str) -> str:
+    """The DuckDB oracle SQL of one registry entry, building only that one."""
+    sql = _REGISTRY[name][1]
+    return sql if isinstance(sql, str) else sql()
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: oracle(name) for name in _REGISTRY}

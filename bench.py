@@ -1059,6 +1059,8 @@ def main() -> None:
     # VERDICT r04 item 6: isolate PageRank iteration time from fixed costs.
     # i1 and i3 share generation/dedup/normalization/count, so the
     # difference over two extra iterations is pure per-iteration shuffle.
+    # The two walls are minima of different runs, so only this difference
+    # is reported: fixed costs derived from it can come out negative.
     pagerank_split = None
     if "pagerank_20m_i1" in queries and "pagerank_20m_i3" in queries:
         per_iter = (queries["pagerank_20m_i3"]
@@ -1066,9 +1068,6 @@ def main() -> None:
         pagerank_split = {
             "edges": PR_EDGES,
             "per_iter_sec": round(per_iter, 3),
-            "setup_sec": round(queries["pagerank_20m_i3"] - 3 * per_iter, 3),
-            "iter_share_of_i3": round(
-                3 * per_iter / queries["pagerank_20m_i3"], 3),
         }
 
     # VERDICT r04 item 9: capability probe — visible, not silent. The

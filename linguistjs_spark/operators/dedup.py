@@ -163,6 +163,23 @@ def with_minhash(
     )
 
 
+def _banded(sigs: DataFrame, id_col: str, out_name: str,
+            bands: int, rows_per_band: int) -> DataFrame:
+    band_arr = F.array(
+        *[
+            F.xxhash64(
+                F.slice(F.col("signature"), i * rows_per_band + 1, rows_per_band),
+                F.lit(i),
+            )
+            for i in range(bands)
+        ]
+    )
+    return sigs.select(
+        F.col(id_col).alias(out_name),
+        F.posexplode(band_arr).alias("band_idx", "band_hash"),
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -175,18 +192,7 @@ def lsh_candidate_pairs(
     plans this as a shuffled hash join on the bucket key, which is exactly
     the 'hash the bands, join the buckets' LSH formulation — linear in
     bucket sizes instead of all-pairs."""
-    band_arr = F.array(
-        *[
-            F.xxhash64(
-                F.slice(F.col("signature"), i * rows_per_band + 1, rows_per_band),
-                F.lit(i),
-            )
-            for i in range(bands)
-        ]
-    )
-    banded = sigs.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band_idx", "band_hash")
-    )
+    banded = _banded(sigs, id_col, id_col, bands, rows_per_band)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -241,23 +247,6 @@ def minhash_dedup_pairs(
     sigs = with_minhash(docs, id_col, text_col, k, num_hashes)
     pairs = lsh_candidate_pairs(sigs, id_col, bands, num_hashes // bands)
     return jaccard_verify(pairs, sigs, id_col, threshold)
-
-
-def _banded(sigs: DataFrame, id_col: str, out_name: str,
-            bands: int, rows_per_band: int) -> DataFrame:
-    band_arr = F.array(
-        *[
-            F.xxhash64(
-                F.slice(F.col("signature"), i * rows_per_band + 1, rows_per_band),
-                F.lit(i),
-            )
-            for i in range(bands)
-        ]
-    )
-    return sigs.select(
-        F.col(id_col).alias(out_name),
-        F.posexplode(band_arr).alias("band_idx", "band_hash"),
-    )
 
 
 def cross_corpus_near_dup(

@@ -191,6 +191,8 @@ def test_parity_extract_html_config(spark):
          b"<p>ignored</p>"),
         ("https://p.example/c", None, b"PK\x00\x01binary"),
         ("https://p.example/d.html", None, None),
+        # HTML-only page on a vendored path
+        ("https://p.example/dist/e.html", None, synth_html(2, body).encode()),
     ]
     cfg = QualityFilterConfig(extract_html=True)
     pages = spark.createDataFrame(
@@ -203,3 +205,4 @@ def test_parity_extract_html_config(spark):
         g = got[url]
         assert (g.keep, g.keep_reason, g.lang, g.scrubbed_text) == \
                (want.keep, want.keep_reason, want.lang, want.scrubbed_text), url
+    assert got["https://p.example/dist/e.html"].keep_reason == "vendored"

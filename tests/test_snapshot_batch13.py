@@ -5,7 +5,7 @@ can state with confidence — `.lean` (Lean vs Lean 4, upstream's
 import-case discriminator), `.nr` (Roff vs Noir, upstream's leading-dot
 rule with Noir as the default), and `.workflow` (XML Automator documents
 vs HCL GitHub-Actions-v1 files; the HCL rule is a conservative DERIVED
-discriminator, see scripts/widen_heuristics13.py). Content cases live in
+discriminator, see linguistjs_spark/data/PROVENANCE.md). Content cases live in
 `_HEUR_CASES` (the batch-3 oracle + pipeline parity tests execute every
 rule branch); this module pins the memberships, rule order, and the
 fallback-to-first-candidate (C9) behavior for unmatched content.

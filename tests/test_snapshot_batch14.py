@@ -3,7 +3,7 @@
 Adds the `.mojo` group (Mojo vs XML — upstream carries this disambiguation
 because XML's extension list predates the Mojo language; the Mojo keyword
 gate is a conservative DERIVED discriminator, see
-scripts/widen_heuristics14.py). Pins membership, both rule branches, the
+linguistjs_spark/data/PROVENANCE.md). Pins membership, both rule branches, the
 multiline-anywhere semantics, and the C9 fallback-to-first-candidate for
 unmatched content. Reference semantics: /root/reference/src/index.ts:320-361
 (first matching rule wins, gated to candidates), :363-373 (C9 default).

@@ -3,7 +3,7 @@
 Adds the `.fx` (FLUX vs HLSL) and `.nb` (Mathematica vs Text) groups —
 both exist upstream; the claimant sets are the confidently-known public
 facts, the discriminator patterns are conservative DERIVED rules (see
-scripts/widen_heuristics15.py). Pins membership, every rule branch, the
+linguistjs_spark/data/PROVENANCE.md). Pins membership, every rule branch, the
 bare-fallback semantics (rules with no pattern always match — reference
 src/index.ts:331-336 treats an absent matcher as a pass-through), and the
 behavioral point of both fallbacks: C9's alphabetical default would pick

@@ -1,5 +1,5 @@
 """Batch-18 snapshot widening: upstream rule-SHAPE parity in existing
-groups (scripts/widen_heuristics18.py).
+groups (linguistjs_spark/data/PROVENANCE.md, batch 18).
 
 `.i` gains upstream's leading Motorola 68K rule (m68k signal family,
 reused from the `.s` group) — flipping the old moveq-content pin from the

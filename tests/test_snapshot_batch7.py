@@ -54,9 +54,10 @@ def test_batch7_claimant_sets():
 
 
 def test_batch7_every_contested_ext_is_grouped():
-    # closure property the widening scripts enforce one batch at a time:
-    # after batch 7 NO extension claimed by >1 snapshot language lacks a
-    # disambiguation group (shebang-routed .cgi/.fcgi excepted by design)
+    # closure property this test enforces for the whole snapshot (batch
+    # history in linguistjs_spark/data/PROVENANCE.md): NO extension claimed
+    # by >1 snapshot language lacks a disambiguation group (shebang-routed
+    # .cgi/.fcgi excepted by design)
     langs, heur = _load()
     grouped = {e.lower() for g in heur["disambiguations"]
                for e in g["extensions"]}
