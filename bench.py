@@ -4,44 +4,30 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 and prints ONE JSON line:
   {"metric": ..., "value": ..., "unit": "sec", "queries": {...}, "sf": ...,
-   "docs_per_sec": ..., "scaling": {...}}
+   "docs_per_sec": ..., "scaling_eff": {...}}
 
 Scaling evidence for the north rule (N -> 4N executors, efficiency >= 0.8):
 no real cluster exists in this sandbox, so the same pipeline job runs at
-local[N] and local[4N] (default N=8 -> 32) on identical input; efficiency =
-(T_N / T_4N) / 4. See BASELINE.md.
+local[N] and local[4N] (default N=2 -> 8, plus 4 -> 16) on identical input;
+efficiency = (T_N / T_4N) / 4. See BASELINE.md.
+
+Every measurement goes through `run_leg`; every session in a child process
+goes through `run_children`.
 """
 
 from __future__ import annotations
 
+import datetime
+import glob
 import json
 import os
+import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
-os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
-
-# Allocator policy for the python UDF workers (must be in the env BEFORE the
-# JVM starts — local-mode workers inherit it). The sandbox guest runs with
-# free-page reporting to the hypervisor (page_reporting_order=11 on the
-# kernel cmdline): any memory a process frees in >=8MB chunks is unmapped
-# host-side, and the next run's faults storm the kernel (measured 40-67%
-# host sys-time with ~0% user for 20-60s, 3-8x leg slowdowns). pyarrow's
-# default jemalloc pool decays dirty pages on a ~1s cadence — 16 workers x
-# 64MB Arrow batches = a constant release/refault churn that feeds exactly
-# that path. Routing Arrow through glibc (system pool) with trimming off and
-# a high mmap threshold makes workers KEEP their buffers: A/B over 8
-# alternating sessions (4 runs each, local[16], 80k docs) cut the
-# leg std-dev from ~5.5s to ~1.8s and the worst leg from 30.1s to 15.0s
-# (best-leg unchanged ~7-8s — this is tail-risk control, not speedup).
-# A real multi-executor cluster does not need these; they guard the
-# sandbox's measurement integrity.
-os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # default 16, not 32: the sandbox host carries ~5-8 load of background work,
@@ -67,13 +53,41 @@ REPLICATE = int(os.environ.get("SPARK_GRAFT_REPLICATE", "16"))
 # varies 5-12s run-to-run with neighbor load, and at 6x a 12s-fixed run
 # reads ~0.79 with clean parallel scaling; 8x keeps the floor above 0.8.
 SCALE_REPLICATE = int(os.environ.get("SPARK_GRAFT_SCALE_REPLICATE", str(REPLICATE * 8)))
-PARTS = int(os.environ.get("SPARK_GRAFT_PARTS", "128"))
-TEXT_X = int(os.environ.get("SPARK_GRAFT_TEXT_X", "4"))
+# edges in the pagerank_20m_i1/_i3 pair (the per-iteration split below)
+PR_EDGES = int(os.environ.get("SPARK_GRAFT_PR_EDGES", "20000000"))
+# Fixed, not settable: each one changes what the headline sums, so a run
+# that varied them could not be compared with the round records.
+PARTS = 128  # repartition width of the bench input
+TEXT_X = 4  # text scale-up to web-page size (see bench_pages)
+LEG_RUNS = 2  # timed runs per leg, before the storm retry
+# Pinned driver heap per session (-Xms, pre-touched at boot; see make_spark).
+# run_children checks MemAvailable against it before it starts sessions.
+HEAP_GIB = 8
 
 
 def make_spark(cores: int):
     from pyspark.sql import SparkSession
 
+    os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
+    os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
+    # Allocator policy for the python UDF workers (must be in the env BEFORE
+    # the JVM starts — local-mode workers inherit it). The sandbox guest runs
+    # with free-page reporting to the hypervisor (page_reporting_order=11 on
+    # the kernel cmdline): any memory a process frees in >=8MB chunks is
+    # unmapped host-side, and the next run's faults storm the kernel
+    # (measured 40-67% host sys-time with ~0% user for 20-60s, 3-8x leg
+    # slowdowns). pyarrow's default jemalloc pool decays dirty pages on a ~1s
+    # cadence — 16 workers x 64MB Arrow batches = a constant release/refault
+    # churn that feeds exactly that path. Routing Arrow through glibc (system
+    # pool) with trimming off and a high mmap threshold makes workers KEEP
+    # their buffers: A/B over 8 alternating sessions (4 runs each, local[16],
+    # 80k docs) cut the leg std-dev from ~5.5s to ~1.8s and the worst leg
+    # from 30.1s to 15.0s (best-leg unchanged ~7-8s — this is tail-risk
+    # control, not speedup). A real multi-executor cluster does not need
+    # these; they guard the sandbox's measurement integrity.
+    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(f"linguistjs-spark-bench-{cores}")
@@ -95,13 +109,14 @@ def make_spark(cores: int):
         # sys). Xms=8g stops G1 uncommitting below 8g; AlwaysPreTouch moves
         # the one-time fault-in to session boot, outside every timed leg.
         # A real cluster sets executor Xms==Xmx as a matter of course.
-        .config("spark.driver.extraJavaOptions", "-Xms8g -XX:+AlwaysPreTouch")
+        .config("spark.driver.extraJavaOptions",
+                f"-Xms{HEAP_GIB}g -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
 
 
-def bench_pages(spark, sf_dir: str, replicate: int):
+def bench_pages(spark, sf_dir: str, replicate: int, parts: int = PARTS):
     """Pipeline input: documents-derived pages replicated `replicate`x with
     distinct urls (pure column expressions, deterministic)."""
     from pyspark.sql import functions as F
@@ -116,13 +131,12 @@ def bench_pages(spark, sf_dir: str, replicate: int):
     # serial floor that flattened N->4N scaling). Repartitioning the 5k base
     # rows first keeps the serial write tiny; the broadcast replicate then
     # expands on already-parallel partitions.
-    pages = pages.repartition(PARTS, F.xxhash64("url"))
-    if TEXT_X > 1:
-        # web pages are ~2KB of text, the synthetic docs ~0.5KB: scale the
-        # per-row work to realistic page sizes (regex/classify cost is
-        # text-length-bound, so this is the honest throughput denominator)
-        pages = pages.withColumn("text", F.repeat(F.col("text"), TEXT_X))
-        pages = pages.withColumn("html", F.encode(F.col("text"), "UTF-8"))
+    pages = pages.repartition(parts, F.xxhash64("url"))
+    # web pages are ~2KB of text, the synthetic docs ~0.5KB: scale the
+    # per-row work to realistic page sizes (regex/classify cost is
+    # text-length-bound, so this is the honest throughput denominator)
+    pages = pages.withColumn("text", F.repeat(F.col("text"), TEXT_X))
+    pages = pages.withColumn("html", F.encode(F.col("text"), "UTF-8"))
     if replicate > 1:
         # Replica tag goes in the HOST, not appended to the path: a
         # "?r=N" suffix corrupts the extension (".js?r=5" misses the ext
@@ -139,10 +153,11 @@ def bench_pages(spark, sf_dir: str, replicate: int):
     return pages
 
 
-def build_pipeline_job(spark, sf_dir: str, replicate: int):
-    """The headline job as a DataFrame: full quality-filter pipeline ->
-    per-lang rollup. One pass: a single groupBy forces every column
-    (including scrubbed text). repartition applies the north-rule
+def run_pipeline_job(spark, sf_dir: str, replicate: int,
+                     parts: int = PARTS) -> int:
+    """The headline job: full quality-filter pipeline -> per-lang rollup,
+    returning the document count. One pass: a single groupBy forces every
+    column (including scrubbed text). bench_pages applies the north-rule
     repartition(xxhash64(url)) so the map stage parallelises regardless of
     input file count (a single small parquet file is ONE split otherwise —
     measured flat 8->32-core scaling without it)."""
@@ -151,20 +166,29 @@ def build_pipeline_job(spark, sf_dir: str, replicate: int):
     from linguistjs_spark.config import QualityFilterConfig
     from linguistjs_spark.pipeline import run_pipeline
 
-    cfg = QualityFilterConfig()  # bench_pages already repartitioned by url
-    pages = bench_pages(spark, sf_dir, replicate)
-    labels = run_pipeline(spark, pages, cfg)
-    return labels.groupBy("lang").agg(
+    labels = run_pipeline(
+        spark, bench_pages(spark, sf_dir, replicate, parts),
+        QualityFilterConfig(),
+    )
+    rows = labels.groupBy("lang").agg(
         F.count("*").alias("n"),
         F.sum(F.octet_length("scrubbed_text")).alias("scrub_bytes"),
         F.sum("bytes").alias("bytes"),
         F.sum("lines.code").alias("code"),
-    )
-
-
-def run_pipeline_job(spark, sf_dir: str, replicate: int) -> int:
-    rows = build_pipeline_job(spark, sf_dir, replicate).collect()
+    ).collect()
     return sum(r["n"] for r in rows)
+
+
+def fresh_docs(spark):
+    # FRESH read per call: a shared DataFrame object would let later legs
+    # reuse the repartition exchange's shuffle files (same RDD lineage),
+    # recording a post-shuffle-only time as the min.
+    from pyspark.sql import functions as F
+
+    return (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .repartition(CPUS * 2, F.col("doc_id"))
+    )
 
 
 def _cpu_ticks():
@@ -173,68 +197,8 @@ def _cpu_ticks():
         with open("/proc/stat") as f:
             v = [int(x) for x in f.readline().split()[1:]]
         return v[0] + v[1], v[2], v[3], v[7]
-    except Exception:
+    except OSError:
         return None
-
-
-# Host-contamination telemetry for the LAST timed() call: the sandbox host
-# intermittently storms 40-60% kernel-side CPU (free-page reporting to the
-# hypervisor, page_reporting_order=11 on the guest cmdline) with ~0% user —
-# a leg caught in a storm reads 3-8x slow with our processes asleep. sys%
-# and steal% over the leg's window make contaminated legs visible instead
-# of silently poisoning round-over-round comparisons.
-LAST_LEG_HOST: dict = {}
-
-
-def timed(fn, *args):
-    c0 = _cpu_ticks()
-    t0 = time.perf_counter()
-    out = fn(*args)
-    dt = time.perf_counter() - t0
-    c1 = _cpu_ticks()
-    if c0 and c1:
-        d = [b - a for a, b in zip(c0, c1)]
-        tot = sum(d) or 1
-        LAST_LEG_HOST.clear()
-        LAST_LEG_HOST.update(
-            {"sys_pct": round(100 * d[1] / tot, 1),
-             "steal_pct": round(100 * d[3] / tot, 1)}
-        )
-    return dt, out
-
-
-def warmup(spark, cores: int) -> None:
-    """Untimed warm-up leg, once per SparkSession: JVM JIT, codegen
-    compile, python worker spawn, parquet footers — AND the guest's
-    free-page-reporting fault-in storm (see the allocator note at the
-    top). The first job that allocates the full-size Arrow buffers
-    (8192 rows x ~8-32 KB per worker) faults every page against a
-    hypervisor that unmapped them host-side; measured cold legs of
-    75-165 s vs 37-41 s warm at local[16] with 178-1263 CPU-s of
-    kernel time vs ~5 s warm. A replicate=1 warm-up does NOT clear it:
-    80k/128 partitions = 39-row tasks never touch the big buffers, so
-    the storm lands on the first TIMED leg instead. This warm-up runs
-    REPLICATE rows through max(cores//2, 1) partitions so every worker
-    fills genuine 8192-row batches once. Steady-state is the honest
-    regime: a 100 TB job runs for hours and amortizes fault-in to zero.
-    """
-    global PARTS
-    saved = PARTS
-    # PARTS = cores (NOT cores//2, the round-3 value): with cores//2
-    # partitions only half the python workers spawn during warm-up, and the
-    # other half pay their interpreter start + pandas/numpy import + buffer
-    # fault-in (~22k pages each) inside the FIRST TIMED LEG — measured r4:
-    # leg0 at local[32] carried 354k pgfaults / 25-33% host sys and read
-    # 32-88 s vs 4.6 s warm; at local[16] leg0 carried 187k pgfaults. One
-    # task per core ⇒ every worker slot is exercised once.
-    PARTS = max(cores, 1)
-    try:
-        run_pipeline_job(spark, SF_DIR, REPLICATE)
-    finally:
-        PARTS = saved
-
-
-LEG_RUNS = int(os.environ.get("SPARK_GRAFT_LEG_RUNS", "2"))
 
 
 def _dirty(host: dict) -> bool:
@@ -243,552 +207,519 @@ def _dirty(host: dict) -> bool:
     return host.get("steal_pct", 0.0) > 3.0 or host.get("sys_pct", 0.0) > 5.0
 
 
-def run_leg(name: str, queries: dict, queries_host: dict, make_job):
-    """min-of-N + per-leg host telemetry + storm retry, for EVERY leg
-    (VERDICT r03 item 2 — round 3 recorded most legs from a single run and
-    one driver leg landed inside a host storm).
+def run_leg(job, runs: int = LEG_RUNS, retry: bool = True):
+    """Time `job()` `runs` times and keep the fastest run: min-of-N for
+    EVERY leg (VERDICT r03 item 2 — round 3 recorded most legs from a single
+    run and one driver leg landed inside a host storm).
 
-    make_job() must return a FRESH thunk each call: re-collecting the same
-    DataFrame is invalid (Spark reuses materialized shuffle files and re-runs
-    only the post-shuffle stage — measured 0.08s for a 240k-doc "run"), and
-    the retry legs must pay the same full cost as the first.
+    Returns (wall, host, out): the kept run's wall, its host record and the
+    FIRST run's result. host holds the kept run's sys%/steal% over its
+    window, `dirty` (`_dirty` of the kept run, after any retry) and every
+    run's wall. The sandbox host intermittently storms 40-60% kernel-side
+    CPU (free-page reporting to the hypervisor, page_reporting_order=11 on
+    the guest cmdline) with ~0% user — a run caught in a storm reads 3-8x
+    slow with our processes asleep, so the record says which runs were.
+
+    With `retry`, one more run is taken when the kept run is dirty (storms
+    last 20-60s; padding quiet runs helps nobody).
+
+    `job` must build its DataFrame inside itself: re-collecting the same
+    DataFrame is invalid (Spark reuses materialized shuffle files and
+    re-runs only the post-shuffle stage — measured 0.08s for a 240k-doc
+    "run"), and the retry must pay the same full cost as the first run.
     """
     legs = []
-    first_out = None
-    for i in range(LEG_RUNS):
-        t, out = timed(make_job())
-        if i == 0:
-            first_out = out
-        legs.append((t, dict(LAST_LEG_HOST)))
-    t_min, h_min = min(legs, key=lambda x: x[0])
-    if _dirty(h_min):
-        # the min leg itself was contaminated: one more chance for a clean
-        # window (storms last 20-60s; padding quiet runs helps nobody)
-        t3, _ = timed(make_job())
-        legs.append((t3, dict(LAST_LEG_HOST)))
-        t_min, h_min = min(legs, key=lambda x: x[0])
-    queries[name] = round(t_min, 3)
-    queries_host[name] = {**h_min, "runs": [round(t, 3) for t, _ in legs]}
-    return first_out
+    for i in range(runs + int(retry)):
+        if i == runs and not _dirty(min(legs, key=lambda r: r[0])[1]):
+            break
+        c0 = _cpu_ticks()
+        t0 = time.perf_counter()
+        out = job()
+        wall = time.perf_counter() - t0
+        c1 = _cpu_ticks()
+        host = {}
+        if c0 and c1:
+            d = [b - a for a, b in zip(c0, c1)]
+            tot = sum(d) or 1
+            host = {"sys_pct": round(100 * d[1] / tot, 1),
+                    "steal_pct": round(100 * d[3] / tot, 1)}
+        legs.append((wall, host, out))
+    wall, host, _ = min(legs, key=lambda r: r[0])
+    record = {**host, "dirty": _dirty(host),
+              "runs": [round(r[0], 3) for r in legs]}
+    return wall, record, legs[0][2]
 
 
-def main() -> None:
+def warmup(spark, cores: int) -> None:
+    """Untimed warm-up leg, once per SparkSession: JVM JIT, codegen
+    compile, python worker spawn, parquet footers — AND the guest's
+    free-page-reporting fault-in storm (see the allocator note in
+    make_spark). The first job that allocates the full-size Arrow buffers
+    (8192 rows x ~8-32 KB per worker) faults every page against a
+    hypervisor that unmapped them host-side; measured cold legs of
+    75-165 s vs 37-41 s warm at local[16] with 178-1263 CPU-s of
+    kernel time vs ~5 s warm. A replicate=1 warm-up does NOT clear it:
+    80k/128 partitions = 39-row tasks never touch the big buffers, so
+    the storm lands on the first TIMED leg instead. This warm-up runs
+    REPLICATE rows through one partition per core so every worker
+    fills genuine 8192-row batches once. Steady-state is the honest
+    regime: a 100 TB job runs for hours and amortizes fault-in to zero.
+    """
+    # one partition per core (NOT cores//2, the round-3 value): with
+    # cores//2 partitions only half the python workers spawn during warm-up,
+    # and the other half pay their interpreter start + pandas/numpy import +
+    # buffer fault-in (~22k pages each) inside the FIRST TIMED LEG —
+    # measured r4: leg0 at local[32] carried 354k pgfaults / 25-33% host sys
+    # and read 32-88 s vs 4.6 s warm; at local[16] leg0 carried 187k
+    # pgfaults. One task per core ⇒ every worker slot is exercised once.
+    run_pipeline_job(spark, SF_DIR, REPLICATE, parts=max(cores, 1))
+
+
+def pipeline_leg(cores: int, replicate: int, runs: int = LEG_RUNS,
+                 retry: bool = True):
+    """`run_leg` of the headline job in a fresh local[cores] session, after
+    its untimed warm-up (jvm + codegen + buffer fault-in). The scaling
+    legs, the epoch re-runs and every child process run this."""
+    s = make_spark(cores)
+    try:
+        warmup(s, cores)
+        return run_leg(lambda: run_pipeline_job(s, SF_DIR, replicate),
+                       runs, retry)
+    finally:
+        s.stop()
+
+
+def _mem_available_gib() -> float:
+    """MemAvailable from /proc/meminfo in GiB; 0 where it cannot be read,
+    so no child starts on a host whose memory this cannot see."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) / (1 << 20)
+    except OSError:
+        pass
+    return 0.0
+
+
+def run_children(n: int, cores: int, replicate: int, runs: int, summarize):
+    """`pipeline_leg(cores, replicate, runs)` in `n` CONCURRENT child
+    processes, each its own JVM/GC/python-worker pool — the arrangement a
+    real cluster runs. Returns summarize(records), one {"wall", "n",
+    "host"} record per child.
+
+    No storm retry inside a child: a third run taken after its siblings
+    finished would read uncontended. Each child pins HEAP_GIB of heap at
+    boot, and this process keeps its own JVM's heap after spark.stop(), so
+    when the children's heaps do not fit in MemAvailable none is started
+    and the result is {"skipped": reason}; {"failed": reason} when a child
+    reports nothing.
+    """
+    need, avail = n * HEAP_GIB, _mem_available_gib()
+    if avail < need:
+        return {"skipped": f"{n} child sessions pin {need} GiB of heap; "
+                           f"MemAvailable is {avail:.1f} GiB"}
+    script = (
+        f"import json, sys; sys.path.insert(0, {HERE!r}); import bench; "
+        f"t, host, n = bench.pipeline_leg({cores}, {replicate}, {runs}, "
+        "retry=False); print(json.dumps({'wall': t, 'n': n, 'host': host}))"
+    )
+    procs = [
+        subprocess.Popen([sys.executable, "-c", script],
+                         stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+                         text=True)
+        for _ in range(n)
+    ]
+    outs = []
+    for p in procs:
+        stdout, _ = p.communicate()
+        for line in stdout.splitlines():
+            try:
+                outs.append(json.loads(line))
+            except ValueError:
+                pass
+    if len(outs) != n:
+        return {"failed": f"{n - len(outs)} of {n} children reported nothing"}
+    return summarize(outs)
+
+
+def query_legs(spark, workdir: str):
+    """The headline legs as (name, job) rows in `queries` order, plus the
+    setup facts their records carry. Setup runs here, before any leg and
+    outside its timing: the ANN query vector, the WARC segment files, the
+    demo quality model and the PageRank crash run that pagerank_resume
+    resumes (its wall is recorded as crash_leg_wall)."""
     from pyspark.sql import functions as F
 
+    import __spark_entry__ as E
     import linguistjs_spark.operators.dedup as DD
     import linguistjs_spark.operators.similarity as SIM
     import linguistjs_spark.operators.text_stats as TS
+    from linguistjs_spark.config import QualityFilterConfig
+    from linguistjs_spark.fasttext_bin import load_model
+    from linguistjs_spark.operators import bpe as BPE
+    from linguistjs_spark.operators import fingerprint as FP
+    from linguistjs_spark.operators import link_graph as LGR
+    from linguistjs_spark.operators import training_select as TSEL
+    from linguistjs_spark.operators.extract import (
+        extract_text_col, synth_html_col)
+    from linguistjs_spark.operators.model_filter import (
+        build_demo_quality_model, logit_dim_df, model_quality_filter)
+    from linguistjs_spark.operators.retrieval import bm25_topk, keyword_topk
+    from linguistjs_spark.operators.robots import with_robots_blocked
+    from linguistjs_spark.perplexity import _logp, fitted_perplexity_udf
+    from linguistjs_spark.pipeline import run_pipeline
+    from linguistjs_spark.sources import warc as WARC
+    from linguistjs_spark.streaming.resume import resumable_pagerank
 
-    queries: dict[str, float] = {}
-    queries_host: dict[str, dict] = {}
+    # reference-comparable workload: the classification cascade alone
+    # (no quality/langid/scrub — the stages the reference doesn't have)
+    cascade_cfg = QualityFilterConfig(
+        quality_rules=False, langid_fallback=False,
+        scrub_pii=False, toxicity_filter=False,
+    )
 
-    spark = make_spark(CPUS)
-    try:
-        warmup(spark, CPUS)
+    def cascade():
+        pages = bench_pages(spark, SF_DIR, REPLICATE)
+        return (run_pipeline(spark, pages, cascade_cfg)
+                .groupBy("lang").agg(F.count("*"), F.sum("bytes")).collect())
 
-        def fresh_docs():
-            # FRESH read per leg: a shared DataFrame object would let later
-            # legs reuse the repartition exchange's shuffle files (same RDD
-            # lineage), recording a post-shuffle-only time as the min.
-            return (
-                spark.read.parquet(f"{SF_DIR}/documents.parquet")
-                .repartition(CPUS * 2, F.col("doc_id"))
-            )
+    def ppl_batch():
+        score = fitted_perplexity_udf(_logp())
+        return (bench_pages(spark, SF_DIR, REPLICATE)
+                .select(score(F.col("text")).alias("p"))
+                .agg(F.sum("p"), F.count("*")).collect())
 
-        n_raw = fresh_docs().count()
+    emb_path = f"{SF_DIR}/embeddings.parquet"
+    qvec = [r[0] for r in spark.read.parquet(emb_path)
+            .filter(F.col("vec_id") == 0)
+            .select(F.explode("embedding")).collect()]
 
-        def pipe_job():
-            return lambda: run_pipeline_job(spark, SF_DIR, REPLICATE)
+    # margin-kNN bitext mining at scale: 24k vectors (12k per side)
+    # built by deterministic replication + xxhash perturbation (keeps
+    # the bucket histogram realistic — exact copies would pile into
+    # single buckets). Measures the full candidate-join + window-margin
+    # machinery (~18 s at local[16] on an idle host), not a toy bucket
+    # count.
+    def bitext():
+        rep_n = 12
+        emb = spark.read.parquet(emb_path).select("vec_id", "embedding")
+        reps = spark.range(rep_n).select(F.col("id").alias("rep"))
+        big = emb.crossJoin(F.broadcast(reps)).select(
+            (F.col("vec_id") * rep_n + F.col("rep")).alias("vec_id"),
+            F.transform(
+                "embedding",
+                lambda x, i: x.cast("double")
+                + (F.pmod(F.xxhash64(F.col("vec_id"), F.col("rep"), i),
+                          F.lit(1000)).cast("double") / 1e4 - 0.05),
+            ).alias("embedding"),
+        ).repartition(PARTS, "vec_id")
+        src = big.filter(F.col("vec_id") % 2 == 0)
+        tgt = big.filter(F.col("vec_id") % 2 == 1)
+        return SIM.margin_knn_pairs(
+            src, tgt, k=4, threshold=1.05, bits=12).count()
 
-        n_docs = run_leg("pipeline_rollup", queries, queries_host, pipe_job)
-        pipe_host = queries_host["pipeline_rollup"]
+    def dsir():
+        d = fresh_docs(spark)
+        w = TSEL.fit_dsir_weights(
+            d.filter(F.col("source").isin("src0", "src1")), d, buckets=1024)
+        return TSEL.dsir_scores(d, w).agg(F.sum("dsir_score")).collect()
 
-        # reference-comparable workload: the classification cascade alone
-        # (no quality/langid/scrub — the stages the reference doesn't have)
-        from linguistjs_spark.config import QualityFilterConfig
-        from linguistjs_spark.pipeline import run_pipeline
+    # robots.txt compliance gate at pipeline volume — REPLICATE×docs pages
+    # against a 40-domain rule set (literal + wildcard + Allow-precedence
+    # rules, so both the startswith fast path and the dynamic-regex path
+    # pay their real cost). Scan → broadcast join on domain → per-page rule
+    # fold; text rides along untouched, nothing shuffles.
+    robots_rows = [
+        (f"https://site{i}.example/robots.txt",
+         "User-agent: *\nDisallow: /p/1\nAllow: /p/11\n"
+         "Disallow: /p/*3/doc\nDisallow: *7$\nDisallow: /p/2\n"
+         "Allow: /p/2$")
+        for i in range(40)
+    ]
 
-        cascade_cfg = QualityFilterConfig(
-            quality_rules=False, langid_fallback=False,
-            scrub_pii=False, toxicity_filter=False,
+    def robots_gate():
+        rep = spark.range(REPLICATE).select(F.col("id").alias("_rep"))
+        pages = fresh_docs(spark).crossJoin(F.broadcast(rep)).select(
+            F.concat(
+                F.lit("https://site"),
+                ((F.col("doc_id") + F.col("_rep")) % 40).cast("string"),
+                F.lit(".example/p/"),
+                (F.col("doc_id") % 97).cast("string"),
+                F.lit("/doc"), F.col("doc_id").cast("string"),
+            ).alias("url"),
+            "text",
+        )
+        robots = spark.createDataFrame(
+            robots_rows, "url string, robots_txt string")
+        return with_robots_blocked(
+            pages, robots, allow_precedence=True
+        ).filter(F.col("robots_blocked")).count()
+
+    def bm25_docs():
+        # REPLICATE×docs with distinct doc_ids
+        rep = spark.range(REPLICATE).select(F.col("id").alias("_rep"))
+        return fresh_docs(spark).crossJoin(F.broadcast(rep)).select(
+            (F.col("doc_id") + F.col("_rep") * F.lit(1_000_000))
+            .alias("doc_id"),
+            "text",
         )
 
-        def cascade_job():
-            pages_c = bench_pages(spark, SF_DIR, REPLICATE)
-            return (
-                lambda: run_pipeline(spark, pages_c, cascade_cfg)
-                .groupBy("lang").agg(F.count("*"), F.sum("bytes")).collect()
-            )
-
-        run_leg("cascade_only", queries, queries_host, cascade_job)
-
-        run_leg(
-            "text_stats", queries, queries_host,
-            lambda: lambda: TS.doc_stats(fresh_docs()).agg(
-                F.sum("n_tokens"), F.sum("n_bpe_tokens")).collect(),
+    def rep_docs():
+        rep = spark.range(REPLICATE).select(F.col("id").alias("_rep"))
+        return fresh_docs(spark).crossJoin(F.broadcast(rep)).select(
+            (F.col("doc_id") * REPLICATE + F.col("_rep")).alias("doc_id"),
+            "text",
         )
 
+    # synthetic domain graph (Zipf-ish in-degree via a squared hash)
+    def edges(n_edges: int, n_dom: int):
+        e = spark.range(n_edges).select(
+            F.concat(F.lit("d"), (F.col("id") % n_dom).cast("string"))
+            .alias("src"),
+            F.concat(
+                F.lit("d"),
+                (
+                    F.pmod(F.xxhash64(F.col("id")), F.lit(n_dom))
+                    * F.pmod(F.xxhash64(F.col("id")), F.lit(n_dom))
+                    % n_dom
+                ).cast("string"),
+            ).alias("dst"),
+            F.lit(1).cast("long").alias("w"),
+        ).filter(F.col("src") != F.col("dst"))
+        return e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+
+    def pagerank(n_edges: int, n_dom: int, iters: int):
+        return LGR.domain_pagerank(edges(n_edges, n_dom), iters=iters).count()
+
+    # VERDICT r04 item 6 (second half): the resumable variant through a
+    # crash-injection cycle once — crash after 2 committed iterations, then
+    # resume (skips 1-2, runs 3). The timed leg is the RESUME, the wall a
+    # restarted 100-TB job actually pays.
+    pr_dir = os.path.join(workdir, "pr_resume")
+    pr_edges = edges(2_000_000, 100_000)
+
+    def crash():
+        try:
+            resumable_pagerank(spark, pr_edges, pr_dir, iters=3, fail_after=2)
+        except RuntimeError:
+            pass  # injected
+
+    crash_wall, _, _ = run_leg(crash, 1, retry=False)
+
+    # VERDICT r04 item 4: chunked-ingest throughput. Setup writes
+    # gzip-per-member segment files executor-side; the timed leg is
+    # warc_chunks (driver-side ranged planning) + pages_from_warc_chunks
+    # (bounded-memory member sync + parse) over every file, chunk_bytes=1
+    # MiB so many tasks start mid-member.
+    warc_dir = os.path.join(workdir, "warc")
+    os.mkdir(warc_dir)
+    t0 = datetime.datetime(2026, 1, 1)
+
+    def write_part(batches):
+        import os as _os
+
+        import pandas as _pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            pages_l = [
+                (f"https://{r.source}.example/doc/{r.doc_id}", t0,
+                 (r.text or "").encode("utf-8"))
+                for r in pdf.itertuples()
+            ]
+            seg = WARC.build_warc_segment(pages_l, gzip_members=True)
+            name = f"seg-{pdf['doc_id'].iloc[0]}.warc.gz"
+            with open(_os.path.join(warc_dir, name), "wb") as fh:
+                fh.write(seg)
+            yield _pd.DataFrame({"n": [len(pages_l)]})
+
+    # 16x replication (~26 MB, 80k records across 32 segment files): enough
+    # volume that the timed leg measures member sync + parse throughput,
+    # not session fixed costs
+    reps = spark.range(16).select(F.col("id").alias("_rep"))
+    (
+        fresh_docs(spark).select("doc_id", "source", "text")
+        .crossJoin(F.broadcast(reps))
+        .select((F.col("doc_id") * 16 + F.col("_rep")).alias("doc_id"),
+                "source", "text")
+        .repartition(32, F.col("doc_id"))
+        .mapInPandas(write_part, schema="n long")
+        .agg(F.sum("n")).collect()
+    )
+    warc_paths = sorted(glob.glob(f"{warc_dir}/*.warc.gz"))
+
+    def warc_ingest():
+        chunks = WARC.warc_chunks(spark, warc_paths, chunk_bytes=1 << 20)
+        return WARC.pages_from_warc_chunks(chunks).agg(
+            F.count("*"), F.sum(F.octet_length("html"))
+        ).collect()[0][0]
+
+    mq_path = os.path.join(workdir, "bench_demo_quality.bin")
+    build_demo_quality_model(mq_path)
+    mq_logits = logit_dim_df(spark, load_model(mq_path))
+
+    def model_quality():
+        rows = model_quality_filter(
+            rep_docs(), mq_logits, min_prob=0.6
+        ).groupBy("keep").count().collect()
+        return sum(r["count"] for r in rows)
+
+    def bpe_learn():
+        merges, _ = BPE.learn_bpe(BPE.word_count_table(rep_docs()),
+                                  num_merges=8)
+        return len(merges)
+
+    legs = [
+        ("pipeline_rollup",
+         lambda: run_pipeline_job(spark, SF_DIR, REPLICATE)),
+        ("cascade_only", cascade),
+        ("text_stats", lambda: TS.doc_stats(fresh_docs(spark)).agg(
+            F.sum("n_tokens"), F.sum("n_bpe_tokens")).collect()),
         # zlib compression-ratio signal at pipeline volume: the kernel is
         # one C deflate call per doc over Arrow batches; the agg keeps the
         # collect tiny so the leg measures the kernel, not the driver
-        def comp_job():
-            pages_z = bench_pages(spark, SF_DIR, REPLICATE)
-            return (
-                lambda: TS.compression_signal(pages_z)
-                .groupBy("comp_flag")
-                .agg(F.count("*"), F.sum("comp_b")).collect()
-            )
-
-        run_leg("compression_signal", queries, queries_host, comp_job)
-
+        ("compression_signal", lambda: TS.compression_signal(
+            bench_pages(spark, SF_DIR, REPLICATE)).groupBy("comp_flag")
+         .agg(F.count("*"), F.sum("comp_b")).collect()),
         # the batch-vectorized perplexity UDF the pipeline runs, over the
         # replicated pages text
-        from linguistjs_spark.perplexity import _logp, fitted_perplexity_udf
-
-        def _ppl_job():
-            score = fitted_perplexity_udf(_logp())
-            pages_p = bench_pages(spark, SF_DIR, REPLICATE)
-            return (
-                pages_p.select(score(F.col("text")).alias("p"))
-                .agg(F.sum("p"), F.count("*")).collect()
-            )
-
-        run_leg(
-            "ppl_batch", queries, queries_host,
-            lambda: _ppl_job,
-        )
-
-        run_leg(
-            "exact_dedup", queries, queries_host,
-            lambda: lambda: DD.exact_dedup(fresh_docs()).count(),
-        )
-
-        run_leg(
-            "minhash_lsh", queries, queries_host,
-            lambda: lambda: DD.minhash_dedup_pairs(
-                fresh_docs(), threshold=0.5).count(),
-        )
-
-        emb_path = f"{SF_DIR}/embeddings.parquet"
-        qvec = [r[0] for r in spark.read.parquet(emb_path)
-                .filter(F.col("vec_id") == 0)
-                .select(F.explode("embedding")).collect()]
-        run_leg(
-            "ann_bruteforce", queries, queries_host,
-            lambda: lambda: SIM.brute_force_topk(
-                spark.read.parquet(emb_path), qvec, k=10).collect(),
-        )
-
-        # margin-kNN bitext mining at scale: 24k vectors (12k per side)
-        # built by deterministic replication + xxhash perturbation (keeps
-        # the bucket histogram realistic — exact copies would pile into
-        # single buckets). Measures the full candidate-join + window-margin
-        # machinery (~18 s at local[16] on an idle host), not a toy bucket
-        # count.
-        def bitext_job():
-            rep_n = 12
-            emb = spark.read.parquet(emb_path).select("vec_id", "embedding")
-            reps = spark.range(rep_n).select(F.col("id").alias("rep"))
-            big = emb.crossJoin(F.broadcast(reps)).select(
-                (F.col("vec_id") * rep_n + F.col("rep")).alias("vec_id"),
-                F.transform(
-                    "embedding",
-                    lambda x, i: x.cast("double")
-                    + (F.pmod(F.xxhash64(F.col("vec_id"), F.col("rep"), i),
-                              F.lit(1000)).cast("double") / 1e4 - 0.05),
-                ).alias("embedding"),
-            ).repartition(PARTS, "vec_id")
-            src = big.filter(F.col("vec_id") % 2 == 0)
-            tgt = big.filter(F.col("vec_id") % 2 == 1)
-            return lambda: SIM.margin_knn_pairs(
-                src, tgt, k=4, threshold=1.05, bits=12).count()
-
-        run_leg("bitext_mining", queries, queries_host, bitext_job)
-
-        # round-2 ops: html extraction (pure codegen projection) and
-        # corpus-wide paragraph dedup (window + reassembly shuffles)
-        from linguistjs_spark.operators.extract import (
-            extract_text_col, synth_html_col)
-
-        run_leg(
-            "html_extract", queries, queries_host,
-            lambda: lambda: fresh_docs().select(
-                extract_text_col(
-                    synth_html_col(F.col("doc_id"), F.col("text"))
-                ).alias("e")
-            ).agg(F.sum(F.length("e"))).collect(),
-        )
-
-        run_leg(
-            "paragraph_dedup", queries, queries_host,
-            lambda: lambda: DD.paragraph_dedup(fresh_docs())
-            .agg(F.sum("n_paras"), F.sum("n_kept")).collect(),
-        )
-
-        # round-3 ops: span-level exact-substring dedup (explode + two
-        # hash exchanges) and DSIR fit+score (two count-aggs + native fold)
-        run_leg(
-            "span_dedup", queries, queries_host,
-            lambda: lambda: DD.duplicated_span_stats(fresh_docs(), n=20)
-            .agg(F.sum("n_spans"), F.sum("n_dup_spans")).collect(),
-        )
-
-        from linguistjs_spark.operators import training_select as TSEL
-
-        def dsir_job():
-            def go():
-                docs = fresh_docs()
-                w = TSEL.fit_dsir_weights(
-                    docs.filter(F.col("source").isin("src0", "src1")), docs,
-                    buckets=1024,
-                )
-                return TSEL.dsir_scores(docs, w).agg(
-                    F.sum("dsir_score")).collect()
-            return go
-
-        run_leg("dsir_fit_score", queries, queries_host, dsir_job)
-
+        ("ppl_batch", ppl_batch),
+        ("exact_dedup", lambda: DD.exact_dedup(fresh_docs(spark)).count()),
+        ("minhash_lsh", lambda: DD.minhash_dedup_pairs(
+            fresh_docs(spark), threshold=0.5).count()),
+        ("ann_bruteforce", lambda: SIM.brute_force_topk(
+            spark.read.parquet(emb_path), qvec, k=10).collect()),
+        ("bitext_mining", bitext),
+        # html extraction (pure codegen projection) and corpus-wide
+        # paragraph dedup (window + reassembly shuffles)
+        ("html_extract", lambda: fresh_docs(spark).select(extract_text_col(
+            synth_html_col(F.col("doc_id"), F.col("text"))).alias("e"))
+         .agg(F.sum(F.length("e"))).collect()),
+        ("paragraph_dedup", lambda: DD.paragraph_dedup(fresh_docs(spark))
+         .agg(F.sum("n_paras"), F.sum("n_kept")).collect()),
+        # span-level exact-substring dedup (explode + two hash exchanges)
+        # and DSIR fit+score (two count-aggs + native fold)
+        ("span_dedup", lambda: DD.duplicated_span_stats(
+            fresh_docs(spark), n=20)
+         .agg(F.sum("n_spans"), F.sum("n_dup_spans")).collect()),
+        ("dsir_fit_score", dsir),
         # composed end-to-end mix: dedup winners -> decontam -> sample ->
         # rollup in ONE job (the __spark_entry__ training_mix plan)
-        import __spark_entry__ as _E
-
-        run_leg(
-            "training_mix", queries, queries_host,
-            lambda: lambda: _E.q_training_mix(spark, SF_DIR).collect(),
-        )
-
-        # round-4 op: the Gopher quality/repetition funnel — per-doc
-        # whole-text regexp scans + sorted-gram folds + md5 dup window +
-        # rollup, all codegen (no python workers in this leg at all)
-        run_leg(
-            "quality_funnel", queries, queries_host,
-            lambda: lambda: _E.q_quality_funnel(spark, SF_DIR).collect(),
-        )
-
-        # round-4 op: winnowing fingerprint candidate pairs (Schleimer et
-        # al. 2003) in production xxhash64 mode — per-doc HOF fingerprint
-        # map, then the inverted-index equi-join with the max_df cap
-        from linguistjs_spark.operators import fingerprint as FP
-
-        run_leg(
-            "winnow_pairs", queries, queries_host,
-            lambda: lambda: FP.winnow_candidate_pairs(
-                fresh_docs(), min_shared=2, max_df=64
-            ).count(),
-        )
-
-        # round-5 op: robots.txt compliance gate at pipeline volume —
-        # REPLICATE×docs pages against a 40-domain rule set (literal +
-        # wildcard + Allow-precedence rules, so both the startswith fast
-        # path and the dynamic-regex path pay their real cost). Scan →
-        # broadcast join on domain → per-page rule fold; text rides along
-        # untouched, nothing shuffles.
-        from linguistjs_spark.operators.robots import with_robots_blocked
-
-        def _robots_pages():
-            d = fresh_docs()
-            rep = spark.range(REPLICATE).select(
-                F.col("id").alias("_rep"))
-            return d.crossJoin(F.broadcast(rep)).select(
-                F.concat(
-                    F.lit("https://site"),
-                    ((F.col("doc_id") + F.col("_rep")) % 40).cast("string"),
-                    F.lit(".example/p/"),
-                    (F.col("doc_id") % 97).cast("string"),
-                    F.lit("/doc"), F.col("doc_id").cast("string"),
-                ).alias("url"),
-                "text",
-            )
-
-        _robots_rules_rows = [
-            (f"https://site{i}.example/robots.txt",
-             "User-agent: *\nDisallow: /p/1\nAllow: /p/11\n"
-             "Disallow: /p/*3/doc\nDisallow: *7$\nDisallow: /p/2\n"
-             "Allow: /p/2$")
-            for i in range(40)
-        ]
-
-        def _robots_job():
-            robots = spark.createDataFrame(
-                _robots_rules_rows, "url string, robots_txt string")
-            return with_robots_blocked(
-                _robots_pages(), robots, allow_precedence=True
-            ).filter(F.col("robots_blocked")).count()
-
-        run_leg(
-            "robots_gate", queries, queries_host,
-            lambda: lambda: _robots_job(),
-        )
-
-        # round-5 op: Okapi BM25 retrieval scoring at pipeline volume —
-        # REPLICATE×docs with distinct doc_ids, 7-term query. One
-        # let-bound token projection (no explode), ONE 1-row corpus
-        # aggregate broadcast back, codegen score fold, then the
-        # TakeOrderedAndProject top-k. Text never shuffles.
-        from linguistjs_spark.operators.retrieval import bm25_topk
-
-        def _bm25_docs():
-            d = fresh_docs()
-            rep = spark.range(REPLICATE).select(F.col("id").alias("_rep"))
-            return d.crossJoin(F.broadcast(rep)).select(
-                (F.col("doc_id") + F.col("_rep") * F.lit(1_000_000))
-                .alias("doc_id"),
-                "text",
-            )
-
-        run_leg(
-            "bm25_topk", queries, queries_host,
-            lambda: lambda: bm25_topk(
-                _bm25_docs(),
-                ["spark", "window", "merge", "vector", "customer",
-                 "stream", "zzzunseen"],
-                k=25,
-            ).collect(),
-        )
-
-        # round-5 op: tf-idf keyword extraction at pipeline volume — the
-        # UNBOUNDED-vocab inverted-index pipeline (explode -> postings
-        # groupBy -> term-dictionary groupBy -> keyed join on term ->
-        # window top-k). The heavy leg by design: ~8M posting rows from
-        # 80k docs; measures the posting shuffle the BM25 leg avoids.
-        from linguistjs_spark.operators.retrieval import keyword_topk
-
-        run_leg(
-            "keywords_topk", queries, queries_host,
-            lambda: lambda: keyword_topk(_bm25_docs(), k=3).count(),
-        )
-
-        # round-4 op: iterative link-graph machinery at scale — synthetic
-        # domain graph (Zipf-ish in-degree via a squared hash), weighted
-        # PageRank iterations. Measures the per-iteration keyed join +
-        # groupBy shape, not the fixture-sized driver query.
-        from linguistjs_spark.operators import link_graph as LGR
-
-        def _synthetic_edges(n_edges: int, n_dom: int):
-            e = spark.range(n_edges).select(
-                F.concat(F.lit("d"), (F.col("id") % n_dom).cast("string"))
-                .alias("src"),
-                F.concat(
-                    F.lit("d"),
-                    (
-                        F.pmod(F.xxhash64(F.col("id")), F.lit(n_dom))
-                        * F.pmod(F.xxhash64(F.col("id")), F.lit(n_dom))
-                        % n_dom
-                    ).cast("string"),
-                ).alias("dst"),
-                F.lit(1).cast("long").alias("w"),
-            ).filter(F.col("src") != F.col("dst"))
-            return e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-
-        def _pagerank_job(n_edges: int, n_dom: int, iters: int):
-            return LGR.domain_pagerank(
-                _synthetic_edges(n_edges, n_dom), iters=iters
-            ).count()
-
-        run_leg(
-            "pagerank_2m", queries, queries_host,
-            lambda: lambda: _pagerank_job(2_000_000, 100_000, 3),
-        )
-
+        ("training_mix", lambda: E.q_training_mix(spark, SF_DIR).collect()),
+        # the Gopher quality/repetition funnel — per-doc whole-text regexp
+        # scans + sorted-gram folds + md5 dup window + rollup, all codegen
+        # (no python workers in this leg at all)
+        ("quality_funnel",
+         lambda: E.q_quality_funnel(spark, SF_DIR).collect()),
+        # winnowing fingerprint candidate pairs (Schleimer et al. 2003) in
+        # production xxhash64 mode — per-doc HOF fingerprint map, then the
+        # inverted-index equi-join with the max_df cap
+        ("winnow_pairs", lambda: FP.winnow_candidate_pairs(
+            fresh_docs(spark), min_shared=2, max_df=64).count()),
+        ("robots_gate", robots_gate),
+        # Okapi BM25 at pipeline volume, 7-term query. One let-bound token
+        # projection (no explode), ONE 1-row corpus aggregate broadcast
+        # back, codegen score fold, then the TakeOrderedAndProject top-k.
+        # Text never shuffles.
+        ("bm25_topk", lambda: bm25_topk(
+            bm25_docs(),
+            ["spark", "window", "merge", "vector", "customer", "stream",
+             "zzzunseen"],
+            k=25,
+        ).collect()),
+        # tf-idf keywords — the UNBOUNDED-vocab inverted-index pipeline
+        # (explode -> postings groupBy -> term-dictionary groupBy -> keyed
+        # join on term -> window top-k). The heavy leg by design: ~8M
+        # posting rows from 80k docs; measures the posting shuffle the BM25
+        # leg avoids.
+        ("keywords_topk", lambda: keyword_topk(bm25_docs(), k=3).count()),
+        # iterative link-graph machinery at scale: weighted PageRank
+        # iterations. Measures the per-iteration keyed join + groupBy
+        # shape, not the fixture-sized driver query.
+        ("pagerank_2m", lambda: pagerank(2_000_000, 100_000, 3)),
         # VERDICT r04 item 6: at 2M edges the leg measures the scheduling
-        # floor, not the shuffle machinery. The 20M-edge pair below makes
-        # iteration time the dominant term AND isolates it: i1 and i3 share
-        # generation + dedup-groupBy + normalization + final count, so
-        # per-iteration wall = (t_i3 - t_i1) / 2 with every fixed cost
-        # differenced out; setup = t_i3 - 3*per_iter. Both derived values
-        # land in the detail record as pagerank_20m_split.
-        PR_EDGES = int(os.environ.get("SPARK_GRAFT_PR_EDGES", "20000000"))
-        run_leg(
-            "pagerank_20m_i1", queries, queries_host,
-            lambda: lambda: _pagerank_job(PR_EDGES, 400_000, 1),
-        )
-        run_leg(
-            "pagerank_20m_i3", queries, queries_host,
-            lambda: lambda: _pagerank_job(PR_EDGES, 400_000, 3),
-        )
+        # floor, not the shuffle machinery. The PR_EDGES pair makes
+        # iteration time the dominant term AND isolates it: i1 and i3
+        # share generation + dedup-groupBy + normalization + final count,
+        # so per-iteration wall = (t_i3 - t_i1) / 2 (pagerank_20m_split).
+        ("pagerank_20m_i1", lambda: pagerank(PR_EDGES, 400_000, 1)),
+        ("pagerank_20m_i3", lambda: pagerank(PR_EDGES, 400_000, 3)),
+        ("pagerank_resume",
+         lambda: resumable_pagerank(spark, pr_edges, pr_dir, iters=3)),
+        ("warc_chunked_ingest", warc_ingest),
+        # model-scored quality tier at pipeline volume — REPLICATE x docs
+        # through the fastText linearity collapse (operators/model_filter.py):
+        # token explode -> broadcast word-logit join -> one
+        # map-side-combined groupBy; zero python workers anywhere in the leg.
+        ("model_quality", model_quality),
+        # distributed BPE learning — the corpus-sized word-count shuffle
+        # once (localCheckpoint), then 8 merge iterations over the
+        # distinct-word table (pair-count shuffle + bounded argmax collect
+        # + zero-shuffle fold each).
+        ("bpe_learn8", bpe_learn),
+    ]
+    setup = {
+        "crash_leg_wall": round(crash_wall, 3),
+        "segment_bytes": sum(os.path.getsize(p) for p in warc_paths),
+    }
+    return legs, setup
 
-        # VERDICT r04 item 6 (second half): the resumable variant through a
-        # crash-injection cycle once — crash after 2 committed iterations,
-        # then resume (skips 1-2, runs 3). Timed leg = the RESUME, the
-        # wall a restarted 100-TB job actually pays. One cycle, not
-        # min-of-N: each run writes per-iteration rank tables.
-        import shutil
-        import tempfile as _tf
 
-        pr_dir = _tf.mkdtemp(prefix="bench_pr_resume_")
-        from linguistjs_spark.streaming.resume import resumable_pagerank
+def main() -> None:
+    from linguistjs_spark.sources.tables import iceberg_available
 
-        pr_edges_small = _synthetic_edges(2_000_000, 100_000)
-        t_crash0 = time.perf_counter()
-        try:
-            resumable_pagerank(
-                spark, pr_edges_small, pr_dir, iters=3, fail_after=2
-            )
-        except RuntimeError:
-            pass  # injected
-        t_crash = time.perf_counter() - t_crash0
-        t_res, res = timed(
-            lambda: resumable_pagerank(spark, pr_edges_small, pr_dir, iters=3)
-        )
-        queries["pagerank_resume"] = round(t_res, 3)
-        queries_host["pagerank_resume"] = {
-            **LAST_LEG_HOST,
-            "runs": [round(t_res, 3)],
-            "crash_leg_wall": round(t_crash, 3),
-            "resumed_processed": res["processed"],
-            "resumed_skipped": res["skipped"],
-        }
-        shutil.rmtree(pr_dir, ignore_errors=True)
-
-        # VERDICT r04 item 4: chunked-ingest throughput. Setup (untimed)
-        # writes gzip-per-member segment files executor-side; the timed leg
-        # is warc_chunks (driver-side ranged planning) +
-        # pages_from_warc_chunks (bounded-memory member sync + parse) over
-        # every file, chunk_bytes=1 MiB so many tasks start mid-member.
-        import glob as _glob
-
-        from linguistjs_spark.sources import warc as WARC
-
-        warc_dir = _tf.mkdtemp(prefix="bench_warc_chunks_")
-
-        def _write_segments():
-            import datetime as _dt
-
-            import pandas as _pd
-
-            t0 = _dt.datetime(2026, 1, 1)
-
-            def write_part(batches):
-                import os as _os
-
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    pages_l = [
-                        (
-                            f"https://{r.source}.example/doc/{r.doc_id}",
-                            t0,
-                            (r.text or "").encode("utf-8"),
-                        )
-                        for r in pdf.itertuples()
-                    ]
-                    seg = WARC.build_warc_segment(pages_l, gzip_members=True)
-                    name = f"seg-{pdf['doc_id'].iloc[0]}.warc.gz"
-                    with open(_os.path.join(warc_dir, name), "wb") as fh:
-                        fh.write(seg)
-                    yield _pd.DataFrame({"n": [len(pages_l)]})
-
-            # 16x replication (~26 MB, 80k records across 32 segment
-            # files): enough volume that the timed leg measures member
-            # sync + parse throughput, not session fixed costs
-            reps = spark.range(16).select(F.col("id").alias("_rep"))
-            (
-                fresh_docs().select("doc_id", "source", "text")
-                .crossJoin(F.broadcast(reps))
-                .select(
-                    (F.col("doc_id") * 16 + F.col("_rep")).alias("doc_id"),
-                    "source", "text",
-                )
-                .repartition(32, F.col("doc_id"))
-                .mapInPandas(write_part, schema="n long")
-                .agg(F.sum("n")).collect()
-            )
-
-        _write_segments()
-        warc_paths = sorted(_glob.glob(f"{warc_dir}/*.warc.gz"))
-        warc_bytes = sum(os.path.getsize(p) for p in warc_paths)
-
-        def _chunked_ingest():
-            chunks = WARC.warc_chunks(spark, warc_paths, chunk_bytes=1 << 20)
-            return WARC.pages_from_warc_chunks(chunks).agg(
-                F.count("*"), F.sum(F.octet_length("html"))
-            ).collect()[0][0]
-
-        n_warc_docs = run_leg(
-            "warc_chunked_ingest", queries, queries_host,
-            lambda: lambda: _chunked_ingest(),
-        )
-        queries_host["warc_chunked_ingest"].update(
-            {
-                "n_records": n_warc_docs,
-                "segment_bytes": warc_bytes,
-                "mb_per_sec": round(
-                    warc_bytes / (1 << 20) / queries["warc_chunked_ingest"], 1
-                ),
-            }
-        )
-        shutil.rmtree(warc_dir, ignore_errors=True)
-
-        # round-5 op: model-scored quality tier at pipeline volume —
-        # REPLICATE x docs through the fastText linearity collapse
-        # (operators/model_filter.py): token explode -> broadcast
-        # word-logit join -> one map-side-combined groupBy; zero python
-        # workers anywhere in the leg.
-        from linguistjs_spark.fasttext_bin import load_model
-        from linguistjs_spark.operators.model_filter import (
-            build_demo_quality_model, logit_dim_df, model_quality_filter)
-
-        mq_path = os.path.join(_tf.gettempdir(), "bench_demo_quality.bin")
-        build_demo_quality_model(mq_path)
-        mq_logits = logit_dim_df(spark, load_model(mq_path))
-
-        def _rep_docs():
-            d = fresh_docs()
-            rep = spark.range(REPLICATE).select(F.col("id").alias("_rep"))
-            return d.crossJoin(F.broadcast(rep)).select(
-                (F.col("doc_id") * REPLICATE + F.col("_rep"))
-                .alias("doc_id"),
-                "text",
-            )
-
-        def _mq_job():
-            rows = model_quality_filter(
-                _rep_docs(), mq_logits, min_prob=0.6
-            ).groupBy("keep").count().collect()
-            return sum(r["count"] for r in rows)
-
-        n_mq = run_leg(
-            "model_quality", queries, queries_host,
-            lambda: lambda: _mq_job(),
-        )
-        queries_host["model_quality"].update(
-            {
-                "n_docs": n_mq,
-                "docs_per_sec": round(n_mq / queries["model_quality"], 1),
-            }
-        )
-
-        # round-5 op: distributed BPE learning — the corpus-sized
-        # word-count shuffle once (localCheckpoint), then 8 merge
-        # iterations over the distinct-word table (pair-count shuffle +
-        # bounded argmax collect + zero-shuffle fold each).
-        from linguistjs_spark.operators import bpe as BPE
-
-        def _bpe_job():
-            merges, _ = BPE.learn_bpe(
-                BPE.word_count_table(_rep_docs()), num_merges=8
-            )
-            return len(merges)
-
-        run_leg(
-            "bpe_learn8", queries, queries_host,
-            lambda: lambda: _bpe_job(),
-        )
+    queries: dict[str, float] = {}
+    queries_host: dict[str, dict] = {}
+    outs: dict = {}
+    spark = make_spark(CPUS)
+    try:
+        warmup(spark, CPUS)
+        n_raw = fresh_docs(spark).count()
+        with tempfile.TemporaryDirectory(prefix="bench_") as workdir:
+            legs, setup = query_legs(spark, workdir)
+            for name, job in legs:
+                # the resume leg runs ONCE, not min-of-N: each run writes
+                # per-iteration rank tables, so a second run resumes nothing
+                once = name == "pagerank_resume"
+                t, queries_host[name], outs[name] = run_leg(
+                    job, 1 if once else LEG_RUNS, retry=not once)
+                queries[name] = round(t, 3)
+        # VERDICT r04 item 9: capability probe — visible, not silent. The
+        # facade (sources/tables.py) falls back to parquet when the runtime
+        # jar is absent; the record says which path this host exercised.
+        ice = iceberg_available(spark)
     finally:
         spark.stop()
+
+    n_docs = outs["pipeline_rollup"]
+    resumed = outs["pagerank_resume"]
+    queries_host["pagerank_resume"].update(
+        crash_leg_wall=setup["crash_leg_wall"],
+        resumed_processed=resumed["processed"],
+        resumed_skipped=resumed["skipped"],
+    )
+    warc_bytes = setup["segment_bytes"]
+    queries_host["warc_chunked_ingest"].update(
+        n_records=outs["warc_chunked_ingest"],
+        segment_bytes=warc_bytes,
+        mb_per_sec=round(
+            warc_bytes / (1 << 20) / queries["warc_chunked_ingest"], 1),
+    )
+    n_mq = outs["model_quality"]
+    queries_host["model_quality"].update(
+        n_docs=n_mq, docs_per_sec=round(n_mq / queries["model_quality"], 1))
 
     # ---- scaling: same pipeline job at local[N] and local[4N] ----
     # TWO N->4N pairs (VERDICT r02 item 8): 2->8 sits fully inside the free
     # cores even under neighbor load, and 4->16 shows the efficiency holds
     # past 8 cores — at 16 jvm threads + 16 python UDF workers the host's 32
     # vCPUs are exactly full, the closest a local-mode sandbox gets to a
-    # busy executor. A small warm-up run first (codegen compile +
+    # busy executor. Each session warms up first (codegen compile +
     # python-worker spin-up are fixed costs a long-running cluster
     # amortises; steady-state throughput is the number that matters at
     # 10^12 docs).
-    t_by_cores = {}
-    host_by_cores: dict = {}
-    n_scale_docs = None
     pair_ns = sorted({SCALE_N, SCALE_N * 2})
     # Each pair's N and 4N legs run back-to-back, NOT in sorted core order:
     # the host's effective memory bandwidth drifts in multi-minute epochs
@@ -808,32 +739,17 @@ def main() -> None:
     # r3 regression. Skipped if CPUS already appears in the pair legs.
     if CPUS > max(scale_cores):
         scale_cores.append(CPUS)
+    # min-of-two plus ONE storm retry per leg: across 5 round-3 bench
+    # executions, 3 had exactly one scaling leg hit by a neighbor burst
+    # (steal 5-8% or sys 27% in the telemetry) lasting longer than two
+    # consecutive runs — a third run, taken only when the kept run's own
+    # telemetry says it was dirty, recovers the clean measurement without
+    # padding quiet runs.
+    best: dict = {}  # cores -> (wall, host) of the fastest run at that count
+    n_scale_docs = None
     for cores in scale_cores:
-        s = make_spark(cores)
-        try:
-            warmup(s, cores)  # untimed: jvm + codegen + buffer fault-in
-            # Fresh job per timed run (see pipeline_rollup note: shuffle
-            # reuse makes re-collects meaningless). min-of-two, plus ONE
-            # storm retry: across 5 round-3 bench executions, 3 had
-            # exactly one scaling leg hit by a neighbor burst (steal 5-8%
-            # or sys 27% in the telemetry) lasting longer than two
-            # consecutive legs — a third attempt, taken only when the
-            # min leg's own telemetry says it was dirty, recovers the
-            # clean measurement without padding quiet runs.
-            legs = []
-            t1, n_scale_docs = timed(run_pipeline_job, s, SF_DIR, SCALE_REPLICATE)
-            legs.append((t1, dict(LAST_LEG_HOST)))
-            t2, _ = timed(run_pipeline_job, s, SF_DIR, SCALE_REPLICATE)
-            legs.append((t2, dict(LAST_LEG_HOST)))
-            t_min, h_min = min(legs, key=lambda x: x[0])
-            if h_min.get("steal_pct", 0) > 3 or h_min.get("sys_pct", 0) > 5:
-                t3, _ = timed(run_pipeline_job, s, SF_DIR, SCALE_REPLICATE)
-                legs.append((t3, dict(LAST_LEG_HOST)))
-                t_min, h_min = min(legs, key=lambda x: x[0])
-            t_by_cores[cores] = t_min
-            host_by_cores[cores] = h_min
-        finally:
-            s.stop()
+        t, host, n_scale_docs = pipeline_leg(cores, SCALE_REPLICATE)
+        best[cores] = (t, host)
 
     # Epoch-skew pair retry (symmetric, adjacency-preserving): the host's
     # bandwidth epochs can land a pair's two leg WINDOWS in different
@@ -844,31 +760,21 @@ def main() -> None:
     # never a min-mix across epochs (which could bias the ratio). Both
     # sides get the same extra sample; a genuinely sub-0.8 engine
     # reproduces its ratio and keeps it.
-    pair_runs: dict = {}
+    pairs: dict = {}  # N -> ((wall, host) at N, (wall, host) at 4N, retried)
     for p in pair_ns:
-        best = (t_by_cores[p], t_by_cores[p * 4],
-                host_by_cores[p], host_by_cores[p * 4], False)
-        if (best[0] / best[1]) / 4 < 0.8:
-            retry = {}
-            for cores in (p, p * 4):
-                s = make_spark(cores)
-                try:
-                    warmup(s, cores)
-                    t, _ = timed(run_pipeline_job, s, SF_DIR, SCALE_REPLICATE)
-                    retry[cores] = (t, dict(LAST_LEG_HOST))
-                finally:
-                    s.stop()
-            if ((retry[p][0] / retry[p * 4][0]) / 4
-                    > (best[0] / best[1]) / 4):
-                best = (retry[p][0], retry[p * 4][0],
-                        retry[p][1], retry[p * 4][1], True)
+        pair = (best[p], best[p * 4], False)
+        if (pair[0][0] / pair[1][0]) / 4 < 0.8:
+            rerun = [pipeline_leg(c, SCALE_REPLICATE, 1, retry=False)[:2]
+                     for c in (p, p * 4)]
+            if rerun[0][0] / rerun[1][0] > pair[0][0] / pair[1][0]:
+                pair = (rerun[0], rerun[1], True)
             # monotonicity section may still use global per-core mins
             # (it is a single-leg comparison, not a ratio)
-            for cores in (p, p * 4):
-                if retry[cores][0] < t_by_cores[cores]:
-                    t_by_cores[cores] = retry[cores][0]
-                    host_by_cores[cores] = retry[cores][1]
-        pair_runs[p] = best
+            for cores, r in zip((p, p * 4), rerun):
+                if r[0] < best[cores][0]:
+                    best[cores] = r
+        pairs[p] = pair
+    t_by_cores = {c: t for c, (t, _) in best.items()}
 
     # ---- host-ceiling probe (VERDICT r03 item 6) ----
     # The 4->16 pair reads low on this box because the HOST's memory
@@ -878,61 +784,31 @@ def main() -> None:
     # separate JVMs (no shared locks/GC/scheduler/Arrow pools) vs the solo
     # local[16] leg above. Aggregate parity => the droop is the machine, not
     # the engine. The result is recorded as scaling.host_ceiling_probe.
-    probe = None
-    if os.environ.get("SPARK_GRAFT_PROBE", "1") == "1" and 16 in t_by_cores:
-        import subprocess
+    def probe_stats(outs):
+        # each child warms up independently, so the timed runs overlap
+        # only approximately; aggregate = sum of each child's own rate
+        agg = sum(o["n"] / o["wall"] for o in outs)
+        solo16 = n_scale_docs / t_by_cores[16]
+        probe = {
+            "conc8_walls": [round(o["wall"], 3) for o in outs],
+            "conc8_hosts": [o["host"] for o in outs],
+            "conc8_aggregate_docs_per_sec": round(agg, 1),
+            "solo16_docs_per_sec": round(solo16, 1),
+            "aggregate_ratio_conc8_over_solo16": round(agg / solo16, 3),
+        }
+        # the real-cluster arrangement IS separate JVMs: per-process
+        # slowdown when a second 8-core executor-process joins ==
+        # multi-executor scaling efficiency for 8 -> 16 total cores
+        if 8 in t_by_cores:
+            mean_conc = sum(o["wall"] for o in outs) / 2
+            probe["multiproc_eff_8_to_16"] = round(
+                t_by_cores[8] / mean_conc, 3)
+        return probe
 
-        child = (
-            "import os,sys,json,time\n"
-            f"sys.path.insert(0, {os.path.dirname(os.path.abspath(__file__))!r})\n"
-            "import bench\n"
-            "s = bench.make_spark(8)\n"
-            "try:\n"
-            "    bench.warmup(s, 8)\n"
-            "    t0 = time.perf_counter()\n"  # pair-window start, post-warmup
-            "    t, n = bench.timed(bench.run_pipeline_job, s, bench.SF_DIR,"
-            " bench.SCALE_REPLICATE)\n"
-            "    print(json.dumps({'wall': t, 'n': n,"
-            " 'host': dict(bench.LAST_LEG_HOST)}))\n"
-            "finally:\n"
-            "    s.stop()\n"
-        )
-
-        def _spawn():
-            return subprocess.Popen(
-                [sys.executable, "-c", child],
-                stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-            )
-
-        pa, pb = _spawn(), _spawn()
-        outs = []
-        for p in (pa, pb):
-            stdout, _ = p.communicate()
-            for line in stdout.splitlines():
-                try:
-                    outs.append(json.loads(line))
-                except ValueError:
-                    pass
-        if len(outs) == 2:
-            # each child warms up independently, so the timed legs overlap
-            # only approximately; aggregate = sum of each child's own rate,
-            # the same accounting the probe script uses
-            agg = sum(o["n"] / o["wall"] for o in outs)
-            solo16 = n_scale_docs / t_by_cores[16]
-            probe = {
-                "conc8_walls": [round(o["wall"], 3) for o in outs],
-                "conc8_hosts": [o["host"] for o in outs],
-                "conc8_aggregate_docs_per_sec": round(agg, 1),
-                "solo16_docs_per_sec": round(solo16, 1),
-                "aggregate_ratio_conc8_over_solo16": round(agg / solo16, 3),
-            }
-            # the real-cluster arrangement IS separate JVMs: per-process
-            # slowdown when a second 8-core executor-process joins ==
-            # multi-executor scaling efficiency for 8 -> 16 total cores
-            if 8 in t_by_cores:
-                mean_conc = sum(o["wall"] for o in outs) / 2
-                probe["multiproc_eff_8_to_16"] = round(
-                    t_by_cores[8] / mean_conc, 3)
+    if 16 in t_by_cores:
+        probe = run_children(2, 8, SCALE_REPLICATE, 1, probe_stats)
+    else:
+        probe = {"skipped": "no local[16] scaling leg to compare with"}
 
     # ---- multi-EXECUTOR scaling (north rule, executor-process form) ----
     # The north rule's criterion is "N and 4N EXECUTORS". The pair legs
@@ -943,85 +819,43 @@ def main() -> None:
     # executor-process over 640k docs vs FOUR concurrent local[4]
     # executor-processes over 160k docs each (same total work, same
     # per-process shape, disjoint inputs). T_4N = max child wall;
-    # efficiency = T_N / (4 * T_4N). Solo leg reuses t_by_cores[4]
-    # (same make_spark config the children use).
+    # efficiency = T_N / (4 * T_4N). The solo leg reuses t_by_cores[4]
+    # (same make_spark config the children use); min-of-2 per child (the
+    # first run pays plan-shape codegen + worker spawn, same as every
+    # other leg).
+    def mx_stats(ec, outs):
+        t_4n = max(o["wall"] for o in outs)
+        n_total = sum(o["n"] for o in outs)
+        return {
+            "cores_per_executor": ec,
+            "executors_n": 1,
+            "executors_4n": 4,
+            "n_docs": n_total,
+            "wall_sec_1exec": round(t_by_cores[ec], 3),
+            "child_walls_4exec": [round(o["wall"], 3) for o in outs],
+            "child_hosts": [o["host"] for o in outs],
+            "wall_sec_4exec": round(t_4n, 3),
+            "docs_per_sec_1exec": round(n_total / t_by_cores[ec], 1),
+            "docs_per_sec_4exec": round(n_total / t_4n, 1),
+            "efficiency": round(t_by_cores[ec] / (4 * t_4n), 3),
+        }
+
+    # two arrangements: 1 vs 4 executors of local[2] (8 busy cores at
+    # 4N — inside the host's bandwidth headroom, the clean read) and
+    # of local[4] (16 busy cores at 4N — rides the same host ceiling
+    # the probe documents for any 16-core arrangement)
     multiexec = []
-    if (os.environ.get("SPARK_GRAFT_MULTIEXEC", "1") == "1"
-            and SCALE_REPLICATE >= 4):
-        import subprocess
-
-        child_rep = SCALE_REPLICATE // 4
-
-        def _mx_run(exec_cores: int):
-            # each child = one executor-process: own JVM/GC/python-worker
-            # pool, disjoint quarter of the input; min-of-2 per child (the
-            # first run pays plan-shape codegen + worker spawn, same as
-            # every other leg)
-            mx_child = (
-                "import os,sys,json,time\n"
-                "sys.path.insert(0, "
-                f"{os.path.dirname(os.path.abspath(__file__))!r})\n"
-                "import bench\n"
-                f"s = bench.make_spark({exec_cores})\n"
-                "try:\n"
-                f"    bench.warmup(s, {exec_cores})\n"
-                "    t1, n = bench.timed(bench.run_pipeline_job,"
-                f" s, bench.SF_DIR, {child_rep})\n"
-                "    t2, _ = bench.timed(bench.run_pipeline_job,"
-                f" s, bench.SF_DIR, {child_rep})\n"
-                "    print(json.dumps({'wall': min(t1, t2),"
-                " 'walls': [t1, t2], 'n': n,"
-                " 'host': dict(bench.LAST_LEG_HOST)}))\n"
-                "finally:\n"
-                "    s.stop()\n"
-            )
-            procs = [
-                subprocess.Popen(
-                    [sys.executable, "-c", mx_child],
-                    stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-                    text=True,
-                )
-                for _ in range(4)
-            ]
-            outs = []
-            for p in procs:
-                stdout, _ = p.communicate()
-                for line in stdout.splitlines():
-                    try:
-                        outs.append(json.loads(line))
-                    except ValueError:
-                        pass
-            if len(outs) != 4 or exec_cores not in t_by_cores:
-                return None
-            t_4n_mx = max(o["wall"] for o in outs)
-            n_total = sum(o["n"] for o in outs)
-            return {
-                "cores_per_executor": exec_cores,
-                "executors_n": 1,
-                "executors_4n": 4,
-                "n_docs": n_total,
-                "wall_sec_1exec": round(t_by_cores[exec_cores], 3),
-                "child_walls_4exec": [round(o["wall"], 3) for o in outs],
-                "child_hosts": [o["host"] for o in outs],
-                "wall_sec_4exec": round(t_4n_mx, 3),
-                "docs_per_sec_1exec": round(
-                    n_total / t_by_cores[exec_cores], 1),
-                "docs_per_sec_4exec": round(n_total / t_4n_mx, 1),
-                "efficiency": round(
-                    t_by_cores[exec_cores] / (4 * t_4n_mx), 3),
-            }
-
-        # two arrangements: 1 vs 4 executors of local[2] (8 busy cores at
-        # 4N — inside the host's bandwidth headroom, the clean read) and
-        # of local[4] (16 busy cores at 4N — rides the same host ceiling
-        # the probe documents for any 16-core arrangement)
-        for ec in (2, 4):
-            r = _mx_run(ec)
-            if r is not None:
-                multiexec.append(r)
+    for ec in (2, 4):
+        if ec in t_by_cores and SCALE_REPLICATE >= 4:
+            r = run_children(4, ec, SCALE_REPLICATE // 4, 2,
+                             lambda outs, ec=ec: mx_stats(ec, outs))
+        else:
+            r = {"skipped": f"needs a local[{ec}] scaling leg and a "
+                            "scale replicate of at least 4"}
+        multiexec.append({"cores_per_executor": ec, **r})
 
     def pair_stats(n: int) -> dict:
-        t_n, t_4n, h_n, h_4n, retried = pair_runs[n]
+        (t_n, h_n), (t_4n, h_4n), retried = pairs[n]
         out = {
             "cores_n": n,
             "cores_4n": n * 4,
@@ -1038,22 +872,20 @@ def main() -> None:
             out["epoch_retry"] = True
         return out
 
-    scaling = pair_stats(SCALE_N)
-    if probe is not None:
-        scaling["host_ceiling_probe"] = probe
+    scaling = {**pair_stats(SCALE_N), "host_ceiling_probe": probe}
     # monotonicity at the driver's core count on the big input: wall at the
     # highest pair leg (16) vs wall at CPUS (32) — >= 1.0 means adding cores
     # never loses (the r3 defect was 16->32 regressing)
     mono = None
-    if CPUS in t_by_cores and 16 in t_by_cores and CPUS > 16:
+    if CPUS in best and 16 in best and CPUS > 16:
         mono = {
             "cores_lo": 16,
             "cores_hi": CPUS,
             "wall_sec_lo": round(t_by_cores[16], 3),
             "wall_sec_hi": round(t_by_cores[CPUS], 3),
             "speedup_hi_over_lo": round(t_by_cores[16] / t_by_cores[CPUS], 3),
-            "host_lo": host_by_cores.get(16, {}),
-            "host_hi": host_by_cores.get(CPUS, {}),
+            "host_lo": best[16][1],
+            "host_hi": best[CPUS][1],
         }
 
     # VERDICT r04 item 6: isolate PageRank iteration time from fixed costs.
@@ -1061,27 +893,12 @@ def main() -> None:
     # difference over two extra iterations is pure per-iteration shuffle.
     # The two walls are minima of different runs, so only this difference
     # is reported: fixed costs derived from it can come out negative.
-    pagerank_split = None
-    if "pagerank_20m_i1" in queries and "pagerank_20m_i3" in queries:
-        per_iter = (queries["pagerank_20m_i3"]
-                    - queries["pagerank_20m_i1"]) / 2.0
-        pagerank_split = {
-            "edges": PR_EDGES,
-            "per_iter_sec": round(per_iter, 3),
-        }
-
-    # VERDICT r04 item 9: capability probe — visible, not silent. The
-    # facade (sources/tables.py) falls back to parquet when the runtime jar
-    # is absent; the record says which path this host actually exercised.
-    try:
-        from linguistjs_spark.sources.tables import iceberg_available
-        _probe_spark = make_spark(2)
-        try:
-            ice = bool(iceberg_available(_probe_spark))
-        finally:
-            _probe_spark.stop()
-    except Exception:
-        ice = False
+    pagerank_split = {
+        "edges": PR_EDGES,
+        "per_iter_sec": round(
+            (queries["pagerank_20m_i3"] - queries["pagerank_20m_i1"]) / 2.0,
+            3),
+    }
 
     total = round(sum(queries.values()), 3)
     detail = {
@@ -1093,24 +910,22 @@ def main() -> None:
         # (VERDICT r02 item 1)
         "cores": CPUS,
         "queries": queries,
-        # per-leg min-leg host telemetry + every raw run (VERDICT r03
-        # item 2: no leg is a single unaudited number anymore)
+        # per-leg kept-run host telemetry, its dirty flag and every raw run
+        # (VERDICT r03 item 2: no leg is a single unaudited number anymore)
         "queries_host": queries_host,
         "sf": SF_DIR,
         "n_docs_pipeline": n_docs,
         "n_docs_raw": n_raw,
         "docs_per_sec": round(n_docs / queries["pipeline_rollup"], 1),
-        "pipeline_host": pipe_host,
+        "pipeline_host": queries_host["pipeline_rollup"],
         "scaling": scaling,
         "scaling_pairs": [pair_stats(n) for n in pair_ns],
         "iceberg_available": ice,
     }
     if mono is not None:
         detail["monotonic_hi"] = mono
-    if pagerank_split is not None:
-        detail["pagerank_20m_split"] = pagerank_split
-    if multiexec:
-        detail["multiexec_scaling"] = multiexec
+    detail["pagerank_20m_split"] = pagerank_split
+    detail["multiexec_scaling"] = multiexec
 
     # VERDICT r04 item 1: the round driver records only the LAST ~2000
     # chars of stdout and parses a JSON line out of that tail. r04's
@@ -1119,10 +934,7 @@ def main() -> None:
     # goes to a FILE, and stdout's final line is a compact headline —
     # per-query min wall + scaling efficiencies only — guaranteed to fit.
     detail_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_DETAIL",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_DETAIL.json"),
-    )
+        "SPARK_GRAFT_BENCH_DETAIL", os.path.join(HERE, "BENCH_DETAIL.json"))
     with open(detail_path, "w") as fh:
         json.dump(detail, fh)
         fh.write("\n")
@@ -1145,21 +957,19 @@ def main() -> None:
     }
     if mono is not None:
         headline["speedup_16_to_32"] = mono["speedup_hi_over_lo"]
-    if pagerank_split is not None:
-        headline["pagerank_per_iter_sec"] = pagerank_split["per_iter_sec"]
-    if probe is not None and "multiproc_eff_8_to_16" in probe:
+    headline["pagerank_per_iter_sec"] = pagerank_split["per_iter_sec"]
+    if "multiproc_eff_8_to_16" in probe:
         # separate-JVM arrangement (what a real cluster runs): per-process
         # cost of doubling 8 -> 16 busy cores; pairs with scaling_eff to
         # show single-JVM droop past ~8 cores is the host ceiling, not
         # the engine (full probe in the detail file)
         headline["multiproc_eff_8_to_16"] = probe["multiproc_eff_8_to_16"]
-    if multiexec:
+    mx_eff = {f"local[{m['cores_per_executor']}]": m["efficiency"]
+              for m in multiexec if "efficiency" in m}
+    if mx_eff:
         # the north rule's own arrangement: 1 vs 4 executor PROCESSES
         # (local[N] each), disjoint quarters of the same input
-        headline["multiexec_eff_1_to_4"] = {
-            f"local[{m['cores_per_executor']}]": m["efficiency"]
-            for m in multiexec
-        }
+        headline["multiexec_eff_1_to_4"] = mx_eff
     line = json.dumps(headline)
     if len(line) > 1900:
         # hard guarantee: never outgrow the driver tail again — shed the
@@ -1167,7 +977,6 @@ def main() -> None:
         headline["queries"] = {
             k: queries[k]
             for k in ("pipeline_rollup", "cascade_only", "quality_funnel")
-            if k in queries
         }
         headline["queries_truncated_see_detail"] = True
         line = json.dumps(headline)

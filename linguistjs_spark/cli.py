@@ -124,6 +124,15 @@ def main(argv: list[str] | None = None) -> int:
                          "(enables the ppl stage with the embedded model "
                          "unless --ppl-model is also given)")
     args = ap.parse_args(argv)
+    if args.ppl_model:
+        # fail before the session starts; the ppl stage raises the same
+        # OSError at plan build (perplexity.try_import_kenlm)
+        try:
+            with open(args.ppl_model, "rb"):
+                pass
+        except OSError as e:
+            print(f"error: --ppl-model: {e}", file=sys.stderr)
+            return 2
 
     from pyspark.sql import SparkSession
 

@@ -79,7 +79,9 @@ def perplexity(text: str | None) -> float:
 
 
 def try_import_kenlm(model_path: str | None):
-    """Real-model hook: returns a scoring callable or None.
+    """Real-model hook: returns a scoring callable or None. A named model
+    file that cannot be read raises (FileNotFoundError when it is missing)
+    instead of scoring with the built-in model.
 
     Prefers the ``kenlm`` package (mmap path, the production choice for
     multi-GB binaries). When the package is absent but ``model_path`` is a
@@ -97,11 +99,8 @@ def try_import_kenlm(model_path: str | None):
     if kenlm is not None:
         model = kenlm.Model(model_path)
         return lambda s: model.perplexity(s or "")
-    try:
-        with open(model_path, encoding="utf-8", errors="ignore") as f:
-            head = f.read(4096)
-    except OSError:
-        return None
+    with open(model_path, encoding="utf-8", errors="ignore") as f:
+        head = f.read(4096)
     if "\\data\\" not in head:
         return None  # a binary .klm without the package stays a no-op
     from .arpa_lm import ArpaModel

@@ -190,3 +190,21 @@ def test_pipeline_ppl_stage_uses_model_file(tmp_path, spark):
         scrub_pii=False, toxicity_filter=False)
     out = run_pipeline(spark, pages, cfg).select("ppl").collect()
     assert out[0].ppl == pytest.approx(10.0 ** (0.9 / 3))
+
+
+def test_hook_missing_model_file_raises(tmp_path):
+    """A named model file that is missing fails loudly instead of scoring
+    with the built-in char-bigram model."""
+    from linguistjs_spark.perplexity import try_import_kenlm
+
+    with pytest.raises(OSError):
+        try_import_kenlm(str(tmp_path / "absent.arpa"))
+
+
+def test_cli_missing_ppl_model_exits_2(tmp_path, capsys):
+    from linguistjs_spark.cli import main
+
+    missing = tmp_path / "absent.arpa"
+    assert main([str(tmp_path), "--ppl-model", str(missing)]) == 2
+    err = capsys.readouterr().err
+    assert err.startswith("error: --ppl-model:") and str(missing) in err
