@@ -1189,23 +1189,11 @@ def q_crawl_frontier_priority(spark, sf_dir):
     High-quality well-linked domains get recrawl budget first. Two
     map-side-combined groupBys + one domain equi-join; text and html
     never shuffle."""
-    from linguistjs_spark.operators import gopher as G
     from linguistjs_spark.operators import link_graph as LG
     from linguistjs_spark.operators.retrieval import _qd
     import linguistjs_spark.operators.url_ops as U
 
-    pages = _messy_urls(spark, sf_dir)
-    keep = G.gopher_quality_drop_reason_col(F.col("text")).isNull()
-    q = (
-        pages.select(
-            U.domain_col(F.col("url")).alias("domain"), keep.alias("keep"))
-        .groupBy("domain")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        )
-        .withColumn("keep_bp", F.expr("10000 * n_keep div n_docs"))
-    )
+    q = U.domain_quality_profile(_messy_urls(spark, sf_dir))
     links = LG.anchor_text_stats(
         LG.extract_anchors(_pagerank_pages(spark, sf_dir)))
     j = q.join(
@@ -1609,12 +1597,11 @@ _SAMPLE_FRACTIONS = {"en": 0.5, "de": 0.25, "fr": 0.25, "es": 0.1}
 
 
 def q_training_mix(spark, sf_dir):
-    """End-to-end training-mix materialization as ONE composed plan:
-    exact-dedup winners (min-id per text fingerprint, a single window
-    shuffle — no second corpus scan) -> eval-set decontamination (13-gram
-    broadcast probe, same gram domain as `decontaminate`) -> deterministic
-    key-hash stratified sampling (same fractions/seed as
-    `stratified_sample`) -> per-lang (n_docs, bytes) rollup.
+    """End-to-end training-mix materialization as ONE composed plan
+    (`training_select.training_mix`: exact-dedup winners -> 13-gram
+    decontamination against the doc_id % 50 eval slice -> stratified
+    sampling with `stratified_sample`'s fractions and seed) -> per-lang
+    (n_docs, bytes) rollup.
 
     This is the workflow a reference user actually runs end to end
     (reference: full analyse() pipeline, /root/reference/src/index.ts:100+
@@ -1623,34 +1610,12 @@ def q_training_mix(spark, sf_dir):
     shuffle-free sampling) and Catalyst pipelines them into one job. The
     oracle restates all four stages as chained CTEs plus the xxhash64
     sampling twin."""
-    import linguistjs_spark.operators.decontam as DCN
-    from linguistjs_spark.operators.sampling import stratified_sample
-    from pyspark.sql import Window
+    from linguistjs_spark.operators.training_select import (
+        mix_rollup, training_mix)
 
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    # 1. exact dedup: min doc_id wins per exact text (fingerprint groups;
-    #    never shuffles full text as the key)
-    w = Window.partitionBy(F.xxhash64("text")).orderBy("doc_id")
-    winners = (
-        docs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1).drop("_rn")
-    )
-    # 2. decontamination: bench grams drawn from the FULL corpus slice
-    #    (doc_id % 50 == 0, as in `decontaminate`); bench members are
-    #    self-contaminated, so the eval set drops out of the mix too
     bench = docs.filter(F.col("doc_id") % 50 == 0)
-    clean = DCN.contamination_flags(winners, bench, n=13).filter(
-        ~F.col("is_contaminated")
-    )
-    # 3. deterministic stratified sampling (retry/layout-stable)
-    sampled = stratified_sample(
-        clean, _SAMPLE_FRACTIONS, strata_col="lang", key_col="doc_id", seed=7
-    )
-    # 4. per-lang mix rollup
-    return sampled.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.octet_length("text")).cast("long").alias("bytes"),
-    )
+    return mix_rollup(training_mix(docs, bench, _SAMPLE_FRACTIONS, 7))
 
 
 def q_warc_roundtrip(spark, sf_dir):
@@ -1700,10 +1665,11 @@ def q_repetition_scores(spark, sf_dir):
     # arithmetic (count * len / len) — bit-identical across engines, so no
     # rounding is applied. Ties pinned to the lexicographically smallest
     # bigram on both sides.
-    from linguistjs_spark.operators.quality import top_bigram_ratio_col
+    from linguistjs_spark.operators.gopher import top_ngram_char_ratio_col
 
     return _docs(spark, sf_dir).select(
-        "doc_id", top_bigram_ratio_col(F.col("text")).alias("top_bigram_ratio")
+        "doc_id",
+        top_ngram_char_ratio_col(F.col("text"), 2).alias("top_bigram_ratio"),
     )
 
 
@@ -1791,32 +1757,12 @@ def q_domain_quality(spark, sf_dir):
     Gopher-keep count, keep rate (basis points, INTEGER floor division so
     both engines agree without float-tie hazards), and kept bytes. One
     projection of whole-text codegen scans + ONE map-side-combined
-    groupBy on domain — the Zipf-skewed domain key collapses per
-    partition before the shuffle, the same partial-agg shield as
-    domain_rollup. Text never shuffles."""
-    from linguistjs_spark.operators import gopher as G
+    groupBy on domain (`url_ops.domain_quality_profile`). Text never
+    shuffles."""
     import linguistjs_spark.operators.url_ops as U
 
-    pages = _messy_urls(spark, sf_dir)
-    keep = G.gopher_quality_drop_reason_col(F.col("text")).isNull()
-    scored = pages.select(
-        U.domain_col(F.col("url")).alias("domain"),
-        keep.alias("keep"),
-        F.coalesce(F.octet_length("text").cast("long"), F.lit(0)).alias("b"),
-    )
-    return (
-        scored.groupBy("domain")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-            F.sum(F.when(F.col("keep"), F.col("b")).otherwise(F.lit(0)))
-            .cast("long").alias("keep_bytes"),
-        )
-        .withColumn(
-            "keep_bp",
-            F.expr("(10000 * n_keep) div n_docs").cast("long"))
-        .orderBy("domain")
-    )
+    return U.domain_quality_profile(_messy_urls(spark, sf_dir)).orderBy(
+        "domain")
 
 
 def q_crawl_delta(spark, sf_dir):

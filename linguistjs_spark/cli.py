@@ -39,6 +39,44 @@ def tree_lookup(obj, dotpath: str):
     return cur
 
 
+def _read_pages(spark, args):
+    """The input pages: parquet, or WARC segments with --warc."""
+    if args.warc:
+        # CC segment layout. Default ingest is the CHUNKED reader
+        # (VERDICT r04 item 4): ranged byte-window tasks bound per-task
+        # memory by --warc-chunk-bytes + one record, independent of
+        # segment size — a whole-segment row (~1 GiB) per task was the
+        # documented 100-TB hazard. Remote URIs (s3://, hdfs://) and
+        # --warc-chunk-bytes 0 fall back to the whole-segment
+        # binaryFile path, which any Hadoop FS can serve. (WARC rows
+        # carry html only — the implied extract_html stage produces
+        # the text column downstream.)
+        local = "://" not in args.input or args.input.startswith("file:")
+        if local and args.warc_chunk_bytes > 0:
+            from .sources.warc import (
+                pages_from_warc_chunks,
+                warc_chunks_for_dir,
+            )
+
+            in_dir = args.input
+            if in_dir.startswith("file:"):
+                in_dir = in_dir[len("file:"):]
+            chunks = warc_chunks_for_dir(
+                spark, in_dir, chunk_bytes=args.warc_chunk_bytes
+            )
+            return pages_from_warc_chunks(chunks)
+        from .sources.warc import pages_from_warc
+
+        segments = (
+            spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.warc*")
+            .load(args.input)
+            .select("content")
+        )
+        return pages_from_warc(spark, segments, data_col="content")
+    return spark.read.parquet(args.input)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="linguistjs-spark")
     ap.add_argument("input", help="pages parquet directory")
@@ -134,6 +172,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: --ppl-model: {e}", file=sys.stderr)
             return 2
 
+    from pyspark.errors import AnalysisException
     from pyspark.sql import SparkSession
 
     from .config import QualityFilterConfig
@@ -179,42 +218,17 @@ def main(argv: list[str] | None = None) -> int:
         .getOrCreate()
     )
     try:
-        if args.warc:
-            # CC segment layout. Default ingest is the CHUNKED reader
-            # (VERDICT r04 item 4): ranged byte-window tasks bound per-task
-            # memory by --warc-chunk-bytes + one record, independent of
-            # segment size — a whole-segment row (~1 GiB) per task was the
-            # documented 100-TB hazard. Remote URIs (s3://, hdfs://) and
-            # --warc-chunk-bytes 0 fall back to the whole-segment
-            # binaryFile path, which any Hadoop FS can serve. (WARC rows
-            # carry html only — the implied extract_html stage produces
-            # the text column downstream.)
-            local = "://" not in args.input or args.input.startswith("file:")
-            if local and args.warc_chunk_bytes > 0:
-                from .sources.warc import (
-                    pages_from_warc_chunks,
-                    warc_chunks_for_dir,
-                )
-
-                in_dir = args.input
-                if in_dir.startswith("file:"):
-                    in_dir = in_dir[len("file:"):]
-                chunks = warc_chunks_for_dir(
-                    spark, in_dir, chunk_bytes=args.warc_chunk_bytes
-                )
-                pages = pages_from_warc_chunks(chunks)
-            else:
-                from .sources.warc import pages_from_warc
-
-                segments = (
-                    spark.read.format("binaryFile")
-                    .option("pathGlobFilter", "*.warc*")
-                    .load(args.input)
-                    .select("content")
-                )
-                pages = pages_from_warc(spark, segments, data_col="content")
-        else:
-            pages = spark.read.parquet(args.input)
+        try:
+            pages = _read_pages(spark, args)
+        except AnalysisException as e:
+            # an empty or missing input directory is a usage error, reported
+            # like a wrong-shaped table below, not a traceback
+            if e.getCondition() not in ("UNABLE_TO_INFER_SCHEMA",
+                                        "PATH_NOT_FOUND"):
+                raise
+            print(f"error: input {args.input} is empty or missing "
+                  f"({e.getCondition()})", file=sys.stderr)
+            return 2
         missing = [c for c in ("url", "text") if c not in pages.columns]
         if missing:
             print(
@@ -285,8 +299,17 @@ def main(argv: list[str] | None = None) -> int:
             except (OSError, ValueError) as e:
                 print(f"error: --model-quality: {e}", file=sys.stderr)
                 return 2
+            # score the text the label program will read: with extraction
+            # on, html-only pages (every WARC row) are scored on their
+            # extracted text; pages still without text pass
+            text = F.col("text")
+            if cfg.extract_html:
+                from .operators.extract import page_text_col
+
+                text = page_text_col(text, F.col("html"))
             dropped = model_quality_filter(
-                pages.where(F.col("text").isNotNull()).select("url", "text"),
+                pages.select("url", text.alias("text"))
+                .where(F.col("text").isNotNull()),
                 logit_dim_df(spark, model),
                 min_prob=args.model_quality_min_prob,
                 id_col="url",

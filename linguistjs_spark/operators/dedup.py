@@ -46,24 +46,30 @@ def _let(expr: Column, body) -> Column:
 # ---------------------------------------------------------------------------
 
 
+def content_fingerprint(text: Column) -> tuple[Column, Column]:
+    """The 128-bit exact-content key of a text: two independently seeded
+    xxhash64 halves over ``normalized_text`` (the seed is the extra literal
+    column, which xxhash64 folds into the stream). Batch and streaming
+    exact dedup both key on it, so they agree on what "identical" means."""
+    norm = normalized_text(text)
+    return F.xxhash64(norm), F.xxhash64(norm, F.lit(1))
+
+
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Keep the min-id representative per exact (normalized) text.
 
-    One shuffle on a 128-bit composite fingerprint (two independently
-    seeded xxhash64 halves — the seed is the extra literal column, which
-    xxhash64 folds into the stream); at 100 TB this groupBy benefits from
-    AQE coalescing and never materialises text twice (we group by the
-    hashes, not the text). 128 bits matter here (VERDICT r03): this
-    operator promises EXACT semantics, and a single 64-bit key at 10^12
-    rows expects ~3e4 birthday collisions, each silently merging two
-    unrelated documents — the same defect class fixed in url_dedup
+    One shuffle on the 128-bit ``content_fingerprint``; at 100 TB this
+    groupBy benefits from AQE coalescing and never materialises text twice
+    (we group by the hashes, not the text). 128 bits matter here (VERDICT
+    r03): this operator promises EXACT semantics, and a single 64-bit key
+    at 10^12 rows expects ~3e4 birthday collisions, each silently merging
+    two unrelated documents — the same defect class fixed in url_dedup
     (url_ops.py), closed there by grouping on the canonical string and
     here by widening the key, since normalized text is too large to
     shuffle as the key itself."""
-    norm = normalized_text(F.col(text_col))
+    fp1, fp2 = content_fingerprint(F.col(text_col))
     return (
-        docs.withColumn("_fp1", F.xxhash64(norm))
-        .withColumn("_fp2", F.xxhash64(norm, F.lit(1)))
+        docs.withColumns({"_fp1": fp1, "_fp2": fp2})
         .groupBy("_fp1", "_fp2")
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_copies"))
         .drop("_fp1", "_fp2")
@@ -87,8 +93,7 @@ def dedup_cardinality(
     exact_dedup (a 64-bit distinct count would undercount by the birthday
     collisions it claims to rule out); the HLL sketch keeps the single
     64-bit hash — it is approximate by contract and rehashes internally."""
-    norm = normalized_text(F.col(text_col))
-    fp = F.xxhash64(norm)
+    fp, fp2 = content_fingerprint(F.col(text_col))
     aggs = [
         F.count("*").alias("n_docs"),
         F.approx_count_distinct(fp, rsd).alias("n_unique_approx"),
@@ -96,9 +101,7 @@ def dedup_cardinality(
     if exact:
         aggs.insert(
             1,
-            F.count_distinct(fp, F.xxhash64(norm, F.lit(1))).alias(
-                "n_unique_exact"
-            ),
+            F.count_distinct(fp, fp2).alias("n_unique_exact"),
         )
     out = docs.agg(*aggs)
     if exact:

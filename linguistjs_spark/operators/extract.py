@@ -114,6 +114,17 @@ def extract_text_col(html: Column) -> Column:
     return s
 
 
+def page_text_col(text: Column, html: Column) -> Column:
+    """A page's text: ``text`` when present, else the text extracted from
+    ``html`` unless the first KiB of the html holds a NUL byte (a binary
+    payload stays NULL). The label program and the CLI's model-quality
+    gate read page text through this one expression."""
+    raw_bin = html.isNotNull() & F.contains(
+        F.substring(html, 1, 1024), F.lit(b"\x00")
+    )
+    return F.coalesce(text, F.when(~raw_bin, extract_text_col(html)))
+
+
 def extracted_pages(pages: DataFrame, html_col: str = "html",
                     out_col: str = "text_extracted") -> DataFrame:
     """Attach the extracted-text column to a pages DataFrame (one

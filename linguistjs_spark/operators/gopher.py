@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..oracle import LINE_SPLIT_PAT, WORD_SPLIT_PAT
 from .dedup import _let
-from .quality import _WORD_RUN_PAT, _WS_CHAR_PAT, _nonblank
+from .quality import _WORD_RUN_PAT, _WS_CHAR_PAT, _nonblank, words_col
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
@@ -268,10 +268,6 @@ def _ngrams(w: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _words(text: Column) -> Column:
-    return F.filter(F.split(text, WORD_SPLIT_PAT), lambda x: x != F.lit(""))
-
-
 def _top_ngram_from_words(text: Column, w: Column, n: int) -> Column:
     """top_ngram_char_ratio_col body over an already-bound words array —
     shared by the per-signal column and gopher_repetition_struct (HOF
@@ -306,11 +302,15 @@ def _top_ngram_from_words(text: Column, w: Column, n: int) -> Column:
 
 def top_ngram_char_ratio_col(text: Column, n: int) -> Column:
     """Chars of the most frequent word n-gram (count x len, space-joined) /
-    total chars. Generalizes quality.top_bigram_ratio_col (same sorted-run
-    fold, same smallest-gram tie-break); 0.0 below n words."""
+    total chars; 0.0 below n words. Native per-row algebra: sort the
+    n-gram array and find the longest run with one F.aggregate fold (equal
+    grams are contiguous after the sort). The strictly-greater update makes
+    ties deterministic: the lexicographically smallest top gram wins. At
+    n=2 this is the pipeline's Gopher repetition signal (twin:
+    oracle.top_bigram_ratio)."""
     if n < 2:
         raise ValueError("top_ngram_char_ratio_col needs n >= 2")
-    return _let(_words(text), lambda w: _top_ngram_from_words(text, w, n))
+    return _let(words_col(text), lambda w: _top_ngram_from_words(text, w, n))
 
 
 def dup_ngram_char_ratio_col(text: Column, n: int) -> Column:
@@ -325,7 +325,7 @@ def dup_ngram_char_ratio_col(text: Column, n: int) -> Column:
     inside codegen, no UDF, no shuffle."""
     if n < 2:
         raise ValueError("dup_ngram_char_ratio_col needs n >= 2")
-    return _let(_words(text), lambda w: _dup_ngram_from_words(text, w, n))
+    return _let(words_col(text), lambda w: _dup_ngram_from_words(text, w, n))
 
 
 def _dup_ngram_from_words(text: Column, w: Column, n: int) -> Column:
@@ -555,7 +555,7 @@ def gopher_repetition_struct(text: Column) -> Column:
             _dup_ngram_from_words(text, w, 10).alias("dup10"),
         )
 
-    return _let(_words(text), build)
+    return _let(words_col(text), build)
 
 
 #: Gopher Table A1 repetition thresholds over the signals this module

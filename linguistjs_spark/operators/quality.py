@@ -146,7 +146,7 @@ def quality_drop_reason_col(
     """CASE chain mirroring oracle.quality_drop_reason (rule order matters).
 
     ``top_bigram`` is the optional Gopher repetition score column
-    (top_bigram_ratio_col); it is only consulted when
+    (gopher.top_ngram_char_ratio_col(text, 2)); it is only consulted when
     cfg.max_top_bigram_ratio is set, so the default plan never pays for
     the bigram fold. ``stopword_hits`` (gopher.stopword_hits_col) is the
     same pattern for cfg.min_stopword_hits — Gopher's English 8-stopword
@@ -171,7 +171,7 @@ def quality_drop_reason_col(
             # from oracle.quality_drop_reason (which always applies it)
             raise ValueError(
                 "cfg.max_top_bigram_ratio is set but no top_bigram column "
-                "was supplied — pass top_bigram_ratio_col(text)"
+                "was supplied — pass gopher.top_ngram_char_ratio_col(text, 2)"
             )
         case = case.when(
             top_bigram > cfg.max_top_bigram_ratio, F.lit("quality-repetition")
@@ -186,59 +186,6 @@ def quality_drop_reason_col(
             stopword_hits < cfg.min_stopword_hits, F.lit("quality-stopwords")
         )
     return case.otherwise(F.lit(None))
-
-
-def top_bigram_ratio_col(text: Column) -> Column:
-    """Gopher repetition signal: (occurrences of the most frequent word
-    2-gram x its character length) / total characters. 0.0 for texts with
-    fewer than two words.
-
-    Fully native per-row algebra: build the bigram array, sort it, and find
-    the longest run with one F.aggregate fold (equal bigrams are contiguous
-    after the sort). The strictly-greater update makes ties deterministic:
-    the lexicographically smallest top bigram wins — the DuckDB oracle
-    restates that with ORDER BY cnt DESC, bigram ASC. No shuffle, no UDF;
-    cost is O(words log words) per row inside codegen."""
-    from .dedup import _let
-
-    words = words_col(text)
-
-    def build(w: Column) -> Column:
-        n = F.size(w)
-        bigrams = F.when(
-            n >= 2,
-            F.array_sort(
-                F.transform(
-                    F.sequence(F.lit(1), n - 1),
-                    lambda i: F.concat_ws(" ", F.slice(w, i, 2)),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        zero = F.lit(0).cast("long")
-        acc0 = F.struct(
-            F.lit("").alias("prev"), zero.alias("run"),
-            zero.alias("best"), F.lit("").alias("bstr"),
-        )
-
-        def merge(acc, x):
-            run = F.when(x == acc.getField("prev"), acc.getField("run") + 1) \
-                .otherwise(F.lit(1).cast("long"))
-            better = run > acc.getField("best")
-            return F.struct(
-                x.alias("prev"),
-                run.alias("run"),
-                F.when(better, run).otherwise(acc.getField("best")).alias("best"),
-                F.when(better, x).otherwise(acc.getField("bstr")).alias("bstr"),
-            )
-
-        red = F.aggregate(bigrams, acc0, merge)
-        return F.when(
-            (F.length(text) > 0) & (red.getField("best") > 0),
-            (red.getField("best") * F.length(red.getField("bstr")))
-            .cast("double") / F.length(text),
-        ).otherwise(F.lit(0.0))
-
-    return _let(words, build)
 
 
 def dedup_lines_col(text: Column, keep_blank: bool = True) -> Column:

@@ -32,11 +32,13 @@ import math
 import re
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..oracle import WORD_SPLIT_PAT
+from .decontam import contamination_flags
 from .dedup import _let, normalized_text
+from .sampling import stratified_sample
 
 
 def hashed_ngram_features(text: Column, buckets: int = 1024) -> Column:
@@ -125,6 +127,44 @@ def dsir_scores(
             "n_feats"
         ),
         dsir_score_col(text, weights).alias("dsir_score"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# the composed training mix
+# ---------------------------------------------------------------------------
+
+
+def training_mix(
+    docs: DataFrame, bench: DataFrame, fractions: dict[str, float], seed: int
+) -> DataFrame:
+    """The training-mix composition over (doc_id, lang, text) rows:
+    exact-dedup winners (min doc_id per ``xxhash64(text)``, one window
+    shuffle — text never becomes the key) -> eval-set decontamination
+    (13-gram broadcast probe against ``bench``; bench members are
+    self-contaminated, so an eval slice drawn from ``docs`` drops out of
+    the mix too) -> deterministic key-hash stratified sampling (retry- and
+    layout-stable). Returns the sampled rows with ``n_hits`` and without
+    ``is_contaminated``. The one-shot ``q_training_mix`` query and the
+    resumable per-bucket writer both build the mix here."""
+    w = Window.partitionBy(F.xxhash64("text")).orderBy("doc_id")
+    winners = (
+        docs.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1).drop("_rn")
+    )
+    clean = contamination_flags(winners, bench, n=13).filter(
+        ~F.col("is_contaminated")
+    ).drop("is_contaminated")
+    return stratified_sample(
+        clean, fractions, strata_col="lang", key_col="doc_id", seed=seed
+    )
+
+
+def mix_rollup(mix: DataFrame) -> DataFrame:
+    """Per-lang (n_docs, bytes) of a training mix."""
+    return mix.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.octet_length("text")).cast("long").alias("bytes"),
     )
 
 

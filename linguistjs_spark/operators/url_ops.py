@@ -19,7 +19,8 @@ restate them verbatim) plus one aggregation where stated:
     ``warc_ts`` wins, ties broken by lexicographically LARGEST url
     string — max_by on struct(ts, url)): a single groupBy(max_by) on the
     canonical-url hash — recrawl dedup.
-  * ``domain_rollup`` — docs/bytes per domain: one map-side-combined
+  * ``domain_rollup`` — docs/bytes per domain (``domain_quality_profile``
+    is the same shape over the Gopher keep flag): one map-side-combined
     groupBy; at 10^12 docs domains are Zipf-skewed, so the rollup groups on
     (domain) only after the per-partition partial agg has already collapsed
     each partition's hot domains to one row each (standard partial-agg
@@ -250,6 +251,34 @@ def domain_rollup(
             F.sum("bytes").alias("total_bytes"),
             agg_urls.alias("n_urls"),
         )
+    )
+
+
+def domain_quality_profile(pages: DataFrame) -> DataFrame:
+    """Per-domain Gopher keep profile of (url, text) pages, unsorted:
+    domain, n_docs, n_keep (docs with no Gopher drop reason), keep_bytes
+    (their UTF-8 bytes) and keep_bp (INTEGER floor basis points, so every
+    engine agrees without float-tie hazards). One map-side-combined
+    groupBy on domain, the domain_rollup skew shield; text never
+    shuffles. Callers that read no keep_bytes get it pruned."""
+    from .gopher import gopher_quality_drop_reason_col
+
+    keep = gopher_quality_drop_reason_col(F.col("text")).isNull()
+    return (
+        pages.select(
+            domain_col(F.col("url")).alias("domain"),
+            keep.alias("keep"),
+            F.coalesce(F.octet_length("text").cast("long"), F.lit(0)).alias("b"),
+        )
+        .groupBy("domain")
+        .agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum(F.col("keep").cast("long")).alias("n_keep"),
+            F.sum(F.when(F.col("keep"), F.col("b")).otherwise(F.lit(0)))
+            .cast("long").alias("keep_bytes"),
+        )
+        .withColumn(
+            "keep_bp", F.expr("(10000 * n_keep) div n_docs").cast("long"))
     )
 
 

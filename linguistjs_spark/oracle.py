@@ -441,8 +441,8 @@ def quality_features(text: str) -> dict:
 
 
 def top_bigram_ratio(text: str) -> float:
-    """Twin of operators.quality.top_bigram_ratio_col (Gopher repetition
-    signal; ties broken by lexicographically smallest bigram)."""
+    """Twin of operators.gopher.top_ngram_char_ratio_col(text, 2) (Gopher
+    repetition signal; ties broken by lexicographically smallest bigram)."""
     words = [w for w in _WORD_SPLIT_RE.split(text) if w]
     if len(words) < 2 or not text:
         return 0.0

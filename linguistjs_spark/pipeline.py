@@ -219,17 +219,12 @@ def _label_steps(
     first_level = {"path": path}
     # Optional HTML->text extraction for pages without pre-extracted text
     # (still the same single pass: one more native expression, no branch).
-    # The binary sniff guard reuses the exact expression _is_bin is built
-    # from below — codegen shares it within the projection.
+    # Its binary sniff guard is the exact expression _is_bin is built from
+    # below — codegen shares it within the projection.
     if cfg.extract_html:
-        from .operators.extract import extract_text_col
+        from .operators.extract import page_text_col
 
-        raw_bin = F.col("html").isNotNull() & F.contains(
-            F.substring(F.col("html"), 1, 1024), F.lit(b"\x00")
-        )
-        first_level["text"] = F.coalesce(
-            text, F.when(~raw_bin, extract_text_col(F.col("html")))
-        )
+        first_level["text"] = page_text_col(text, F.col("html"))
 
     # Row-liveness flags (all native, evaluated once per row):
     #   _eligible: survives path filters and has readable text
@@ -425,9 +420,9 @@ def _label_steps(
 
     top_bigram = None
     if cfg.max_top_bigram_ratio is not None:
-        from .operators.quality import top_bigram_ratio_col
+        from .operators.gopher import top_ngram_char_ratio_col
 
-        top_bigram = F.when(alive, top_bigram_ratio_col(text))
+        top_bigram = F.when(alive, top_ngram_char_ratio_col(text, 2))
     stop_hits = None
     if cfg.min_stopword_hits > 0:
         from .operators.gopher import stopword_hits_col

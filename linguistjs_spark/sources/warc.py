@@ -28,13 +28,10 @@ import io
 import zlib
 from typing import Iterable, Iterator
 
+from .pages import PAGES_SCHEMA
+
 CRLF = b"\r\n"
 _GZ_MAGIC = b"\x1f\x8b"
-
-# pages schema minus `text`/`lang` (both NULL until extraction/langid)
-WARC_PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
 
 
 def _gunzip_members(raw: bytes) -> bytes:
@@ -153,7 +150,7 @@ def pages_from_warc(spark, segments, data_col: str = "data"):
                 rows, columns=["url", "warc_ts", "html", "text", "lang"]
             )
 
-    return segments.mapInPandas(expand, schema=WARC_PAGES_SCHEMA)
+    return segments.mapInPandas(expand, schema=PAGES_SCHEMA)
 
 
 def warc_segments_from_pages(
@@ -400,7 +397,7 @@ def pages_from_warc_chunks(chunks):
                 rows, columns=["url", "warc_ts", "html", "text", "lang"]
             )
 
-    return chunks.mapInPandas(expand, schema=WARC_PAGES_SCHEMA)
+    return chunks.mapInPandas(expand, schema=PAGES_SCHEMA)
 
 
 def build_warc_segment(

@@ -215,29 +215,17 @@ def resumable_training_mix(
     lineage rows to ``<out>/_lineage``. Returns the same dict shape as
     ``resumable_run``. ``training_mix_rollup`` aggregates the final mix.
     """
-    from pyspark.sql import Window
-
-    from ..operators.decontam import contamination_flags
-    from ..operators.sampling import stratified_sample
+    from ..operators.training_select import training_mix
 
     docs = docs.select("doc_id", "lang", "text")
     bucket_col = F.pmod(F.xxhash64("text"), F.lit(num_buckets)).cast("int")
+    bench = docs.filter(F.col("doc_id") % bench_every == 0)  # global probe
 
     def build(pending):
-        part = docs.filter(bucket_col.isin(pending))
         # dedup inside the bucket == global dedup (fingerprint-aligned buckets)
-        w = Window.partitionBy(F.xxhash64("text")).orderBy("doc_id")
-        winners = (
-            part.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn")
-        )
-        bench = docs.filter(F.col("doc_id") % bench_every == 0)  # global probe
-        clean = contamination_flags(winners, bench, n=13).filter(
-            ~F.col("is_contaminated")
-        ).drop("is_contaminated")
-        return stratified_sample(
-            clean, fractions, strata_col="lang", key_col="doc_id", seed=seed
-        ).withColumn("bucket", bucket_col)
+        part = docs.filter(bucket_col.isin(pending))
+        return training_mix(part, bench, fractions, seed).withColumn(
+            "bucket", bucket_col)
 
     return _bucket_job(spark, docs, output_dir, "mix", num_buckets,
                        fail_after, build, F.count("*"))
@@ -313,11 +301,6 @@ def pagerank_ranks(spark: SparkSession, output_dir: str, it: int) -> DataFrame:
 def training_mix_rollup(spark: SparkSession, output_dir: str) -> DataFrame:
     """Per-lang (n_docs, bytes) over the materialized mix — the same shape
     as the one-shot ``training_mix`` driver query's output."""
-    return (
-        spark.read.parquet(f"{output_dir}/mix")
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.octet_length("text")).cast("long").alias("bytes"),
-        )
-    )
+    from ..operators.training_select import mix_rollup
+
+    return mix_rollup(spark.read.parquet(f"{output_dir}/mix"))

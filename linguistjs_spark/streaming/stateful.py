@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .stream_pipeline import _drain
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType(), True),
@@ -64,31 +66,17 @@ def stream_event_windows(
     watermark: str = "2 hours",
 ):
     """Drain available event files into a windowed-count parquet sink."""
-    ev = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(input_dir)
-    )
-    agg = (
-        ev.withWatermark("ts", watermark)
+    return _drain(
+        spark, EVENTS_SCHEMA, input_dir, output_dir, checkpoint_dir,
+        lambda ev: ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("window.start").alias("win_start"),
             "event_type",
             "n_events",
-        )
+        ),
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def _make_sessionizer(gap_s: int):
@@ -150,13 +138,9 @@ def stream_sessionize(
     """Drain available event files, appending CLOSED sessions to the sink."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ev = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(input_dir)
-    )
-    sessions = (
-        ev.withWatermark("ts", watermark)
+    return _drain(
+        spark, EVENTS_SCHEMA, input_dir, output_dir, checkpoint_dir,
+        lambda ev: ev.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
             _make_sessionizer(gap_s),
@@ -164,15 +148,5 @@ def stream_sessionize(
             stateStructType=SESSION_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        ),
     )
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

@@ -3,12 +3,14 @@
 The north rule asks for batch-with-resumability (see resume.py); this module
 adds the genuinely-streaming deployment shape for ongoing crawls: new page
 files landing in a directory are picked up incrementally, run through the
-SAME run_pipeline transformation graph (it is pure per-row column algebra +
-filters + unions — no aggregation — so it is append-mode streamable as-is),
-and appended to a parquet labels sink. The checkpoint directory gives
-exactly-once file-level progress: a restart (or the next AvailableNow run)
-processes only files not yet recorded in the checkpoint — the streaming
-analog of resume.py's per-bucket lineage skip.
+SAME run_pipeline label program (one single-pass chain of per-row
+withColumns steps ending in an observe() fence — no aggregation, no join —
+so it is append-mode streamable as-is), and appended to a parquet labels
+sink. The checkpoint directory gives exactly-once file-level progress: a
+restart (or the next AvailableNow run) processes only files not yet
+recorded in the checkpoint — the streaming analog of resume.py's
+per-bucket lineage skip. Every stream here, and the event streams in
+stateful.py, run through one reader/sink pair (``_drain``).
 
 ``Trigger.AvailableNow`` drains everything currently available and stops,
 which is the recommended incremental-batch pattern (micro-batch sizing via
@@ -23,27 +25,47 @@ not time-windowed state.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-from pyspark.sql.types import (
-    BinaryType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..config import QualityFilterConfig
 from ..pipeline import run_pipeline
+from ..sources.pages import PAGES_SCHEMA
 
-PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), True),
-        StructField("warc_ts", TimestampType(), True),
-        StructField("html", BinaryType(), True),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ]
-)
+
+def _drain(
+    spark: SparkSession,
+    schema: StructType | str,
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    transform: Callable[[DataFrame], DataFrame],
+    max_files_per_trigger: int | None = None,
+):
+    """Read the parquet files under ``input_dir`` as a stream of ``schema``
+    rows, apply ``transform`` and append its output to the parquet sink at
+    ``output_dir`` until everything currently available is drained
+    (AvailableNow). Returns the finished ``StreamingQuery``. Re-invoking
+    with the same checkpoint processes only files added since the last
+    run."""
+    reader = (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+    )
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    query = (
+        transform(reader.parquet(input_dir)).writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return query
 
 
 def stream_labels(
@@ -54,32 +76,13 @@ def stream_labels(
     cfg: QualityFilterConfig | None = None,
     max_files_per_trigger: int | None = None,
 ):
-    """Drain all currently-available page files into the labels sink.
-
-    Returns the finished ``StreamingQuery`` (already awaited). Re-invoking
-    with the same checkpoint processes only files added since the last run.
-    """
-    reader = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("recursiveFileLookup", "true")
+    """Drain all currently-available page files into the labels sink: the
+    label program is one per-row pass, so its labels append as-is (the
+    array<string> ``alternatives`` column is stored unchanged)."""
+    return _drain(
+        spark, PAGES_SCHEMA, input_dir, output_dir, checkpoint_dir,
+        lambda pages: run_pipeline(spark, pages, cfg), max_files_per_trigger,
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.parquet(input_dir)
-
-    labels = run_pipeline(spark, pages, cfg)
-    # parquet sink can't store array<string>-of-null structs from the union
-    # padding; alternatives is already array<string>, keep schema as-is.
-    query = (
-        labels.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
 
 
 def stream_exact_dedup(
@@ -94,7 +97,7 @@ def stream_exact_dedup(
     content fingerprint, with state bounded by a watermark.
 
     Uses ``dropDuplicatesWithinWatermark`` keyed on the 128-bit composite
-    content fingerprint (the same two seeded xxhash64 halves as
+    content fingerprint (dedup.content_fingerprint, the key of
     dedup.exact_dedup, so batch and streaming agree on what "identical"
     means — and share its collision stance: a single 64-bit key at
     10^12 docs expects ~3e4 birthday merges). State design at 10^12-doc
@@ -107,34 +110,17 @@ def stream_exact_dedup(
     """
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import normalized_text
+    from ..operators.dedup import content_fingerprint
 
-    reader = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.parquet(input_dir)
-
-    norm = normalized_text(F.col("text"))
-    deduped = (
-        pages.withColumn("_fp1", F.xxhash64(norm))
-        .withColumn("_fp2", F.xxhash64(norm, F.lit(1)))
+    fp1, fp2 = content_fingerprint(F.col("text"))
+    return _drain(
+        spark, PAGES_SCHEMA, input_dir, output_dir, checkpoint_dir,
+        lambda pages: pages.withColumns({"_fp1": fp1, "_fp2": fp2})
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["_fp1", "_fp2"])
-        .drop("_fp1", "_fp2")
+        .drop("_fp1", "_fp2"),
+        max_files_per_trigger,
     )
-    query = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
 
 
 def stream_quality_stages(
@@ -157,29 +143,12 @@ def stream_quality_stages(
 
     from ..operators.gopher import quality_stage_col
 
-    reader = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("recursiveFileLookup", "true")
+    stage = quality_stage_col(
+        F.coalesce(F.col("text"), F.lit("")),
+        lang=F.col("lang"),
+        min_words=min_words,
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.parquet(input_dir)
-
-    staged = pages.withColumn(
-        "stage",
-        quality_stage_col(
-            F.coalesce(F.col("text"), F.lit("")),
-            lang=F.col("lang"),
-            min_words=min_words,
-        ),
+    return _drain(
+        spark, PAGES_SCHEMA, input_dir, output_dir, checkpoint_dir,
+        lambda pages: pages.withColumn("stage", stage), max_files_per_trigger,
     )
-    query = (
-        staged.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query

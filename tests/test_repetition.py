@@ -5,7 +5,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from linguistjs_spark.operators.quality import top_bigram_ratio_col
+from linguistjs_spark.operators.gopher import top_ngram_char_ratio_col
 from linguistjs_spark.oracle import top_bigram_ratio
 
 CASES = [
@@ -30,7 +30,7 @@ def test_twin_parity_cases_and_fuzz(spark):
     df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)],
                                "i long, t string")
     got = {r.i: r.s for r in df.select(
-        "i", top_bigram_ratio_col(F.col("t")).alias("s")).collect()}
+        "i", top_ngram_char_ratio_col(F.col("t"), 2).alias("s")).collect()}
     for i, c in enumerate(cases):
         assert abs(got[i] - top_bigram_ratio(c)) < 1e-12, (i, repr(c))
 

@@ -314,3 +314,65 @@ def test_cli_model_quality_gate(spark, tmp_path, capsys):
                "--model-quality-min-prob", "1.0"])
     assert rc == 2
     assert "min_prob" in capsys.readouterr().err
+
+
+def test_cli_empty_or_missing_input(spark, tmp_path, capsys):
+    """An empty or missing input directory is a usage error: a clean
+    message and exit 2, like a wrong-shaped table, not a traceback."""
+    from linguistjs_spark.cli import main
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for path, cond in ((empty, "UNABLE_TO_INFER_SCHEMA"),
+                       (tmp_path / "missing", "PATH_NOT_FOUND")):
+        rc = main([str(path)])
+        assert rc == 2
+        err = capsys.readouterr().err
+        assert f"error: input {path}" in err and cond in err
+
+
+def test_cli_model_quality_gate_scores_extracted_text(spark, tmp_path, capsys):
+    """With --extract-html the model gate scores the text the label
+    program extracts, so a spam page whose text lives only in html is
+    dropped and a clean html-only page is kept. The binary page's text
+    stays NULL after extraction; the gate passes it on unscored."""
+    import datetime as dt
+
+    from linguistjs_spark.cli import main
+    from linguistjs_spark.operators.model_filter import (
+        build_demo_quality_model)
+
+    ts = dt.datetime(2020, 1, 1)
+
+    def page(body):
+        return f"<html><body><p>{body}</p></body></html>".encode()
+
+    rows = [
+        ("https://hq.example/a.txt", ts,
+         page("the research study and the analysis were published by the "
+              "university"), None, None),
+        ("https://lq.example/b.txt", ts,
+         page("click the free casino bonus prize and the jackpot offer "
+              "deal"), None, None),
+        ("https://bin.example/c.txt", ts, b"\x00\x01", None, None),
+    ]
+    path = str(tmp_path / "pages_mq_html")
+    spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string",
+    ).write.mode("overwrite").parquet(path)
+    model = str(tmp_path / "mq.bin")
+    build_demo_quality_model(model)
+
+    rc = main([path, "--extract-html", "--list-files"])
+    assert rc == 0
+    base = capsys.readouterr().out
+    assert "hq.example" in base and "lq.example" in base
+
+    rc = main([path, "--extract-html", "--model-quality", model,
+               "--list-files"])
+    assert rc == 0
+    out = capsys.readouterr().out
+    assert "hq.example" in out
+    assert "lq.example" not in out  # scored on its extracted text
