@@ -99,12 +99,12 @@ def main(argv: list[str] | None = None) -> int:
                     "instead of a broadcast (for crawl-wide robots tables "
                     "that exceed the broadcast limit)")
     ap.add_argument("--model-quality", default=None, metavar="PATH",
-                    help="supervised fastText .bin quality classifier: "
-                    "drop pages scored below --model-quality-min-prob "
-                    "before analysis (DCLM/CCNet model tier; scored via "
-                    "the broadcast word-logit join, no per-row python). "
-                    "Pages with NULL text pass (not scoreable); pages "
-                    "with text but no in-vocabulary token drop.")
+                    help="supervised fastText .bin classifier for the "
+                    "label program's model tier: pages below "
+                    "--model-quality-min-prob get keep_reason model-quality, "
+                    "pages with no in-vocabulary token model-quality-oov "
+                    "(not-kept rows in --output labels). Not valid with "
+                    "--pagerank or --gopher-funnel")
     ap.add_argument("--model-quality-min-prob", type=float, default=0.5,
                     metavar="P", help="keep threshold P(hq) for "
                     "--model-quality (default 0.5)")
@@ -162,14 +162,28 @@ def main(argv: list[str] | None = None) -> int:
                          "(enables the ppl stage with the embedded model "
                          "unless --ppl-model is also given)")
     args = ap.parse_args(argv)
-    if args.ppl_model:
-        # fail before the session starts; the ppl stage raises the same
-        # OSError at plan build (perplexity.try_import_kenlm)
+    # usage and model-file errors fail before the session starts (the label
+    # program raises the same model-file errors at plan build)
+    if args.model_quality and (args.pagerank or args.gopher_funnel):
+        print("error: --model-quality needs the label program, which "
+              "--pagerank and --gopher-funnel do not run", file=sys.stderr)
+        return 2
+    from .fasttext_bin import load_model
+    from .operators.model_filter import margin_threshold, require_two_labels
+    from .perplexity import check_ppl_model
+
+    def check_model_quality(path):
+        require_two_labels(load_model(path))
+        margin_threshold(args.model_quality_min_prob)  # range check
+
+    for flag, path, check in (
+            ("--ppl-model", args.ppl_model, check_ppl_model),
+            ("--model-quality", args.model_quality, check_model_quality)):
         try:
-            with open(args.ppl_model, "rb"):
-                pass
-        except OSError as e:
-            print(f"error: --ppl-model: {e}", file=sys.stderr)
+            if path:
+                check(path)
+        except (OSError, ValueError) as e:
+            print(f"error: {flag}: {e}", file=sys.stderr)
             return 2
 
     from pyspark.errors import AnalysisException
@@ -187,6 +201,8 @@ def main(argv: list[str] | None = None) -> int:
         keep_vendored=args.keep_vendored,
         keep_binary=args.keep_binary,
         extract_html=args.extract_html or args.warc,
+        model_quality_path=args.model_quality,
+        model_quality_min_prob=args.model_quality_min_prob,
     )
     if args.categories:
         cfg_kwargs["categories"] = tuple(args.categories.split(","))
@@ -281,43 +297,6 @@ def main(argv: list[str] | None = None) -> int:
             from .operators.extract import filter_noindex
 
             pages = filter_noindex(pages)
-        if args.model_quality:
-            # model-scored quality tier, after the crawl-compliance gates
-            # (robots/noindex) and before content analysis — the order of
-            # a CCNet/DCLM pipeline
-            from pyspark.sql import functions as F
-
-            from .fasttext_bin import load_model
-            from .operators.model_filter import (
-                logit_dim_df, margin_threshold, model_quality_filter,
-                require_two_labels)
-
-            try:
-                model = load_model(args.model_quality)
-                require_two_labels(model)
-                margin_threshold(args.model_quality_min_prob)  # range check
-            except (OSError, ValueError) as e:
-                print(f"error: --model-quality: {e}", file=sys.stderr)
-                return 2
-            # score the text the label program will read: with extraction
-            # on, html-only pages (every WARC row) are scored on their
-            # extracted text; pages still without text pass
-            text = F.col("text")
-            if cfg.extract_html:
-                from .operators.extract import page_text_col
-
-                text = page_text_col(text, F.col("html"))
-            dropped = model_quality_filter(
-                pages.select("url", text.alias("text"))
-                .where(F.col("text").isNotNull()),
-                logit_dim_df(spark, model),
-                min_prob=args.model_quality_min_prob,
-                id_col="url",
-            ).where(~F.col("keep")).select("url")
-            # anti join unhinted: AQE broadcasts a small dropped set and
-            # degrades to sort-merge at percent-level drop rates (the
-            # filter_blocked_domains stance)
-            pages = pages.join(dropped, "url", "left_anti")
         if args.pagerank:
             if "html" not in pages.columns:
                 print("error: --pagerank needs an html column",

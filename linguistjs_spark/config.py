@@ -77,18 +77,14 @@ class QualityFilterConfig:
     # fastText-style langid fallback for documents with no structural signal
     langid_fallback: bool = True
     fasttext_model_path: str | None = None
-    # Model-scored quality tier (DCLM/CCNet style): path to a supervised
-    # fastText .bin; docs whose P(hq) margin falls below
-    # model_quality_min_prob get keep_reason 'model-quality'. Scored by a
-    # vectorized pandas kernel (operators/model_filter.margin_batch),
-    # bit-equal to the operator's broadcast-join path. None = tier off
-    # (default — reference parity). Docs with NO in-vocabulary token pass
-    # unless model_quality_drop_oov (the standalone operator/CLI gate
-    # drops them; here most inputs are code, which a web-text classifier
-    # cannot judge).
+    # Model-scored quality tier (DCLM/CCNet style; CLI --model-quality):
+    # path to a supervised fastText .bin. Docs whose P(hq) falls below
+    # model_quality_min_prob get keep_reason 'model-quality', docs with no
+    # in-vocabulary token (fastText predicts nothing) 'model-quality-oov'.
+    # Scored by operators/model_filter.margin_batch, bit-equal to the
+    # operator's broadcast-join path. None = tier off (reference parity).
     model_quality_path: str | None = None
     model_quality_min_prob: float = 0.5
-    model_quality_drop_oov: bool = False
     # Unicode punctuation canonicalization (operators/normalize.py) applied
     # to the working text before quality/langid/scrub. Off by default: it
     # intentionally changes bytes, so the byte-identical scrubbed-text

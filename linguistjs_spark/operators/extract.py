@@ -117,8 +117,8 @@ def extract_text_col(html: Column) -> Column:
 def page_text_col(text: Column, html: Column) -> Column:
     """A page's text: ``text`` when present, else the text extracted from
     ``html`` unless the first KiB of the html holds a NUL byte (a binary
-    payload stays NULL). The label program and the CLI's model-quality
-    gate read page text through this one expression."""
+    payload stays NULL). The label program reads page text through this
+    one expression."""
     raw_bin = html.isNotNull() & F.contains(
         F.substring(html, 1, 1024), F.lit(b"\x00")
     )

@@ -138,8 +138,9 @@ def _mq_udf(cfg):
     """Model-scored quality tier (supervised fastText .bin) as a pandas UDF
     (text -> margin): vectorized batch kernel (split/merge/groupby all
     pandas C paths), bit-equal to model_filter's broadcast-join formulation
-    — the join shape suits the standalone operator/CLI gate; inside this
-    pipeline a per-row column keeps the label projection shuffle-free."""
+    (tests/test_model_stage.py). The CLI's --model-quality runs this tier;
+    a per-row column keeps the label projection shuffle-free where the
+    join would add an aggregate and a join back to the pages."""
     from .fasttext_bin import load_model as _ft_load
     from .operators.model_filter import (
         margin_batch, require_two_labels, word_logit_rows)
@@ -441,18 +442,12 @@ def _label_steps(
         from .operators.model_filter import margin_threshold
 
         _thr = margin_threshold(cfg.model_quality_min_prob)
+        # mq_margin is NULL here only for alive, text-bearing rows with no
+        # in-vocabulary token, for which fastText predicts nothing (dead
+        # rows matched an earlier branch of the keep_reason CASE chain)
         mq_reason = F.when(
             F.col("mq_margin") < F.lit(_thr), F.lit("model-quality")
-        )
-        if cfg.model_quality_drop_oov:
-            # mq_margin is NULL here only for alive, text-bearing rows
-            # with no in-vocabulary token (dead rows matched an earlier
-            # branch of the keep_reason CASE chain)
-            mq_reason = F.coalesce(
-                mq_reason,
-                F.when(F.col("mq_margin").isNull(),
-                       F.lit("model-quality-oov")),
-            )
+        ).when(F.col("mq_margin").isNull(), F.lit("model-quality-oov"))
     mj_reason = F.lit(None).cast("string")
     if cfg.drop_mojibake:
         from .operators.normalize import bad_unicode_col

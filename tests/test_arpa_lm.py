@@ -148,12 +148,14 @@ def test_hook_falls_back_to_builtin_reader(tmp_path):
     scorer = try_import_kenlm(p)
     assert scorer is not None  # package OR builtin — file format is enough
     assert scorer("b104 b105") > 0
-    # non-ARPA binary without the package stays a clean no-op
+    # non-ARPA binary without the package fails loudly instead of scoring
+    # with the built-in model
     blob = tmp_path / "m.klm"
     blob.write_bytes(b"\x00\x01binary")
     import importlib.util
     if importlib.util.find_spec("kenlm") is None:
-        assert try_import_kenlm(str(blob)) is None
+        with pytest.raises(ValueError, match="m.klm"):
+            try_import_kenlm(str(blob))
 
 
 @pytest.mark.skipif(
@@ -208,3 +210,19 @@ def test_cli_missing_ppl_model_exits_2(tmp_path, capsys):
     assert main([str(tmp_path), "--ppl-model", str(missing)]) == 2
     err = capsys.readouterr().err
     assert err.startswith("error: --ppl-model:") and str(missing) in err
+
+
+@pytest.mark.skipif(
+    __import__("importlib.util", fromlist=["x"]).find_spec("kenlm") is not None,
+    reason="kenlm reads binary model files",
+)
+def test_cli_unusable_ppl_model_exits_2(tmp_path, capsys):
+    """A model file that is neither ARPA text nor loadable without kenlm is
+    a usage error, not a silent fallback to the built-in model."""
+    from linguistjs_spark.cli import main
+
+    blob = tmp_path / "m.klm"
+    blob.write_bytes(b"\x00\x01binary\x00\x02")
+    assert main([str(tmp_path / "pages"), "--ppl-model", str(blob)]) == 2
+    err = capsys.readouterr().err
+    assert err.startswith("error: --ppl-model:") and str(blob) in err

@@ -87,8 +87,6 @@ def test_pipeline_model_tier_labels(spark, pages, model_path):
     assert out["https://a.example/hq.txt"]["keep"] is True
     lq = out["https://a.example/lq.txt"]
     assert lq["keep"] is False and lq["keep_reason"] == "model-quality"
-    # OOV passes by default (a web-text classifier can't judge it)
-    assert out["https://a.example/oov.txt"]["keep"] is True
     # NULL text stays 'unreadable', untouched by the tier
     assert out["https://a.example/null.txt"]["keep_reason"] == "unreadable"
 
@@ -96,7 +94,6 @@ def test_pipeline_model_tier_labels(spark, pages, model_path):
 def test_pipeline_model_tier_drop_oov(spark, pages, model_path):
     cfg = QualityFilterConfig(
         model_quality_path=model_path, model_quality_min_prob=0.6,
-        model_quality_drop_oov=True,
     )
     out = {r["url"]: r for r in run_pipeline(spark, pages, cfg).collect()}
     oov = out["https://a.example/oov.txt"]

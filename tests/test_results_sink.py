@@ -6,6 +6,8 @@ the oracle."""
 
 import json
 
+import pytest
+
 from linguistjs_spark.config import REFERENCE_PARITY_CONFIG as CFG
 from linguistjs_spark.oracle import analyse_document
 from linguistjs_spark.pipeline import run_pipeline
@@ -314,6 +316,80 @@ def test_cli_model_quality_gate(spark, tmp_path, capsys):
                "--model-quality-min-prob", "1.0"])
     assert rc == 2
     assert "min_prob" in capsys.readouterr().err
+
+
+def _mq_pages(spark, path, lq_html_only=False):
+    """The four pages of test_cli_model_quality_gate; with lq_html_only the
+    spam page carries its text only in html."""
+    import datetime as dt
+
+    ts = dt.datetime(2020, 1, 1)
+    lq = "click the free casino bonus prize and the jackpot offer deal"
+    lq_row = (("https://lq.example/b.txt", ts,
+               f"<html><body><p>{lq}</p></body></html>".encode(), None, None)
+              if lq_html_only else
+              ("https://lq.example/b.txt", ts, b"x", lq, None))
+    rows = [
+        ("https://hq.example/a.txt", ts, b"x",
+         "the research study and the analysis were published by the "
+         "university", None),
+        lq_row,
+        ("https://oov.example/c.txt", ts, b"x",
+         "zq vbnm mlkj qwert asdfg zxcvb", None),
+        ("https://null.example/d.txt", ts, b"\x00\x01", None, None),
+    ]
+    spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string",
+    ).write.mode("overwrite").parquet(path)
+
+
+def test_cli_model_quality_needs_label_program(spark, tmp_path, capsys):
+    """--pagerank and --gopher-funnel never run the label program, so a
+    --model-quality beside them is a usage error instead of being ignored."""
+    from linguistjs_spark.cli import main
+    from linguistjs_spark.operators.model_filter import (
+        build_demo_quality_model)
+
+    path, model = str(tmp_path / "pages"), str(tmp_path / "mq.bin")
+    _mq_pages(spark, path)
+    build_demo_quality_model(model)
+    for mode in ("--pagerank", "--gopher-funnel"):
+        assert main([path, "--model-quality", model, mode]) == 2
+        err = capsys.readouterr().err
+        assert err.startswith("error: --model-quality") and mode in err
+
+
+@pytest.mark.parametrize("extract_html", [False, True])
+def test_cli_model_quality_labels_every_row(spark, tmp_path, capsys,
+                                            extract_html):
+    """Under --model-quality, --output writes one label row per input row:
+    the model tier's drops are not-kept rows with their own keep_reason.
+    With --extract-html the html-only spam page is scored on its
+    extracted text."""
+    from linguistjs_spark.cli import main
+    from linguistjs_spark.operators.model_filter import (
+        build_demo_quality_model)
+
+    path, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    model = str(tmp_path / "mq.bin")
+    _mq_pages(spark, path, lq_html_only=extract_html)
+    build_demo_quality_model(model)
+    argv = [path, "--model-quality", model, "--output", out]
+    assert main(argv + ["--extract-html"] * extract_html) == 0
+    capsys.readouterr()
+
+    labels = spark.read.parquet(f"{out}/labels").collect()
+    assert sorted(r["url"] for r in labels) == sorted(
+        r["url"] for r in spark.read.parquet(path).collect())
+    assert {r["url"].split("/")[2]: (r["keep"], r["keep_reason"])
+            for r in labels} == {
+        "hq.example": (True, "classified"),
+        "lq.example": (False, "model-quality"),
+        "oov.example": (False, "model-quality-oov"),
+        "null.example": (False, "unreadable"),
+    }
 
 
 def test_cli_empty_or_missing_input(spark, tmp_path, capsys):
